@@ -43,123 +43,21 @@ def entry(spark: SparkSession) -> DataFrame:
 # changed block below: queries whose implementation or oracle changed this
 # round after their last driver check, so the driver re-confirms them.
 _CHANGED_THIS_ROUND: list[str] = [
-    # r14 OPTIMIZATION round: implementations restructured with results
-    # proven identical locally (OPTIMIZATION_r14.md; oracle sweeps at
-    # sf0.01/sf0.001 plus --hotkey/--conflict/--rowdup fixtures) — the
-    # driver should re-confirm them first.
-    #
-    # The six bucket-list dedup screens now drop over-cap buckets BEFORE
-    # the member-list aggregate (count-first broadcast-anti occupancy
-    # screen — the r13 verdict's §5 memory-bound item):
-    "q_dedup_near",
-    "q_dedup_simhash",
-    "q_dedup_embed",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_incremental",
-    "q_text_containment",
-    "q_dedup_cluster",  # consumes q_dedup_ngram_jaccard's pair set
-    # mode+median derived from one counts table (no second scan/join):
-    "q_agg_mode_median",
-    # per-term df as COUNT(*) over tf; n_docs off the un-spread scan:
-    "q_text_keywords",
-    "q_text_tfidf",
-    # r13 verdict item 3: rewritten in r13 but missed that round's
-    # 50-slot driver budget — still needs a driver row on the rewritten
-    # implementation (q_text_keywords above is the other one):
-    "q_agg_percentile_daily",
-]
-
-#: r13's changed-block, retired 2026-08-18 (all but the two steered
-#: above were driver-verified green in CORRECTNESS_r13; kept for the
-#: audit trail):
-_CHANGED_R13: list[str] = [
-    # r13: the thirteen formerly rows-only queries were promoted to
-    # driver-visible contracts (r12 verdict task 2) — every one now has
-    # a DuckDB oracle (286/286 oracled) and needs a driver hash row to
-    # replace its years of `err: no_oracle` entries. Four sketch
-    # aggregates emit exact columns + in-bound 0/1 flags; the embed
-    # family emits rank-aware invariant flags; bpe_apply emits the
-    # exactly-computable top-20 vocab + segmentation flags;
-    # stream_watermark became an append-mode bounded single-batch replay
-    # with a closed-form oracle; the four dedup/LSH screens became
-    # cross-engine EXACT (md5 hash families / literal-hyperplane
-    # sequential-fold dots) so their oracles mirror the full algorithms.
-    "q_agg_approx_distinct",
-    "q_agg_sketch_quantiles",
-    "q_agg_hll_union",
-    "q_agg_sketch_cms",
-    "q_embed_pca",
-    "q_embed_whiten",
-    "q_embed_kmeans",
-    "q_bpe_apply",
+    # The conversions now read back under the written schema (no inference
+    # job) and the per-file write lost its repartition:
+    "q_convert_json_parquet",
+    # The stateful streams' shard count is capped at defaultParallelism
+    # (same rows; fewer state-store shards on hosts with under 8 slots):
     "q_stream_watermark",
-    "q_sim_pairs_lsh",
-    "q_dedup_embed",
-    "q_dedup_near",
-    "q_dedup_simhash",
-    # r12 ADVICE follow-up: the q_stream_join sink dedup now counts and
-    # reports removals instead of silently absorbing them (same result
-    # set; re-confirm the contract row).
+    "q_stream_stateful",
+    "q_stream_enrich",
     "q_stream_join",
-    # r13 --tz sweep catch: the one oracle that used bare `ts` without
-    # the house CAST(ts AS TIMESTAMP) — renders tz-aware under the new
-    # axis's TIMESTAMPTZ union promotion.
-    "q_fn_timezone",
-    # With 14 changed entries, verify_order's stalest-first tier hands
-    # the REST of the driver's ~50-slot budget to the r4-era tier (31
-    # queries: the ML-dataset batch, composites q5/q7/q18, …) and the
-    # front of the r5 tier — judge r12 task 1.
-    #
-    # r13 --conflict axis (conflicting re-delivery: same primary id,
-    # drifted payload): 24 queries changed — decimal-midpoint VARCHAR
-    # routes, payload tiebreaks on formerly-total window sorts,
-    # deterministic per-key pick contracts, canonical doc-version
-    # resolution, block-local ER identity. All 286 re-matched on the
-    # conflict fixture and the driver fixtures after the fixes.
-    "q_agg_groupby",
-    "q_cdc_diff",
-    "q_dedup_incremental",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_cluster",
-    "q_er_pipeline",
-    "q_fn_url",
-    "q_join_asof",
-    "q_join_multiway",
-    "q_join_point_in_time",
-    "q_join_salted",
-    "q_rank_mrr",
-    "q_scd2_history",
-    "q_seq_markov",
-    "q_seq_paths",
-    "q_seq_transitions",
-    "q_stream_dedup",
-    "q_text_containment",
-    "q_text_decontaminate",
-    "q_text_fingerprint",
-    "q_win_analytic",
-    "q_win_ewma",
-    "q_win_frame_rows",
-    "q_win_moving_distinct",
-    "q_win_pattern",
-    "q_project_rename_cast",
-    "q_composite_q3",
-    "q_composite_q5",
-    "q_composite_q7",
-    # r13 OPTIMIZATION round: implementations restructured for plan
-    # shape (bucket-list in-row pair generation, single-array
-    # percentiles, norm² hoisting, n_docs without a third explode) with
-    # results proven identical locally (OPTIMIZATION_r13.md) — the
-    # driver should re-confirm them first. The dedup/LSH family members
-    # also rewritten this round are already listed above.
-    "q_pairs_copurchase",
-    "q_pairs_lift",
-    "q_graph_triangles",
-    "q_graph_bfs",
-    "q_knn_graph",
-    "q_sim_cosine_topk",
-    "q_agg_percentile_daily",
-    "q_text_keywords",
-    "q_agg_sketch_quantiles",
+    "q_stream_foreachbatch",
+    "q_stream_s3_events",
+    "q_stream_quality_gate",
+    # collect_set rewrite of the pair distinct, never driver-checked on the
+    # rewritten implementation:
+    "q_join_array_membership",
 ]
 
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))

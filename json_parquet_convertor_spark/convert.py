@@ -63,10 +63,11 @@ def json_to_parquet(
     raw = read_json(spark, src, schema=schema, multiline=True, drop_malformed=True)
     converted = person_to_parquet_df(raw) if schema is PERSON_JSON_SCHEMA else raw
     write_parquet(converted, dst, compression="snappy")
-    # read-back honors the partial-file policy (r12): our own
-    # write is commit-protocol-atomic, but a REUSED dst may carry
-    # foreign dirt (the reference's non-atomic loop leaves exactly that)
-    return read_parquet_policy(spark, dst)
+    # read-back honors the partial-file policy: our own write is
+    # commit-protocol-atomic, but a REUSED dst may carry foreign dirt (the
+    # reference's non-atomic loop leaves exactly that). It reads under the
+    # schema just written, so no footer-inference job runs.
+    return read_parquet_policy(spark, dst, schema=converted.schema)
 
 
 # The reference's sample inputs (sample_json/person{2,3,4}.json), embedded so
@@ -105,13 +106,18 @@ def json_to_parquet_per_file(
       input file is one write task, so a million files stream through the
       executor pool without driver memory growth.
 
-    Mechanics: tag rows with their source basename (``input_file_name``),
-    ``partitionBy`` that key so each input file's rows land in exactly one
-    leaf directory as exactly one part file (repartition by key first ⇒
-    one task per file), then promote each part file to ``<key>.parquet``
-    with per-file renames — pure metadata ops, same count of FS operations
-    as the reference's one S3 put per file. Returns the read-back frame
-    over the renamed single files."""
+    Mechanics: tag rows with their source basename (``input_file_name``)
+    and ``partitionBy`` that key, so each input file's rows land in exactly
+    one leaf directory. A ``multiLine`` JSON file is never split across
+    read tasks, so all of a file's rows sit in one task, and one task
+    writes one part file per key it holds: each leaf gets exactly one part
+    file with no shuffle, even when a task packs many small input files
+    (the ``assert`` below checks it on every call). Each part file is then
+    promoted to ``<key>.parquet`` with per-file renames — pure metadata
+    ops, same count of FS operations as the reference's one S3 put per
+    file. Returns the read-back frame over the renamed single files, read
+    under the written schema (no inference job, and an input set that is
+    all malformed reads back as an empty frame)."""
     import os
     import shutil
 
@@ -125,8 +131,7 @@ def json_to_parquet_per_file(
     )
     staging = dst.rstrip("/") + "__staging"
     (
-        keyed.repartition("_key")
-        .write.mode("overwrite")
+        keyed.write.mode("overwrite")
         .option("compression", "snappy")
         .partitionBy("_key")
         .parquet(staging)
@@ -147,7 +152,5 @@ def json_to_parquet_per_file(
             os.path.join(dst, f"{key}.parquet"),
         )
     shutil.rmtree(staging)
-    # read-back honors the partial-file policy (r12): our own
-    # write is commit-protocol-atomic, but a REUSED dst may carry
-    # foreign dirt (the reference's non-atomic loop leaves exactly that)
-    return read_parquet_policy(spark, dst)
+    # same read-back as json_to_parquet
+    return read_parquet_policy(spark, dst, schema=converted.schema)

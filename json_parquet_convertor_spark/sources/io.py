@@ -344,7 +344,9 @@ def quarantine_scan(path: str) -> tuple[list[str], dict[str, str]]:
     return good, bad
 
 
-def read_parquet_policy(spark: SparkSession, path: str) -> DataFrame:
+def read_parquet_policy(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
     """``spark.read.parquet`` honoring the partial-file policy.
 
     Default (strict): plain read — corrupt files fail loudly. With
@@ -354,12 +356,19 @@ def read_parquet_policy(spark: SparkSession, path: str) -> DataFrame:
     commit protocol never exposes partial files), so this matters for
     read-backs of REUSED destination directories that may carry foreign
     dirt — the reference's non-atomic loop can leave exactly that
-    (convertor/convertor.go:148-153)."""
+    (convertor/convertor.go:148-153).
+
+    ``schema``: read under this schema instead of inferring one from the
+    file footers. A caller reading back what it just wrote passes the
+    written frame's schema, which skips the inference job and reads an
+    empty output (every input dropped) as an empty frame rather than
+    failing with ``UNABLE_TO_INFER_SCHEMA``."""
     import os
 
+    reader = spark.read if schema is None else spark.read.schema(schema)
     if os.environ.get("JPC_FILE_POLICY") == "quarantine":
-        return spark.read.parquet(*_quarantine_sources(path))
-    return spark.read.parquet(path)
+        return reader.parquet(*_quarantine_sources(path))
+    return reader.parquet(path)
 
 
 def _quarantine_sources(path: str) -> list[str]:

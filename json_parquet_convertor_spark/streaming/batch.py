@@ -243,18 +243,24 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # Stateful streaming cost is dominated by per-shard state-store overhead
-# (init + snapshot + commit per micro-batch per shard), and the shard count
-# is fixed at the FIRST batch from spark.sql.shuffle.partitions. A few
-# thousand window/user keys need nowhere near 32 shards — measured at sf0.1,
-# 8 shards runs the watermark stream 4-7x faster than 32. On a real cluster
-# you size this to state volume (keys x bytes / executor memory), not to
-# core count; the batch queries are unaffected (conf is restored).
+# (load + snapshot + commit per micro-batch per shard), and the shard count
+# is fixed at the FIRST batch from spark.sql.shuffle.partitions. The count
+# is min(n, defaultParallelism): a few thousand window/user keys need
+# nowhere near 32 shards (at sf0.1, 8 shards ran the watermark stream 4-7x
+# faster than 32), and more shards than task slots run in several waves
+# per micro-batch, each shard paying its fixed cost. On 4 vCPUs with Spark
+# in local[3], capping 8 shards at 3 cut q_stream_watermark from 1.47 s to
+# 1.03 s per call (median of 12 runs; 20 tasks to 10); hosts with 8 or more
+# slots keep 8. On a real cluster you size this to state volume (keys x
+# bytes / executor memory); the batch queries are unaffected (the conf is
+# restored).
 _STREAM_STATE_PARTITIONS = 8
 
 
 @contextmanager
 def _stream_shuffle(spark: SparkSession, n: int = _STREAM_STATE_PARTITIONS):
     old = spark.conf.get("spark.sql.shuffle.partitions")
+    n = min(n, spark.sparkContext.defaultParallelism)
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield

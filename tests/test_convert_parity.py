@@ -12,6 +12,17 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType,
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
 from json_parquet_convertor_spark import convert
 from json_parquet_convertor_spark.sources.io import read_json
 
@@ -152,3 +163,106 @@ def test_per_file_output_layout_matches_reference_convention(spark, tmp_path):
         for r in back.select("id", "name", "nationality", "age").collect()
     }
     assert got == expected
+
+
+_CONVERSIONS = pytest.mark.parametrize(
+    "convert_fn",
+    [convert.json_to_parquet, convert.json_to_parquet_per_file],
+    ids=["bulk", "per_file"],
+)
+
+# what readers see in a converted file: the parquet tags' names, age as
+# TINYINT, and every field nullable (Spark marks file-source fields nullable)
+_PERSON_PARQUET_SCHEMA = StructType(
+    [
+        StructField("id", StringType(), True),
+        StructField("name", StringType(), True),
+        StructField("nationality", StringType(), True),
+        StructField("age", ByteType(), True),
+    ]
+)
+
+
+@_CONVERSIONS
+def test_all_malformed_input_converts_to_empty_frame(spark, tmp_path, convert_fn):
+    """Every record skipped → nothing to write. Both conversions return an
+    empty frame under the person schema instead of failing to infer a
+    schema from an output directory that holds no data file."""
+    src = str(tmp_path / "in")
+    _write(src, "bad.json", {"ID": "2", "name": "B", "nationality": "Y", "age": "not-a-number"})
+    back = convert_fn(spark, src, str(tmp_path / "out"))
+    assert back.schema == _PERSON_PARQUET_SCHEMA
+    assert back.collect() == []
+
+
+@_CONVERSIONS
+@pytest.mark.parametrize("caller_schema", [False, True], ids=["default", "caller"])
+def test_read_back_schema_equals_inferred(spark, tmp_path, convert_fn, caller_schema):
+    """The read-back is read under the written frame's schema, not inferred
+    from the footers; it must be exactly what inference would give —
+    names, types and nullability — for the default and a caller schema."""
+    src = str(tmp_path / "in")
+    dst = str(tmp_path / "out")
+    if caller_schema:
+        schema = StructType(
+            [
+                StructField("ID", StringType(), False),
+                StructField("age", LongType(), True),
+                StructField("score", DoubleType(), True),
+            ]
+        )
+        _write(src, "a.json", {"ID": "1", "age": 5, "score": 1.5, "extra": "x"})
+        expected = StructType([StructField(f.name, f.dataType, True) for f in schema])
+    else:
+        schema = None
+        _write(src, "a.json", {"ID": "1", "name": "A", "nationality": "X", "age": 7})
+        expected = _PERSON_PARQUET_SCHEMA
+    back = convert_fn(spark, src, dst, schema=schema)
+    assert back.schema == spark.read.parquet(dst).schema
+    assert back.schema == expected
+    assert back.count() == 1
+
+
+def test_per_file_layout_when_one_read_task_holds_many_files(spark, tmp_path):
+    """Many small inputs packed into one read task still give one
+    ``<basename>.parquet`` per valid input, each holding exactly its own
+    row: a task writes one part file per ``_key`` it holds."""
+    src = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    valid = {}
+    for i in range(40):
+        name = f"p{i:02d}.json"
+        if i % 10 == 3:  # type-mismatched: skipped, no output file
+            _write(src, name, {"ID": str(i), "age": "not-a-number"})
+            continue
+        _write(src, name, {"ID": str(i), "name": f"n{i}", "nationality": "X", "age": i})
+        valid[name] = (str(i), f"n{i}", "X", i)
+
+    # one read task for the whole input: no per-file open cost, and no
+    # floor on the number of splits
+    confs = {"spark.sql.files.openCostInBytes": "1", "spark.sql.files.minPartitionNum": "1"}
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        raw = read_json(spark, src, schema=convert.PERSON_JSON_SCHEMA)
+        assert raw.rdd.getNumPartitions() <= 2
+        convert.json_to_parquet_per_file(spark, src, out)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+    assert sorted(os.listdir(out)) == sorted(f"{n}.parquet" for n in valid)
+    got = {}
+    for r in (
+        spark.read.parquet(out)
+        .withColumn("file", F.regexp_extract(F.input_file_name(), r"([^/]+)$", 1))
+        .collect()
+    ):
+        got.setdefault(r["file"], []).append(
+            (r["id"], r["name"], r["nationality"], r["age"])
+        )
+    assert got == {f"{n}.parquet": [row] for n, row in valid.items()}

@@ -647,3 +647,20 @@ def test_quality_gate_null_quantity_routes_to_quarantine(spark, tmp_path):
     assert rows[("good", "N")] == (1, 10)
     assert rows[("good", "A")] == (1, 45)
     assert sum(n for n, _ in rows.values()) == 4  # nothing dropped
+
+
+def test_stream_shuffle_caps_state_shards_at_task_slots(spark):
+    """More state-store shards than task slots would run every micro-batch
+    in several waves; the shard count is capped at defaultParallelism and
+    the caller's shuffle-partition setting is restored on exit."""
+    from json_parquet_convertor_spark.streaming.batch import _stream_shuffle
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    slots = spark.sparkContext.defaultParallelism
+    with _stream_shuffle(spark, 64):
+        assert int(spark.conf.get(key)) == min(64, slots)
+    assert spark.conf.get(key) == before
+    with _stream_shuffle(spark, 1):
+        assert int(spark.conf.get(key)) == 1
+    assert spark.conf.get(key) == before
