@@ -102,14 +102,22 @@ def json_to_parquet_per_file(
       feed the queue, so every output re-triggers a conversion of itself
       (the ``.parquet.parquet`` loop its README warns about); here ``dst``
       is a separate prefix, which is the fix, not a semantics change;
-    - the reference holds one whole file in RAM per worker; here each
-      input file is one write task, so a million files stream through the
-      executor pool without driver memory growth.
+    - the reference holds one whole file in RAM per worker; here the
+      read tasks are the write tasks, each packing many small input files
+      and writing one part file per input file it holds, so a million
+      files stream through the executor pool without the driver holding
+      any row.
+
+    Input basenames must be unique: ``src`` may be a glob or hold
+    ``key=value`` partition directories, and two files of one name there
+    would both claim ``<name>.parquet``. That raises ``ValueError`` before
+    anything is written.
 
     Mechanics: tag rows with their source basename (``input_file_name``)
     and ``partitionBy`` that key, so each input file's rows land in exactly
     one leaf directory. A ``multiLine`` JSON file is never split across
-    read tasks, so all of a file's rows sit in one task, and one task
+    read tasks and no two files share a key, so all of a key's rows sit in
+    one task, and one task
     writes one part file per key it holds: each leaf gets exactly one part
     file with no shuffle, even when a task packs many small input files
     (the ``assert`` below checks it on every call). Each part file is then
@@ -120,11 +128,16 @@ def json_to_parquet_per_file(
     all malformed reads back as an empty frame)."""
     import os
     import shutil
+    from collections import Counter
 
     schema = schema or PERSON_JSON_SCHEMA
     raw = read_json(
         spark, src, schema=schema, multiline=True, drop_malformed=True
     )
+    names = Counter(p.rsplit("/", 1)[-1] for p in raw.inputFiles())
+    dup = sorted(n for n, c in names.items() if c > 1)
+    if dup:
+        raise ValueError(f"{src}: several input files share the basename(s) {dup}")
     converted = person_to_parquet_df(raw) if schema is PERSON_JSON_SCHEMA else raw
     keyed = converted.withColumn(
         "_key", F.regexp_extract(F.input_file_name(), r"([^/]+)$", 1)

@@ -345,9 +345,9 @@ def quarantine_scan(path: str) -> tuple[list[str], dict[str, str]]:
 
 
 def read_parquet_policy(
-    spark: SparkSession, path: str, schema: StructType | None = None
+    spark: SparkSession, path: str, schema: StructType
 ) -> DataFrame:
-    """``spark.read.parquet`` honoring the partial-file policy.
+    """``spark.read.schema(schema).parquet`` honoring the partial-file policy.
 
     Default (strict): plain read — corrupt files fail loudly. With
     ``JPC_FILE_POLICY=quarantine``: probe visible files, read the intact
@@ -358,14 +358,12 @@ def read_parquet_policy(
     dirt — the reference's non-atomic loop can leave exactly that
     (convertor/convertor.go:148-153).
 
-    ``schema``: read under this schema instead of inferring one from the
-    file footers. A caller reading back what it just wrote passes the
-    written frame's schema, which skips the inference job and reads an
-    empty output (every input dropped) as an empty frame rather than
-    failing with ``UNABLE_TO_INFER_SCHEMA``."""
+    Callers read back what they just wrote and pass the written schema: no
+    footer-inference job runs, and an empty output reads as an empty frame
+    rather than failing with ``UNABLE_TO_INFER_SCHEMA``."""
     import os
 
-    reader = spark.read if schema is None else spark.read.schema(schema)
+    reader = spark.read.schema(schema)
     if os.environ.get("JPC_FILE_POLICY") == "quarantine":
         return reader.parquet(*_quarantine_sources(path))
     return reader.parquet(path)

@@ -266,3 +266,23 @@ def test_per_file_layout_when_one_read_task_holds_many_files(spark, tmp_path):
             (r["id"], r["name"], r["nationality"], r["age"])
         )
     assert got == {f"{n}.parquet": [row] for n, row in valid.items()}
+
+
+def test_per_file_rejects_duplicate_basenames_before_writing(spark, tmp_path):
+    """``src`` with ``key=value`` subdirectories is read recursively, so two
+    inputs can share a basename. Both would claim one ``<name>.parquet``:
+    the conversion refuses before writing, leaving neither ``dst`` nor its
+    staging directory behind. Distinct basenames in the same layout convert
+    to one file each."""
+    src = str(tmp_path / "in")
+    for part, i in (("d=1", 1), ("d=2", 2)):
+        _write(os.path.join(src, part), "p.json", {"ID": str(i), "name": "A", "nationality": "X", "age": i})
+    dst = str(tmp_path / "out")
+    with pytest.raises(ValueError, match="p.json"):
+        convert.json_to_parquet_per_file(spark, src, dst)
+    assert sorted(os.listdir(tmp_path)) == ["in"]
+
+    os.rename(os.path.join(src, "d=2", "p.json"), os.path.join(src, "d=2", "q.json"))
+    back = convert.json_to_parquet_per_file(spark, src, dst)
+    assert sorted(os.listdir(dst)) == ["p.json.parquet", "q.json.parquet"]
+    assert sorted(r["id"] for r in back.collect()) == ["1", "2"]
