@@ -58,6 +58,20 @@ _CHANGED_THIS_ROUND: list[str] = [
     # collect_set rewrite of the pair distinct, never driver-checked on the
     # rewritten implementation:
     "q_join_array_membership",
+    # Candidate generation moved onto operators/buckets (same plans; the
+    # NULL-member guards folded into collect_list's own NULL skip):
+    "q_dedup_near",
+    "q_dedup_simhash",
+    "q_dedup_ngram_jaccard",
+    "q_dedup_embed",
+    "q_text_containment",
+    "q_dedup_incremental",
+    "q_graph_bfs",
+    "q_pairs_copurchase",
+    "q_graph_triangles",
+    "q_pairs_lift",
+    # df is a distinct document count again:
+    "q_text_keywords",
 ]
 
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from json_parquet_convertor_spark.exact import fday, fsec
+from json_parquet_convertor_spark.operators.buckets import basket_pairs
 from json_parquet_convertor_spark.registry import query
 from json_parquet_convertor_spark.sources.io import load_table, spread
 
@@ -660,55 +661,18 @@ def q_skew_diagnose(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_pairs_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise co-occurrence mining (market-basket / co-citation shape):
-    parts ordered together in ≥2 orders, via a within-basket self-join.
-    The a.part < b.part predicate keeps each unordered pair once.
+    parts ordered together in ≥2 orders, each unordered pair once
+    (part_a < part_b), via operators/buckets.basket_pairs.
 
-    Scale design: the self-join is an equi-join on the basket key, so
-    pairs are only ever generated WITHIN one basket's partition — cost is
+    Scale design: pairs are only ever generated WITHIN one basket (one
+    aggregate on the order key, then in-row emission) — cost is
     Σ k²/2 over basket sizes, not |table|². TPC-H baskets are ≤ 7 lines;
     a real pipeline guards unbounded baskets by capping k (sample or
     truncate per basket) before the pair explosion — same hot-key guard
     as q_dedup_ngram_jaccard's stop-shingle df cap. The pair-count
     aggregate combines map-side, and the HAVING floor prunes the long
     tail before anything downstream consumes it."""
-    # r13 optimization (guide §2.4 remove shuffles): the basket self-join
-    # needed a distinct (1 exchange) + two join-side exchanges + the pair
-    # aggregate exchange. Collapsing each basket to its sorted distinct
-    # part set FIRST (collect_set combines map-side, one exchange on the
-    # basket key) lets the pairs be generated IN-ROW from the array —
-    # identical pair set (i<j over a sorted set ≡ the a.pk < b.pk join;
-    # collect_set drops NULL parts exactly as the < predicate did, and
-    # NULL order keys join to nothing, hence the explicit filter), then
-    # one exchange for the pair counts. 4 exchanges + join → 2 exchanges.
-    # The in-row slice() is bounded by basket size (≤7 on TPC-H shapes;
-    # the documented cap-k guard below still applies at adversarial k).
-    baskets = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .filter(F.col("l_orderkey").isNotNull())
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-    )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                "ps",
-                lambda x, i: F.transform(
-                    F.slice("ps", i + F.lit(2), F.size("ps")),
-                    lambda y: F.struct(x.alias("a"), y.alias("b")),
-                ),
-            )
-        )
-    )
-    return (
-        baskets.select(pair.alias("p"))
-        .groupBy(
-            F.col("p.a").alias("part_a"),
-            F.col("p.b").alias("part_b"),
-        )
-        .agg(F.count("*").alias("n_orders"))
-        .filter(F.col("n_orders") >= 2)
-    )
+    return basket_pairs(load_table(spark, sf_dir, "lineitem"), 2)
 
 
 # ---------------------------------------------------------------------------
@@ -760,40 +724,12 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     and triangle counts grow with edge density, not input rows — the
     work is output-bound, which no plan can beat; the degree-orientation
     above is what keeps the constant factor linear in Σ(wedges)."""
-    # r13 optimization (guide §2.4): edge generation shares
-    # q_pairs_copurchase's in-basket rewrite — collect_set + in-row
-    # sorted-pair explode instead of the distinct + basket self-join
-    # (identical edge set; NULL keys drop on both shapes)
-    baskets = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .filter(F.col("l_orderkey").isNotNull())
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-    )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                "ps",
-                lambda x, i: F.transform(
-                    F.slice("ps", i + F.lit(2), F.size("ps")),
-                    lambda y: F.struct(x.alias("a"), y.alias("b")),
-                ),
-            )
-        )
-    )
     e = (
-        baskets.select(pair.alias("p"))
-        .groupBy(
-            F.col("p.a").alias("pa"),
-            F.col("p.b").alias("pb"),
-        )
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("pa", "pb")
+        basket_pairs(load_table(spark, sf_dir, "lineitem"), 2)
+        .select(F.col("part_a").alias("pa"), F.col("part_b").alias("pb"))
         # the edge set feeds FOUR consumers (vertex count, edge count,
         # e1/e2/e3 of the triangle join); without a cache each consumer
-        # re-runs the distinct + basket self-join — ~4x the query's cost
+        # re-runs the basket aggregate and pair count — ~4x the query's cost
         # (at cluster scale this is a stage table)
         .cache()
     )
@@ -1096,7 +1032,7 @@ def q_pairs_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     probabilities reduce to exact integer count ratios, so both engines
     derive identical doubles.
 
-    Scale design: same basket self-join as the pair miner (bounded by
+    Scale design: same in-basket pair count as the pair miner (bounded by
     per-order basket size); the per-part support table is joined back
     by SHUFFLE, not broadcast — |parts| grows with the data (1e8+ rows
     at 100 TB would OOM a broadcast build side), and the pair table is
@@ -1112,36 +1048,12 @@ def q_pairs_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = li.agg(F.countDistinct("l_orderkey").alias("n_orders"))
     supp = li.groupBy("l_partkey").agg(F.count("*").alias("s"))
-    # r13 optimization (guide §2.4): same in-basket pair generation as
-    # q_pairs_copurchase — the basket self-join becomes one collect_set
-    # aggregate + an in-row sorted-pair explode, identical pair counts
-    # (supp/n stay on the full distinct table, which still counts
-    # NULL-order rows exactly as the oracle's GROUP BY does)
-    baskets = (
-        li.filter(F.col("l_orderkey").isNotNull())
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-    )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                "ps",
-                lambda x, i: F.transform(
-                    F.slice("ps", i + F.lit(2), F.size("ps")),
-                    lambda y: F.struct(x.alias("a"), y.alias("b")),
-                ),
-            )
-        )
-    )
-    pairs = (
-        baskets.select(pair.alias("p"))
-        .groupBy(
-            F.col("p.a").alias("part_a"),
-            F.col("p.b").alias("part_b"),
-        )
-        .agg(F.count("*").alias("ab"))
-        .filter(F.col("ab") >= 3)
-    )
+    # supp/n stay on the full distinct table, which still counts
+    # NULL-order rows exactly as the oracle's GROUP BY does
+    pairs = basket_pairs(li, 3)
+    # both frames name a column n_orders: the pair's order count (ab)
+    # and the corpus order count
+    ab, n_orders = pairs["n_orders"], n["n_orders"]
     sa = supp.select(
         F.col("l_partkey").alias("part_a"), F.col("s").alias("sa")
     )
@@ -1155,14 +1067,10 @@ def q_pairs_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "part_a",
             "part_b",
-            "ab",
-            F.round(F.col("ab").cast("double") / F.col("sa"), 4).alias(
-                "confidence"
-            ),
+            ab.alias("ab"),
+            F.round(ab.cast("double") / F.col("sa"), 4).alias("confidence"),
             F.round(
-                F.col("ab").cast("double")
-                * F.col("n_orders")
-                / (F.col("sa") * F.col("sb")),
+                ab.cast("double") * n_orders / (F.col("sa") * F.col("sb")),
                 4,
             ).alias("lift"),
         )

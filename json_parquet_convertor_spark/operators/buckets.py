@@ -1,0 +1,143 @@
+"""Bucket-pair candidate generation for the LSH dedup and pair-mining queries.
+
+Near-duplicate search (MinHash bands, SimHash chunks, hyperplane tables,
+the inverted shingle index) and basket mining share one algorithm: rows
+meet only inside a bucket key, never in an all-pairs crossJoin.
+
+- One aggregate on the bucket key collapses each bucket to its sorted
+  member list, and pairs are emitted in-row: ``i < j`` over the sorted
+  list is exactly the ``a.m < b.m`` bucket self-join. ``collect_list``
+  skips NULL members as the ``<`` predicate does. That costs one
+  exchange on the bucket key, where a bucket self-join plus a pair
+  distinct costs 4-5 per query.
+- Over-dense buckets are excluded from pair emission on both sides: the
+  oracles keep ``HAVING COUNT(*) <= cap``, and the Spark side filters on
+  the same row count, which counts NULL members too. A boilerplate clique
+  (the ``--hotkey`` axis: half the corpus near-identical) lands in one
+  bucket and makes emission itself quadratic; the clique belongs to the
+  clustering path (``q_dedup_cluster``), not all-pairs emission. The cap
+  bounds in-row emission at ``cap² / 2`` pairs per bucket.
+- Over-cap buckets are screened out before the list aggregate
+  (:func:`_screen_hot_buckets`): a collect buffer cannot spill mid-group,
+  so filtering after the list is built would still materialize the
+  clique's full member array in one task.
+- Baskets (:func:`basket_pairs`) have no cap: TPC-H orders hold at most 7
+  lines. A pipeline with unbounded baskets caps k before the explode,
+  the same guard as the stop-shingle cap.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
+#: Members allowed in one LSH bucket (MinHash band, SimHash chunk,
+#: hyperplane table); larger buckets are boilerplate cliques.
+LSH_BUCKET_CAP = 200
+
+#: Document frequency above which a shingle is a stop shingle and leaves
+#: the inverted index's pair emission (sizes still count it). True
+#: near-duplicates share plenty of rare shingles, so recall holds.
+STOP_SHINGLE_DF = 100
+
+
+def _screen_hot_buckets(
+    keyed: DataFrame, key_cols: list[str], cap: int
+) -> DataFrame:
+    """Drop every row of a bucket holding more than ``cap`` rows.
+
+    A COUNT aggregate (fixed-size buffers, map-side partials: a hot key's
+    rows reduce to one partial per map task) finds the over-cap keys, a
+    set that only boilerplate cliques enter, and a broadcast LEFT ANTI
+    join drops their rows map-side, so the hot bucket's members never
+    shuffle into the list aggregate. Null-safe equality keeps a NULL-keyed
+    over-cap bucket covered (a plain ``=`` anti join would pass NULL keys
+    through to the collect)."""
+    over = (
+        keyed.groupBy(*key_cols)
+        .agg(F.count(F.lit(1)).alias("__occ"))
+        .filter(F.col("__occ") > cap)
+        .select(
+            *[F.col(c).alias(f"__hot{i}") for i, c in enumerate(key_cols)]
+        )
+    )
+    cond = None
+    for i, c in enumerate(key_cols):
+        eq = keyed[c].eqNullSafe(F.col(f"__hot{i}"))
+        cond = eq if cond is None else cond & eq
+    return keyed.join(F.broadcast(over), cond, "left_anti")
+
+
+def bucket_lists(
+    keyed: DataFrame,
+    key_cols: list[str],
+    cap: int,
+    lists: dict[str, Column],
+    sort: bool = True,
+) -> DataFrame:
+    """One row per bucket of at most ``cap`` rows: the key columns plus,
+    for each ``lists`` entry, the ``collect_list`` of that member
+    expression (NULLs skipped), sorted when ``sort`` is set. Over-cap
+    buckets are screened out first; the ``cnt <= cap`` filter that
+    mirrors the oracle is then a no-op kept as the stated rule."""
+    def collect(c: Column) -> Column:
+        return F.array_sort(F.collect_list(c)) if sort else F.collect_list(c)
+
+    return (
+        _screen_hot_buckets(keyed, key_cols, cap)
+        .groupBy(*key_cols)
+        .agg(
+            *[collect(c).alias(name) for name, c in lists.items()],
+            F.count(F.lit(1)).alias("cnt"),
+        )
+        .filter(F.col("cnt") <= cap)
+        .drop("cnt")
+    )
+
+
+def bucket_members(
+    keyed: DataFrame, key_cols: list[str], member: str, cap: int
+) -> DataFrame:
+    """The key columns plus ``members``, the sorted non-NULL ``member``
+    values of each bucket of at most ``cap`` rows."""
+    return bucket_lists(keyed, key_cols, cap, {"members": F.col(member)})
+
+
+def sorted_pairs(arr: str) -> Column:
+    """Explode array column ``arr`` into one ``struct(a, b)`` per element
+    pair with ``a`` before ``b``: on a sorted list, every ``a < b`` pair
+    (and ``a == b`` pairs of repeated members)."""
+    return F.explode(
+        F.flatten(
+            F.transform(
+                arr,
+                lambda x, i: F.transform(
+                    F.slice(arr, i + F.lit(2), F.size(arr)),
+                    lambda y: F.struct(x.alias("a"), y.alias("b")),
+                ),
+            )
+        )
+    )
+
+
+def basket_pairs(li: DataFrame, min_orders: int) -> DataFrame:
+    """``(part_a, part_b, n_orders)``: part pairs ``part_a < part_b`` that
+    share at least ``min_orders`` orders of lineitem frame ``li``.
+
+    Each order collapses to its sorted distinct part set (``collect_set``
+    combines map-side, one exchange on the order key) and pairs come out
+    in-row, then one exchange counts them: the ``l_orderkey`` self-join's
+    pair set, since ``collect_set`` drops NULL parts as ``<`` does and
+    NULL order keys, which join to nothing, are filtered out."""
+    baskets = (
+        li.select("l_orderkey", "l_partkey")
+        .filter(F.col("l_orderkey").isNotNull())
+        .groupBy("l_orderkey")
+        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
+    )
+    return (
+        baskets.select(sorted_pairs("ps").alias("p"))
+        .groupBy(F.col("p.a").alias("part_a"), F.col("p.b").alias("part_b"))
+        .agg(F.count("*").alias("n_orders"))
+        .filter(F.col("n_orders") >= min_orders)
+    )

@@ -218,9 +218,11 @@ def q_agg_mode_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     (both midpoints of int32 values are exact in double, so the bits
     match F.median and DuckDB's median). The mode falls out of the same
     final aggregate as max(struct(cnt, −qty)) — ties break to the
-    smallest qty, NULL ordering identical to the old row_number sort
-    (struct comparison puts a NULL field smallest, as the window's
-    NULLS-FIRST asc did). One scan, two exchanges, zero joins, zero
+    smallest qty, and a NULL qty loses every tie because struct
+    comparison orders a NULL field lowest: the oracle's ORDER BY cnt
+    DESC, qty (NULLS LAST) order. The old row_number sort ran Spark's
+    NULLS-FIRST asc on qty, so a NULL qty won its ties and did not match
+    the oracle. One scan, two exchanges, zero joins, zero
     windows-over-values (the cumulative window runs over
     value-CARDINALITY rows, not data rows).
     """

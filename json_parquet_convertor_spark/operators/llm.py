@@ -19,6 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from json_parquet_convertor_spark.operators.buckets import (
+    LSH_BUCKET_CAP,
+    bucket_members,
+    sorted_pairs,
+)
 from json_parquet_convertor_spark.registry import query
 from json_parquet_convertor_spark.sources.io import load_table, spread
 
@@ -127,45 +132,6 @@ def _minhash_signatures(docs: DataFrame) -> DataFrame:
     )
 
 
-def _screen_hot_buckets(
-    keyed: DataFrame, key_cols: list[str], cap: int
-) -> DataFrame:
-    """Drop every row of an over-cap bucket BEFORE the member-list
-    aggregate materializes it (r14 optimization, guide §5 + §2.5).
-
-    The r13 bucket-list rewrite applied the hot-bucket cap as a filter on
-    ``cnt <= cap`` AFTER ``collect_list`` had built the bucket's full
-    member array in one aggregation buffer — collect buffers cannot spill
-    mid-group, so a corpus-sized boilerplate clique (the --hotkey axis) is
-    a single-task OOM vector at 100 TB even though its pairs are then
-    discarded. This pre-screen restores the r12 occupancy guard with the
-    cheap polarity: a COUNT aggregate (fixed-size buffers, map-side
-    partials — a hot key's rows reduce to one partial per map task) finds
-    the over-cap KEYS, a set that is tiny by construction (only
-    boilerplate cliques exceed the cap), and a broadcast LEFT ANTI join
-    drops their rows map-side — the hot bucket's members never even
-    shuffle into the list aggregate. Null-safe equality keeps a
-    hypothetical NULL-keyed over-cap bucket covered (a plain ``=`` anti
-    join would pass NULL keys through to the collect).
-
-    Result-identical by construction: the downstream ``cnt <= cap``
-    filter removed exactly these buckets' rows; it stays in place as the
-    oracle-mirroring belt and braces (it is a no-op after the screen)."""
-    over = (
-        keyed.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("__occ"))
-        .filter(F.col("__occ") > cap)
-        .select(
-            *[F.col(c).alias(f"__hot{i}") for i, c in enumerate(key_cols)]
-        )
-    )
-    cond = None
-    for i, c in enumerate(key_cols):
-        eq = keyed[c].eqNullSafe(F.col(f"__hot{i}"))
-        cond = eq if cond is None else cond & eq
-    return keyed.join(F.broadcast(over), cond, "left_anti")
-
-
 # the identical shingle → md5-minhash → band pipeline, as DuckDB SQL
 # (mirrors _minhash_signatures + q_dedup_near's banding exactly; the
 # bound-tokens subquery shape follows pipeline._DUCK_TOKENIZED — the
@@ -179,19 +145,10 @@ _DN_BAND_KEYS = ",\n           ".join(
     " || ".join(f"h{b * _MH_R + r}" for r in range(_MH_R)) + f" AS k{b}"
     for b in range(_MH_B)
 )
-#: hot-bucket cap (r13 sf1.0 --hotkey catch, same policy as
-#: pipeline._DE_BUCKET_CAP): a boilerplate clique (50% near-identical
-#: docs) collides into ONE band bucket and makes pair emission itself
-#: O(clique²) — over-dense buckets are excluded from pairwise
-#: generation on BOTH sides (the q_dedup_ngram_jaccard df≤100
-#: stop-shingle precedent applied to LSH bands; cliques belong to the
-#: clustering/canonical-assignment path, not all-pairs emission)
-_MH_BUCKET_CAP = 200
-
 _DN_OCC_SQL = ",\n".join(
     f"""    occ{b} AS (
         SELECT k{b} AS k FROM bands GROUP BY 1
-        HAVING COUNT(*) <= {_MH_BUCKET_CAP}
+        HAVING COUNT(*) <= {LSH_BUCKET_CAP}
     )"""
     for b in range(_MH_B)
 )
@@ -254,17 +211,17 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate rule, and the k/16 dyadic-rational estimates, which round
     exactly) and the driver records a full value-hash row.
 
-    Candidates form ONLY inside (band_idx, band_hash) equi-join buckets —
-    never an all-pairs crossJoin — so the cost is linear in bucket
-    occupancy. At 100 TB this is the standard web-scale dedup layout:
-    signatures are one linear shuffle, the band join shuffles 16 bytes per
-    (doc, band), and AQE handles hot buckets (near-identical boilerplate)
-    via skew-join splitting. Estimated Jaccard = fraction of matching
-    signature components; pairs below 0.5 are dropped."""
+    Candidates form ONLY inside (band_idx, band_hash) buckets — never an
+    all-pairs crossJoin — so the cost is linear in bucket occupancy
+    (see operators/buckets.py; buckets over LSH_BUCKET_CAP members are
+    boilerplate and emit no pairs, on both sides). At 100 TB this is the
+    standard web-scale dedup layout: signatures are one linear shuffle and
+    the bucket aggregate shuffles 16 bytes per (doc, band). Estimated
+    Jaccard = fraction of matching signature components; pairs below 0.5
+    are dropped."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # three consumers since the r13 join-back rewrite: the band explode
-    # plus both per-pair signature join-backs (the band self-join and
-    # its double signature evaluation are gone)
+    # three consumers: the band explode and both per-pair signature
+    # join-backs
     sigv = _minhash_signatures(docs).select(
         "doc_id",
         F.array(*[F.col(f"h{i}") for i in range(_MH_K)]).alias("sig"),
@@ -286,54 +243,18 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("band_idx", "band_hash"),
     )
-    # r13 optimization (guide §2.4 remove shuffles): candidate generation
-    # was [occupancy count → broadcast semi-join → band self-join →
-    # dropDuplicates]; one groupBy collapses each (band_idx, band_hash)
-    # bucket to its sorted doc_id list and pairs are emitted IN-ROW —
-    # identical candidate set (i<j over the sorted list ≡ the a.doc_id <
-    # b.doc_id join; the when() guard drops NULL doc_ids exactly as the
-    # < predicate did, while cnt still counts every row, mirroring the
-    # oracle's HAVING COUNT(*) hot-bucket cap _MH_BUCKET_CAP). The lists
-    # hold ONLY doc_ids — the 16-digest signatures join back per deduped
-    # pair from the cached signature table instead of riding (and being
-    # struct-sorted inside) every bucket list; in-row emission bounded
-    # by the cap (≤ cap²/2 pairs per bucket). r14: over-cap buckets are
-    # screened out BEFORE the list aggregate (see _screen_hot_buckets) so
-    # a boilerplate clique never materializes one giant member array.
-    bands = _screen_hot_buckets(
-        bands, ["band_idx", "band_hash"], _MH_BUCKET_CAP
-    )
-    buckets = (
-        bands.groupBy("band_idx", "band_hash")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.when(F.col("doc_id").isNotNull(), F.col("doc_id"))
-                )
-            ).alias("ds"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-        .filter(F.col("cnt") <= _MH_BUCKET_CAP)
-    )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                "ds",
-                lambda x, i: F.transform(
-                    F.slice("ds", i + F.lit(2), F.size("ds")),
-                    lambda y: F.struct(x.alias("a"), y.alias("b")),
-                ),
-            )
-        )
-    )
     sa = sigv.select(
         F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a")
     )
     sb = sigv.select(
         F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b")
     )
+    # the lists hold only doc_ids; signatures join back per deduped pair
     cand = (
-        buckets.select(pair.alias("p"))
+        bucket_members(
+            bands, ["band_idx", "band_hash"], "doc_id", LSH_BUCKET_CAP
+        )
+        .select(sorted_pairs("members").alias("p"))
         .select(
             F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b")
         )
@@ -1050,15 +971,12 @@ def q_text_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = terms.groupBy("doc_id", "term", "doc_len").agg(
         F.count(F.lit(1)).alias("tf")
     )
-    # r14 optimization (guide §2.3): the oracle's COUNT(DISTINCT doc_id)
-    # per term runs over tf, whose grouping key already CONTAINS doc_id —
-    # every (term, doc_id) appears exactly once (doc_len is functionally
-    # determined by doc_id), so the distinct count is a plain COUNT(*).
-    # Spark planned the countDistinct as a second keyed de-dup aggregate
-    # with its own exchange; the count drops that whole phase, value-
-    # identical (the q_text_tfidf df derivation, now shared).
+    # df must be a DISTINCT count, as in the oracle: a doc_id carrying two
+    # texts of different token counts (a conflicting re-delivery) puts two
+    # (doc_id, term) rows into tf, one per doc_len, and a NULL doc_id is
+    # no document
     df = tf.groupBy("term").agg(
-        F.count("*").cast("bigint").alias("df")
+        F.countDistinct("doc_id").cast("bigint").alias("df")
     )
     # r13 optimization (guide §1.2 don't compute what you throw away):
     # n_docs counted distinct doc_ids over the EXPLODED terms — a third

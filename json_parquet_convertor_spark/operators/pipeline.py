@@ -14,10 +14,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from json_parquet_convertor_spark.operators.llm import (
-    _dot,
-    _screen_hot_buckets,
+from json_parquet_convertor_spark.operators.buckets import (
+    LSH_BUCKET_CAP,
+    STOP_SHINGLE_DF,
+    basket_pairs,
+    bucket_lists,
+    bucket_members,
+    sorted_pairs,
 )
+from json_parquet_convertor_spark.operators.llm import _dot
 from json_parquet_convertor_spark.registry import query
 from json_parquet_convertor_spark.sources.io import load_table, spread
 
@@ -102,17 +107,10 @@ _SH_CHUNK_LIST = "[" + ", ".join(
     + ")"
     for c in range(8)
 ) + "]"
-#: hot-bucket cap — same policy and rationale as _DE_BUCKET_CAP: a
-#: boilerplate clique (--hotkey: 50% near-identical docs) lands in ONE
-#: chunk bucket and makes pair emission O(clique²); over-dense buckets
-#: are boilerplate-class and excluded from pairwise generation (the
-#: clique belongs to q_dedup_cluster / exact dedup, not all-pairs)
-_SH_BUCKET_CAP = 200
-
 _SH_OCC_SQL = ",\n".join(
     f"""    occ{c} AS (
         SELECT ch[{c + 1}] AS k FROM chunks GROUP BY 1
-        HAVING COUNT(*) <= {_SH_BUCKET_CAP}
+        HAVING COUNT(*) <= {LSH_BUCKET_CAP}
     )"""
     for c in range(8)
 )
@@ -171,7 +169,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     at least one full chunk, so no qualifying pair can be missed
     (tests/test_pipeline.py asserts this against a brute-force
     recomputation over the same fingerprints). Exactness holds WITHIN
-    the hot-bucket cap (r13): buckets with > _SH_BUCKET_CAP members are
+    the hot-bucket cap: buckets with > LSH_BUCKET_CAP members are
     a boilerplate clique whose all-pairs emission is quadratic by
     construction — they are excluded from pairwise generation on both
     sides and belong to the clustering/canonical path instead.
@@ -183,61 +181,25 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver records a full value-hash row.
 
     100 TB: the fingerprint pass is linear in tokens with map-side
-    combine (per-doc partials shuffle, never tokens); the band join
-    shuffles (doc_id, 8-bit chunk) only."""
+    combine (per-doc partials shuffle, never tokens); the bucket
+    aggregate shuffles (doc_id, 8-bit chunk) only."""
     docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id", "text")
-    # three consumers since the r13 join-back rewrite: the chunk explode
-    # plus both per-pair fingerprint join-backs
+    # three consumers: the chunk explode and both per-pair fingerprint
+    # join-backs
     fps = _simhash_chunks(docs).cache()
 
     chunks = fps.select(
         "doc_id",
         F.posexplode("ch").alias("chunk_idx", "chunk"),
     )
-    # r13 optimization (guide §2.4 remove shuffles): candidate generation
-    # was [occupancy count → broadcast semi-join → chunk self-join →
-    # dropDuplicates]; one groupBy collapses each (chunk_idx, chunk)
-    # bucket to its sorted doc_id list and pairs are emitted IN-ROW —
-    # identical candidate set (i<j over the sorted list ≡ the a.doc_id <
-    # b.doc_id join; the when() guard drops NULL doc_ids exactly as the
-    # < predicate did, while cnt counts every row, mirroring the
-    # oracle's HAVING COUNT(*) cap _SH_BUCKET_CAP, so the pigeonhole
-    # exactness guarantee still holds WITHIN capped buckets). The lists
-    # hold ONLY doc_ids — sorting structs that carry the ch arrays
-    # measured slower than joining the tiny fingerprint table back per
-    # deduped pair (interleaved A/B: old self-join 6.18 s, struct lists
-    # 5.93 s, this shape 5.22 s at sf0.1). ≤ cap²/2 in-row pairs/bucket.
-    # r14: over-cap buckets are screened out BEFORE the list aggregate
-    # (llm._screen_hot_buckets) so a boilerplate clique never
-    # materializes one giant member array in an aggregation buffer.
-    chunks = _screen_hot_buckets(
-        chunks, ["chunk_idx", "chunk"], _SH_BUCKET_CAP
-    )
-    buckets = (
-        chunks.groupBy("chunk_idx", "chunk")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.when(F.col("doc_id").isNotNull(), F.col("doc_id"))
-                )
-            ).alias("ds"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-        .filter(F.col("cnt") <= _SH_BUCKET_CAP)
-    )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                "ds",
-                lambda x, i: F.transform(
-                    F.slice("ds", i + F.lit(2), F.size("ds")),
-                    lambda y: F.struct(x.alias("a"), y.alias("b")),
-                ),
-            )
-        )
-    )
+    # the lists hold only doc_ids: sorting structs that carry the ch
+    # arrays measured slower than joining the fingerprints back per
+    # deduped pair (5.93 s vs 5.22 s at sf0.1)
     cand = (
-        buckets.select(pair.alias("p"))
+        bucket_members(
+            chunks, ["chunk_idx", "chunk"], "doc_id", LSH_BUCKET_CAP
+        )
+        .select(sorted_pairs("members").alias("p"))
         .select(
             F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b")
         )
@@ -345,7 +307,7 @@ _DUCK_JACCARD_PAIRS = f"""
     ),
     rare AS (
         SELECT sh FROM (SELECT sh, COUNT(*) AS df FROM sh GROUP BY sh)
-        WHERE df <= 100
+        WHERE df <= {STOP_SHINGLE_DF}
     ),
     pruned AS (SELECT doc_id, sh.sh FROM sh JOIN rare USING (sh)),
     sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id),
@@ -366,24 +328,23 @@ _DUCK_JACCARD_PAIRS = f"""
 @query("q_dedup_ngram_jaccard", oracle=_DUCK_JACCARD_PAIRS)
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT n-gram Jaccard pairs via an inverted shingle index: pairs form
-    only where a shared shingle exists (equi-join on the shingle), then
+    only where a shared shingle exists (inside the shingle's bucket), then
     |A∩B| / (|A|+|B|-|A∩B|) >= 0.3. The complement to q_dedup_near: exact
     instead of estimated, still never an all-pairs crossJoin.
 
-    Hot-key guard for scale: shingles appearing in > 100 docs (boilerplate)
-    are dropped from the index before the self-join — the standard
-    stop-shingle pruning that keeps bucket occupancy bounded; true
-    near-dup pairs share plenty of rare shingles so recall is unaffected.
+    Hot-key guard for scale: shingles appearing in > STOP_SHINGLE_DF docs
+    emit no pairs (operators/buckets.py) — the standard stop-shingle
+    pruning that keeps bucket occupancy bounded; true near-dup pairs
+    share plenty of rare shingles so recall is unaffected.
     Intersection counts are taken on the pruned shingles, identically on
     both sides, hence oracle-stable.
 
     Perf shape: the index carries xxhash64(shingle) longs, not the ~20-char
     strings — smaller cache, cheaper shuffles, cheaper join compares; the
     oracle keeps string shingles (counts diverge only on a 64-bit hash
-    collision, ~2^-64 per shingle pair). Document frequency is a window
-    count fused onto the same pass, and the cached (doc, shingle-hash, df)
-    table (a parquet stage table at 100 TB) feeds sizes, the prune, and
-    both self-join sides.
+    collision, ~2^-64 per shingle pair). The cached (doc, shingle-hash)
+    index (a parquet stage table at 100 TB) feeds both the sizes and the
+    bucket aggregate.
 
     Ingest guard (--rowdup): the shingle index is a SET per document, so
     at-least-once re-delivered rows (exact copies incl. the doc_id) are
@@ -424,49 +385,13 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sh"),
         )
     )
-    # r13 optimization (guide §2.4 remove shuffles): the inverted index
-    # was [window df count (exchange+sort) → cache → shingle self-join →
-    # pair aggregate]; one groupBy collapses each shingle bucket to its
-    # sorted doc list — df is the same bucket's row count (counting NULL
-    # doc_ids exactly like the window did, while collect_list drops them
-    # exactly like the a.doc_id < b.doc_id predicate did) — and the
-    # intersection pairs are emitted IN-ROW (i<j over the sorted list ≡
-    # the < join). The df ≤ 100 stop-shingle cap bounds in-row emission
-    # at ≤ df²/2 pairs per shingle. The (doc, hash) index is cached for
-    # its two consumers (buckets, sizes) — cheaper rows than the old
-    # cached window output (no df column, no window sort).
+    # the (doc, hash) index is cached for its two consumers; sizes stay on
+    # the full index, as the oracle computes them
     sh = sh.cache()
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    # r14: stop-shingle buckets (df > 100) are screened out BEFORE the
-    # list aggregate (llm._screen_hot_buckets) so a boilerplate shingle
-    # never materializes one giant member array; sizes stay on the FULL
-    # index, exactly as the oracle computes them.
-    buckets = (
-        _screen_hot_buckets(sh, ["sh"], 100)
-        .groupBy("sh")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.when(F.col("doc_id").isNotNull(), F.col("doc_id"))
-                )
-            ).alias("ds"),
-            F.count(F.lit(1)).alias("df"),
-        )
-        .filter(F.col("df") <= 100)
-    )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                "ds",
-                lambda x, i: F.transform(
-                    F.slice("ds", i + F.lit(2), F.size("ds")),
-                    lambda y: F.struct(x.alias("a"), y.alias("b")),
-                ),
-            )
-        )
-    )
     pairs = (
-        buckets.select(pair.alias("p"))
+        bucket_members(sh, ["sh"], "doc_id", STOP_SHINGLE_DF)
+        .select(sorted_pairs("members").alias("p"))
         .groupBy(
             F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b")
         )
@@ -591,22 +516,10 @@ _DE_BUCKET_SQL = [
     for t in range(4)
 ]
 
-#: Hot-bucket cap (r13 sf1.0 --hotkey catch): 50% of a corpus being one
-#: near-identical boilerplate clique puts n/2 vectors into ONE bucket of
-#: every table — pair EMISSION is then inherently O((n/2)²) whatever the
-#: candidate machinery does (3.1e8 pairs at sf1.0; the rows-only era
-#: counted them, a value-hash oracle must materialize them). Buckets
-#: with > _DE_BUCKET_CAP members are boilerplate-class and are excluded
-#: from PAIRWISE generation — the q_dedup_ngram_jaccard df≤100
-#: stop-shingle precedent applied to LSH buckets; the clique class
-#: belongs to the clustering/canonical-assignment path
-#: (q_dedup_cluster), not all-pairs emission. Stated on BOTH sides.
-_DE_BUCKET_CAP = 200
-
 _DE_OCC_SQL = ",\n".join(
     f"""    occ{t} AS (
         SELECT b{t} AS k FROM s GROUP BY 1
-        HAVING COUNT(*) <= {_DE_BUCKET_CAP}
+        HAVING COUNT(*) <= {LSH_BUCKET_CAP}
     )"""
     for t in range(4)
 )
@@ -659,9 +572,9 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate if it collides in ANY table (union → distinct), recall
     1-(1-p^8)^4 instead of p^8. Exact cosine >= 0.35 refilters candidates.
 
-    100 TB: T map-only signature passes + T bucket equi-joins — still no
-    all-pairs anything; union-distinct of candidate pairs shuffles only id
-    pairs.
+    100 TB: T map-only signature passes + one bucket aggregate over all T
+    tables (operators/buckets.py) — still no all-pairs anything; the
+    distinct of candidate pairs shuffles only id pairs.
 
     Driver contract (r12 verdict task 2, promoted from rows-only): the
     hyperplanes are bound as literal double arrays in BOTH engines and
@@ -709,48 +622,16 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "table_idx", "bucket"
         ),
     )
-    # r13 optimization (guide §2.4 remove shuffles): candidate generation
-    # was [occupancy aggregate → broadcast semi-join → bucket self-join →
-    # distinct] — four exchanges plus a cached second read of sigs. One
-    # groupBy collapses each (table, bucket) to its sorted member list
-    # (collect_list skips NULL vec_ids exactly as the old a.vec_id <
-    # b.vec_id predicate did; cnt counts every row, mirroring the
-    # oracle's HAVING COUNT(*)), the hot-bucket cap (_DE_BUCKET_CAP)
-    # becomes a filter on that same row, and pairs are emitted IN-ROW
-    # (i<j over the sorted list ≡ the < join; the a!=b guard covers
-    # conflicting re-deliveries that share a vec_id, which the strict <
-    # excluded). Identical candidate set, 2 exchanges instead of 4, no
-    # broadcast, sigs read once (cache dropped). In-row emission is
-    # bounded by the cap: ≤ cap²/2 pairs per bucket by construction.
-    # r14: over-cap buckets are screened out BEFORE the list aggregate
-    # (llm._screen_hot_buckets); the screen is sigs' second consumer, so
-    # the 32-dot signature pass is cached again (tiny rows: id + 2 ints)
-    # rather than recomputed for the occupancy count.
+    # sigs feeds the hot-bucket screen and the list aggregate, so the
+    # 32-dot signature pass is cached (tiny rows: id + 2 ints) rather than
+    # recomputed. The a != b guard drops pairs of conflicting
+    # re-deliveries that share a vec_id, as the oracle's strict < does.
     sigs = sigs.cache()
-    sigs = _screen_hot_buckets(
-        sigs, ["table_idx", "bucket"], _DE_BUCKET_CAP
-    )
-    buckets = (
-        sigs.groupBy("table_idx", "bucket")
-        .agg(
-            F.array_sort(F.collect_list("vec_id")).alias("vs"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-        .filter(F.col("cnt") <= _DE_BUCKET_CAP)
-    )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                "vs",
-                lambda x, i: F.transform(
-                    F.slice("vs", i + F.lit(2), F.size("vs")),
-                    lambda y: F.struct(x.alias("a"), y.alias("b")),
-                ),
-            )
-        )
-    )
     cand = (
-        buckets.select(pair.alias("p"))
+        bucket_members(
+            sigs, ["table_idx", "bucket"], "vec_id", LSH_BUCKET_CAP
+        )
+        .select(sorted_pairs("members").alias("p"))
         .filter(F.col("p.a") != F.col("p.b"))
         .select(
             F.col("p.a").alias("vec_a"), F.col("p.b").alias("vec_b")
@@ -1527,7 +1408,7 @@ _DUCK_CONTAINMENT = f"""
     ),
     rare AS (
         SELECT sh FROM (SELECT sh, COUNT(*) AS df FROM sh GROUP BY sh)
-        WHERE df <= 100
+        WHERE df <= {STOP_SHINGLE_DF}
     ),
     pruned AS (SELECT doc_id, sh.sh FROM sh JOIN rare USING (sh)),
     sizes AS (
@@ -1555,11 +1436,11 @@ def q_text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores low even at 100% overlap, while containment hits 1.0 exactly
     where dedup policy needs to act (keep the superset, drop the subset).
 
-    Same inverted shingle index and stop-shingle pruning (df ≤ 100) as
-    q_dedup_ngram_jaccard — candidates only ever meet on the shingle
-    equi-join, intersection counts on pruned shingles, denominators on the
+    Same inverted shingle index and stop-shingle pruning as
+    q_dedup_ngram_jaccard — candidates only ever meet inside a shingle's
+    bucket, intersection counts on pruned shingles, denominators on the
     full sets, identically on both sides. Directed pairs simply keep both
-    join orientations instead of the a < b half.
+    orientations instead of the a < b half.
 
     Scale: identical posture to the Jaccard pass (bounded bucket
     occupancy, hash-keyed index); in production both measures come off
@@ -1599,43 +1480,24 @@ def q_text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sh"),
         )
     )
-    # r13 optimization (guide §2.4 remove shuffles): same bucket-list
-    # rewrite as q_dedup_ngram_jaccard, directed variant — each shingle
-    # bucket's sorted doc list emits BOTH orientations in-row (x≠y over
-    # the list ≡ the a.doc_id != b.doc_id join; collect_list drops NULL
-    # doc_ids exactly as != did; df counts every row like the window).
-    # Emission stays bounded at ≤ df² pairs per bucket by the df ≤ 100
-    # stop-shingle cap — the same bound the directed join had.
+    # directed variant of q_dedup_ngram_jaccard's emission: each bucket's
+    # list emits BOTH orientations in-row (x≠y over the list ≡ the
+    # a.doc_id != b.doc_id join), at most df² pairs per bucket
     sh = sh.cache()
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    # r14: stop-shingle buckets screened out BEFORE the list aggregate
-    # (llm._screen_hot_buckets); sizes stay on the FULL index, exactly
-    # as the oracle computes them.
-    buckets = (
-        _screen_hot_buckets(sh, ["sh"], 100)
-        .groupBy("sh")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.when(F.col("doc_id").isNotNull(), F.col("doc_id"))
-                )
-            ).alias("ds"),
-            F.count(F.lit(1)).alias("df"),
-        )
-        .filter(F.col("df") <= 100)
-    )
     cross = F.explode(
         F.flatten(
             F.transform(
-                "ds",
+                "members",
                 lambda x: F.transform(
-                    "ds", lambda y: F.struct(x.alias("a"), y.alias("b"))
+                    "members", lambda y: F.struct(x.alias("a"), y.alias("b"))
                 ),
             )
         )
     )
     pairs = (
-        buckets.select(cross.alias("p"))
+        bucket_members(sh, ["sh"], "doc_id", STOP_SHINGLE_DF)
+        .select(cross.alias("p"))
         .filter(F.col("p.a") != F.col("p.b"))
         .groupBy(
             F.col("p.a").alias("doc_a"),
@@ -1974,7 +1836,7 @@ def q_embed_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     rare AS (
         SELECT sh FROM (SELECT sh, COUNT(*) AS df FROM sh GROUP BY sh)
-        WHERE df <= 100
+        WHERE df <= {STOP_SHINGLE_DF}
     ),
     pruned AS (SELECT doc_id, sh.sh FROM sh JOIN rare USING (sh)),
     sizes AS (
@@ -2058,35 +1920,12 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sh"),
         )
     )
-    # r13 optimization (guide §2.4 remove shuffles): same bucket-list
-    # rewrite as q_dedup_ngram_jaccard — one groupBy per shingle collects
-    # the bucket's batch members and corpus members as two lists (the
-    # when() conditions mirror the old batch/corpus filters exactly,
-    # dropping NULL doc_ids as those filters did), df is the bucket row
-    # count (counting every row like the old window), and batch×corpus
-    # candidate pairs are emitted IN-ROW — bounded by the df ≤ 100
-    # stop-shingle cap. Replaces [window df (exchange+sort) → cache →
-    # batch⋈corpus join] with one aggregate; the (doc, hash) index is
-    # cached for its two consumers (buckets, sizes).
+    # one bucket aggregate collects each shingle's batch members and
+    # corpus members as two lists (the when() conditions are the batch and
+    # corpus filters), and batch×corpus pairs are emitted in-row
     sh = sh.cache()
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    # r14: stop-shingle buckets screened out BEFORE the list aggregates
-    # (llm._screen_hot_buckets); sizes stay on the FULL index, exactly
-    # as the oracle computes them.
-    buckets = (
-        _screen_hot_buckets(sh, ["sh"], 100)
-        .groupBy("sh")
-        .agg(
-            F.collect_list(
-                F.when(F.col("doc_id") % 5 == 0, F.col("doc_id"))
-            ).alias("bs"),
-            F.collect_list(
-                F.when(F.col("doc_id") % 5 != 0, F.col("doc_id"))
-            ).alias("cs"),
-            F.count(F.lit(1)).alias("df"),
-        )
-        .filter(F.col("df") <= 100)
-    )
+    doc = F.col("doc_id")
     cross = F.explode(
         F.flatten(
             F.transform(
@@ -2098,7 +1937,14 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     pairs = (
-        buckets.select(cross.alias("p"))
+        bucket_lists(
+            sh,
+            ["sh"],
+            STOP_SHINGLE_DF,
+            {"bs": F.when(doc % 5 == 0, doc), "cs": F.when(doc % 5 != 0, doc)},
+            sort=False,
+        )
+        .select(cross.alias("p"))
         .groupBy(
             F.col("p.b").alias("new_doc"),
             F.col("p.c").alias("corpus_doc"),
@@ -2844,41 +2690,15 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint'ed (flat lineage, the q_dedup_cluster discipline).
     Rounds = hop limit (3), a fixed constant — unlike the
     converge-until-stable components loop. Edge build is the bounded
-    per-order basket self-join (q_pairs_copurchase's economics) with a
+    in-basket pair count (q_pairs_copurchase's economics) with a
     min-support filter that keeps the graph sparse. DuckDB twins it
     with a recursive CTE capped at the same depth."""
     li = load_table(spark, sf_dir, "lineitem")
-    # r13 optimization (guide §2.4): in-basket pair generation replaces
-    # the distinct + basket self-join — see q_pairs_copurchase (identical
-    # edge set: i<j over each basket's sorted distinct part set)
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .filter(F.col("l_orderkey").isNotNull())
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-    )
-    pair_col = F.explode(
-        F.flatten(
-            F.transform(
-                "ps",
-                lambda x, i: F.transform(
-                    F.slice("ps", i + F.lit(2), F.size("ps")),
-                    lambda y: F.struct(x.alias("a"), y.alias("b")),
-                ),
-            )
-        )
-    )
-    pairs = (
-        baskets.select(pair_col.alias("pp"))
-        .groupBy(F.col("pp.a").alias("pa"), F.col("pp.b").alias("pb"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-    )
+    pairs = basket_pairs(li, 2)
+    a, b = F.col("part_a"), F.col("part_b")
     edges = (
-        pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-        .unionAll(
-            pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-        )
+        pairs.select(a.alias("src"), b.alias("dst"))
+        .unionAll(pairs.select(b.alias("src"), a.alias("dst")))
         .persist()
     )
     visited = (

@@ -370,9 +370,11 @@ def read_parquet_policy(
 
 
 def _quarantine_sources(path: str) -> list[str]:
-    """Probe ``path``; warn about and skip damaged files; raise if nothing
-    intact remains (an all-quarantined table is a broken table — reading
-    it as empty would silently zero every downstream aggregate)."""
+    """Probe ``path``; warn about and skip damaged files; raise if files
+    exist but none is intact (an all-quarantined table is a broken table —
+    reading it as empty would silently zero every downstream aggregate).
+    A path holding no data file at all is read as the default policy
+    reads it: empty under a given schema."""
     import os
     import warnings
 
@@ -385,12 +387,12 @@ def _quarantine_sources(path: str) -> list[str]:
             ),
             stacklevel=3,
         )
-    if not good:
+    if bad and not good:
         raise IOError(
             f"{path}: no readable parquet data files "
             f"({len(bad)} quarantined)"
         )
-    return good
+    return good or [path]
 
 
 def spread(df: DataFrame) -> DataFrame:

@@ -1,12 +1,15 @@
-"""Hot-bucket probe for the r14 pre-screen (VERDICT r13 item 1).
+"""Hot-bucket probe for the bucket-list pre-screen.
 
 Synthesizes the exact failure mode the screen exists for — ONE bucket key
-owning h rows (the 10⁷-member boilerplate clique of the verdict) plus a
-spread tail — and runs the bucket-list aggregate in both shapes:
+owning h rows (a 10⁷-member boilerplate clique) plus a spread tail — and
+runs the bucket-list aggregate in both shapes:
 
-  OLD (r13): groupBy(k).agg(array_sort(collect_list(id)), count)
-             .filter(cnt <= 200)           # cap applied AFTER the list
-  NEW (r14): _screen_hot_buckets first     # cap applied BEFORE the list
+  OLD: groupBy(k).agg(array_sort(collect_list(id)), count)
+       .filter(cnt <= 200)                 # cap applied AFTER the list
+  NEW: buckets.bucket_members              # cap applied BEFORE the list
+
+Usage: python scripts/opt_hotprobe_r14.py [hot_members ...]
+(default 1000000 10000000; SPARK_GRAFT_CPUS sets the local slots).
 
 Reports wall time and the aggregate's peak-memory SQLMetric (best effort
 through the AQE plan). The OLD shape must materialize + sort the full
@@ -27,8 +30,9 @@ sys.path.insert(
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from json_parquet_convertor_spark.operators.llm import (  # noqa: E402
-    _screen_hot_buckets,
+from json_parquet_convertor_spark.operators.buckets import (  # noqa: E402
+    LSH_BUCKET_CAP,
+    bucket_members,
 )
 from json_parquet_convertor_spark.session import get_spark  # noqa: E402
 
@@ -69,7 +73,7 @@ def main() -> int:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (
         os.cpu_count() or 8
     )
-    spark = get_spark(app_name="jpc-hotprobe-r14", cpus=cpus)
+    spark = get_spark(app_name="jpc-hotprobe", cpus=cpus)
 
     for h in HOT:
         # id space: hot rows get key 0, tail rows key 1..TAIL_KEYS
@@ -80,19 +84,17 @@ def main() -> int:
             .alias("k"),
         )
 
-        def agg(keyed):
-            return (
-                keyed.groupBy("k")
-                .agg(
-                    F.array_sort(F.collect_list("id")).alias("ds"),
-                    F.count(F.lit(1)).alias("cnt"),
-                )
-                .filter(F.col("cnt") <= 200)
+        old = (
+            rows.groupBy("k")
+            .agg(
+                F.array_sort(F.collect_list("id")).alias("ds"),
+                F.count(F.lit(1)).alias("cnt"),
             )
-
+            .filter(F.col("cnt") <= LSH_BUCKET_CAP)
+        )
         for arm, shape in (
-            ("new", agg(_screen_hot_buckets(rows, ["k"], 200))),
-            ("old", agg(rows)),
+            ("new", bucket_members(rows, ["k"], "id", LSH_BUCKET_CAP)),
+            ("old", old),
         ):
             spark.sparkContext.setJobDescription(f"hotprobe:{h}:{arm}")
             t0 = time.perf_counter()

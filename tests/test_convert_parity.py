@@ -196,6 +196,29 @@ def test_all_malformed_input_converts_to_empty_frame(spark, tmp_path, convert_fn
 
 
 @_CONVERSIONS
+def test_all_malformed_input_quarantine_policy_reads_empty(
+    spark, tmp_path, monkeypatch, convert_fn
+):
+    """Same input under ``JPC_FILE_POLICY=quarantine``: an output holding no
+    data file is an empty table, not a damaged one, so it reads back as an
+    empty frame under the written schema. A table whose only files are
+    damaged still raises."""
+    from json_parquet_convertor_spark.sources.io import read_parquet_policy
+
+    monkeypatch.setenv("JPC_FILE_POLICY", "quarantine")
+    src = str(tmp_path / "in")
+    _write(src, "bad.json", {"ID": "2", "name": "B", "nationality": "Y", "age": "not-a-number"})
+    back = convert_fn(spark, src, str(tmp_path / "out"))
+    assert back.schema == _PERSON_PARQUET_SCHEMA
+    assert back.collect() == []
+    broken = tmp_path / "broken"
+    broken.mkdir()
+    (broken / "part-0.parquet").write_bytes(b"not parquet")
+    with pytest.raises(IOError, match="no readable parquet data files"):
+        read_parquet_policy(spark, str(broken), _PERSON_PARQUET_SCHEMA)
+
+
+@_CONVERSIONS
 @pytest.mark.parametrize("caller_schema", [False, True], ids=["default", "caller"])
 def test_read_back_schema_equals_inferred(spark, tmp_path, convert_fn, caller_schema):
     """The read-back is read under the written frame's schema, not inferred

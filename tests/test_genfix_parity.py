@@ -2180,3 +2180,46 @@ def test_uri_host_rejects_version_marker(spark):
     assert row["h"] is None          # component-local NULL
     assert row["p"] == "/a/b"        # path still parses
     assert row["ok"] == "crawl-src0.example.com"
+
+
+def test_keywords_df_counts_documents_not_doc_lengths(spark, tmp_path):
+    """q_text_keywords against its oracle when one doc_id carries two texts
+    of different token counts (a conflicting re-delivery): tf then holds
+    two rows per shared (doc_id, term), one per doc_len, while the
+    oracle's df is COUNT(DISTINCT doc_id)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.oracle_utils import compare_query
+
+    rows = [
+        (1, "alpha beta gamma"),
+        (1, "alpha beta"),
+        (2, "beta delta delta"),
+        (3, "alpha epsilon"),
+    ]
+    n = len(rows)
+    table = pa.table(
+        {
+            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+            "text": [r[1] for r in rows],
+            "lang": ["en"] * n,
+            "source": ["s"] * n,
+            "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
+        }
+    )
+    path = str(tmp_path / "documents.parquet")
+    pq.write_table(table, path)
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')"
+        )
+        ok, detail = compare_query(
+            spark, con, registry.QUERIES["q_text_keywords"],
+            registry.ORACLES["q_text_keywords"], str(tmp_path),
+        )
+        assert ok, detail
+    finally:
+        con.close()

@@ -402,3 +402,52 @@ def test_sim_pairs_lsh_cosines_buckets_and_order_verified(spark, sf_dir):
         assert bucket(a) == bucket(b)
     sims = [r["cos_sim"] for r in rows]
     assert sims == sorted(sims, reverse=True)
+
+
+def test_bucket_pairs_match_brute_force(spark):
+    """operators/buckets on a hand-built frame: a bucket one row over the
+    cap, a NULL-keyed over-cap bucket, NULL members (which count towards
+    the cap but never pair), and one member in several buckets. The
+    emitted pairs equal brute-force i<j pairs over the sorted non-NULL
+    members of every bucket of at most ``cap`` rows, and the screen drops
+    exactly the over-cap buckets' rows, NULL key included."""
+    from collections import Counter, defaultdict
+
+    from json_parquet_convertor_spark.operators.buckets import (
+        _screen_hot_buckets,
+        bucket_members,
+        sorted_pairs,
+    )
+
+    cap = 4
+    rows = (
+        [(1, 0, m) for m in range(cap + 1)]
+        + [(None, 0, m) for m in range(10, 12 + cap)]
+        + [(2, 0, 7), (2, 0, None), (2, 0, 3)]
+        + [(3, 0, 7), (3, 0, 1)]
+        + [(None, 1, 8), (None, 1, 7)]
+        + [(4, 0, 9), (4, 0, 2), (4, 0, None), (4, 0, None)]
+        + [(5, 0, 9), (5, 0, 2), (5, 0, 4), (5, 0, None), (5, 0, None)]
+    )
+    keyed = spark.createDataFrame(rows, "k1 int, k2 int, m long")
+    got = Counter(
+        (r.p.a, r.p.b)
+        for r in bucket_members(keyed, ["k1", "k2"], "m", cap)
+        .select(sorted_pairs("members").alias("p"))
+        .collect()
+    )
+    buckets = defaultdict(list)
+    for k1, k2, m in rows:
+        buckets[(k1, k2)].append(m)
+    small = {k for k, ms in buckets.items() if len(ms) <= cap}
+    want = Counter()
+    for k in small:
+        ms = sorted(m for m in buckets[k] if m is not None)
+        want.update(
+            (ms[i], ms[j])
+            for i in range(len(ms))
+            for j in range(i + 1, len(ms))
+        )
+    assert got == want and (7, 8) in got and (3, 7) in got
+    screened = _screen_hot_buckets(keyed, ["k1", "k2"], cap).collect()
+    assert {(r.k1, r.k2) for r in screened} == small
