@@ -5,7 +5,7 @@ owning h rows (a 10⁷-member boilerplate clique) plus a spread tail — and
 runs the bucket-list aggregate in both shapes:
 
   OLD: groupBy(k).agg(array_sort(collect_list(id)), count)
-       .filter(cnt <= 200)                 # cap applied AFTER the list
+       .filter(cnt <= cap)                 # cap applied AFTER the list
   NEW: buckets.bucket_members              # cap applied BEFORE the list
 
 Usage: python scripts/opt_hotprobe_r14.py [hot_members ...]
@@ -73,7 +73,7 @@ def main() -> int:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (
         os.cpu_count() or 8
     )
-    spark = get_spark(app_name="jpc-hotprobe", cpus=cpus)
+    spark = get_spark(app_name="jpc-hotprobe-r14", cpus=cpus)
 
     for h in HOT:
         # id space: hot rows get key 0, tail rows key 1..TAIL_KEYS
