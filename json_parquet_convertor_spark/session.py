@@ -24,6 +24,19 @@ def get_spark(
 
     At 100 TB on a real cluster you drop ``master`` and let the cluster
     manager size executors; everything else below still applies.
+
+    Two settings matter for a long-lived session:
+
+    - the codegen class cache holds 4096 generated classes instead of
+      Spark's 100, so a session cycling through many queries reuses their
+      compiled classes instead of recompiling them on every call;
+    - when this call launches the JVM, it passes an 8 g driver heap
+      (``SPARK_GRAFT_DRIVER_MEM`` overrides it) through
+      ``PYSPARK_SUBMIT_ARGS``, set only for the duration of
+      ``getOrCreate()``; the caller's environment is restored afterwards.
+
+    Both are launch-time settings: if a SparkContext already exists, the
+    session is returned with whatever that context was started with.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -33,7 +46,7 @@ def get_spark(
         # coalescing from a high initial value.
         shuffle_partitions = max(cpus, 8)
 
-    # Local-mode driver heap (r14, guide §5/§9): in local[N] the driver JVM
+    # Local-mode driver heap: in local[N] the driver JVM
     # IS the executor — N task threads, every broadcast, AND the streaming
     # state stores (HDFSBackedStateStore keeps committed state maps on heap,
     # and each streaming invocation's providers stay loaded after the query
@@ -45,18 +58,19 @@ def get_spark(
     # configs are silently ignored at builder time (the JVM is already
     # being launched), so this must go through PYSPARK_SUBMIT_ARGS — set
     # only when we are actually the process launching the JVM and the
-    # caller hasn't configured their own. On a real cluster the submitter
-    # owns --driver-memory and this branch never fires.
+    # caller hasn't configured their own. The launcher reads it once, at
+    # JVM start, so it is set only around getOrCreate() below and removed
+    # again afterwards. On a real cluster the submitter owns
+    # --driver-memory and this branch never fires.
     from pyspark import SparkContext
 
+    submit_args = None
     if (
         "PYSPARK_SUBMIT_ARGS" not in os.environ
         and SparkContext._active_spark_context is None
     ):
         mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-        os.environ["PYSPARK_SUBMIT_ARGS"] = (
-            f"--driver-memory {mem} pyspark-shell"
-        )
+        submit_args = f"--driver-memory {mem} pyspark-shell"
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -71,6 +85,16 @@ def get_spark(
         # broadcast small dims aggressively; the star-schema dims here are
         # tiny, and at 100 TB the dims are still << executor memory.
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
+        # Generated-class cache (a static conf, so builder-only). Spark's
+        # 100-entry LRU is smaller than one pass over a handful of queries:
+        # an 8-query analytic mix cycles through about 180 classes, so each
+        # is evicted before reuse and Janino recompiles ~175 per warm pass.
+        # One sweep of all 286 registered queries at sf0.01 compiles 2,878
+        # classes; a second sweep compiles 46, in 10 queries whose AQE
+        # codegen-stage ids follow stage completion order and so yield a
+        # second variant (q_join_null_safe: 17, then 4, then 0 compiles).
+        # Both variants fit in 4096. The mean class is ~2.3 KB of bytecode.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.ui.enabled", "false")
     )
     # NOTE: spark.driver.memory cannot be set here — the JVM is already
@@ -80,7 +104,13 @@ def get_spark(
     # spark-submit --driver-memory.
     if os.environ.get("SPARK_GRAFT_S3", "") == "1":
         builder = _with_s3a(builder)
-    spark = builder.getOrCreate()
+    if submit_args is not None:
+        os.environ["PYSPARK_SUBMIT_ARGS"] = submit_args
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if submit_args is not None:
+            os.environ.pop("PYSPARK_SUBMIT_ARGS", None)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
