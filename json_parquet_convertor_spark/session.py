@@ -87,13 +87,14 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         # Generated-class cache (a static conf, so builder-only). Spark's
         # 100-entry LRU is smaller than one pass over a handful of queries:
-        # an 8-query analytic mix cycles through about 180 classes, so each
-        # is evicted before reuse and Janino recompiles ~175 per warm pass.
-        # One sweep of all 286 registered queries at sf0.01 compiles 2,878
-        # classes; a second sweep compiles 46, in 10 queries whose AQE
+        # the 8-query perfbench analytic mix cycles through about 180
+        # classes, so each is evicted before reuse and Janino recompiles
+        # ~170 per warm pass. One sweep of all 286 registered queries at
+        # sf0.01 compiles about 2,900 classes; a second sweep compiles a few
+        # dozen, in 10-15 queries (q_join_null_safe among them) whose AQE
         # codegen-stage ids follow stage completion order and so yield a
-        # second variant (q_join_null_safe: 17, then 4, then 0 compiles).
-        # Both variants fit in 4096. The mean class is ~2.3 KB of bytecode.
+        # second variant of a class. Both variants fit in 4096. The mean
+        # generated class is 2.2-2.7 KB of bytecode.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.ui.enabled", "false")
     )

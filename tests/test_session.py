@@ -11,17 +11,11 @@ import sys
 import textwrap
 
 from json_parquet_convertor_spark import registry
+from perfbench.workloads import MIXES, force
 
 registry.load_all()
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-#: The ``analytic`` benchmark mix: one query per relational family and per
-#: dedup family, about 180 generated classes per pass.
-ANALYTIC_MIX = (
-    "q_agg_global", "q_join_full", "q_win_pattern", "q_sql_exists",
-    "q_composite_q3", "q_dedup_near", "q_sim_ann_ivf", "q_text_fingerprint",
-)
 
 
 def _compiles(spark) -> int:
@@ -30,16 +24,16 @@ def _compiles(spark) -> int:
 
 
 def _mix_pass(spark, sf_dir) -> None:
-    for name in ANALYTIC_MIX:
-        df = registry.QUERIES[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
+    for name in MIXES["analytic"]:
+        force(registry.QUERIES[name](spark, sf_dir))
         spark.catalog.clearCache()
 
 
 def test_warm_queries_do_not_recompile(spark, sf_dir):
-    """With Spark's 100-entry class cache the mix evicts every class before
-    its reuse and recompiles ~170 per pass; the session's cache holds the
-    whole mix, so a second warm pass compiles nothing."""
+    """The benchmark's ``analytic`` mix cycles through about 180 generated
+    classes. Spark's 100-entry class cache evicts each before its reuse and
+    recompiles ~170 per pass; the session's cache holds the whole mix, so a
+    second warm pass compiles nothing."""
     _mix_pass(spark, sf_dir)
     before = _compiles(spark)
     _mix_pass(spark, sf_dir)
