@@ -72,6 +72,15 @@ _CHANGED_THIS_ROUND: list[str] = [
     "q_pairs_lift",
     # df is a distinct document count again:
     "q_text_keywords",
+    # Shingles come from operators/shingles.py and the SRP bucket keys from
+    # one builder (q_dedup_near's shingle sequence is now 1-based; the
+    # rest have the same plans):
+    "q_text_fingerprint",
+    "q_text_decontaminate",
+    "q_dedup_cluster",
+    "q_sim_pairs_lsh",
+    # The round-trip copy is keyed by fixture on disk:
+    "q_scan_jsonlines",
 ]
 
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))

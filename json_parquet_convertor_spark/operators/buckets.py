@@ -120,6 +120,21 @@ def sorted_pairs(arr: str) -> Column:
     )
 
 
+def cross_pairs(xs: str, ys: str) -> Column:
+    """Explode array columns ``xs`` and ``ys`` into one ``struct(a, b)``
+    per element of their cross product, ``a`` from ``xs``."""
+    return F.explode(
+        F.flatten(
+            F.transform(
+                xs,
+                lambda x: F.transform(
+                    ys, lambda y: F.struct(x.alias("a"), y.alias("b"))
+                ),
+            )
+        )
+    )
+
+
 def basket_pairs(li: DataFrame, min_orders: int) -> DataFrame:
     """``(part_a, part_b, n_orders)``: part pairs ``part_a < part_b`` that
     share at least ``min_orders`` orders of lineitem frame ``li``.

@@ -21,6 +21,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from json_parquet_convertor_spark.exact import fsec
+from json_parquet_convertor_spark.operators.shingles import (
+    _DUCK_TOKENIZED,
+    canonical_docs,
+    duck_shingles,
+    shingles,
+)
 from json_parquet_convertor_spark.registry import query
 from json_parquet_convertor_spark.sources.io import load_table, spread
 
@@ -357,24 +363,12 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_decontaminate",
-    oracle="""
+    oracle=f"""
     WITH grams AS (
-        -- split bound OUTSIDE the lambda and ELEMENT indexing only (r11,
-        -- --longtext): an inline string_split re-splits per element and a
-        -- list SLICE l[i:i+4] copies the bound list per element — both
-        -- O(len²) per doc in DuckDB 1.x
         SELECT doc_id, md5(g) AS h
         FROM (
-            SELECT doc_id,
-                   unnest(list_transform(
-                       generate_series(1, len(l) - 4),
-                       i -> l[i] || ' ' || l[i + 1] || ' ' || l[i + 2]
-                            || ' ' || l[i + 3] || ' ' || l[i + 4])) AS g
-            -- canonical version per doc_id (r13, --conflict): see
-            -- pipeline._DUCK_CANON_DOCS
-            FROM (SELECT doc_id, string_split(text, ' ') AS l
-                  FROM (SELECT doc_id, max(text) AS text
-                        FROM documents GROUP BY doc_id)))
+            SELECT doc_id, unnest({duck_shingles(5)}) AS g
+            FROM {_DUCK_TOKENIZED})
     ),
     bench AS (SELECT DISTINCT h FROM grams WHERE doc_id % 97 = 0),
     train AS (SELECT DISTINCT doc_id, h FROM grams WHERE doc_id % 97 <> 0)
@@ -405,39 +399,7 @@ def q_text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     incl. doc_id) dedup before gram extraction — otherwise a duplicated
     training doc reports exactly 2x its true overlap. Mirrors the
     oracle's DISTINCT (doc_id, h) train set."""
-    # canonical version per doc_id (r13, --conflict): see _DUCK_CANON_DOCS
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .groupBy("doc_id")
-        .agg(F.max("text").alias("text"))
-    )
-    # token array materialized BEFORE the HOF lambda indexes it (r11,
-    # --longtext): an inline split under transform() re-splits the text
-    # per element — O(len²) per doc; see _spark_shingles in pipeline.py
-    w = F.col("__w")
-    gram = lambda i: F.md5(  # noqa: E731
-        F.concat_ws(
-            " ",
-            F.element_at(w, i),
-            F.element_at(w, i + 1),
-            F.element_at(w, i + 2),
-            F.element_at(w, i + 3),
-            F.element_at(w, i + 4),
-        )
-    )
-    grams = (
-        spread(docs)
-        .select("doc_id", F.split("text", " ").alias("__w"))
-        .filter(F.size(w) >= 5)
-        .select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.transform(F.sequence(F.lit(1), F.size(w) - 4), gram)
-                )
-            ).alias("h"),
-        )
-    )
+    grams = shingles(canonical_docs(spark, sf_dir), k=5, gram=F.md5, name="h")
     bench = grams.filter(F.col("doc_id") % 97 == 0).select("h").distinct()
     train = grams.filter(F.col("doc_id") % 97 != 0)
     return (

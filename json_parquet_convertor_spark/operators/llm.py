@@ -16,13 +16,18 @@ Scale posture per operator is documented on each query. Common knobs:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from json_parquet_convertor_spark.operators.buckets import (
     LSH_BUCKET_CAP,
     bucket_members,
     sorted_pairs,
+)
+from json_parquet_convertor_spark.operators.shingles import (
+    duck_shingles,
+    shingles,
 )
 from json_parquet_convertor_spark.registry import query
 from json_parquet_convertor_spark.sources.io import load_table, spread
@@ -77,34 +82,9 @@ def _minhash_signatures(docs: DataFrame) -> DataFrame:
     Sequence shingles (not bare words) are what make this discriminative:
     independent docs drawing from a shared vocabulary still share most
     *words*, but near-duplicates are the only docs sharing word *runs*.
-    One explode + one groupBy: the map side computes K hashes per shingle
-    (all JVM xxhash64 with the hash index as seed column), the reduce side
-    takes per-doc minima — a single linear shuffle on doc_id."""
-    # token array materialized BEFORE the HOF lambda indexes it (r11,
-    # --longtext): an inline split under transform() re-splits the text
-    # per element — O(len²) per doc; see _spark_shingles in pipeline.py
-    docs = spread(docs).select("doc_id", F.split("text", " ").alias("__w"))
-    w = F.col("__w")
-    shingle_at = lambda i: F.concat_ws(  # noqa: E731
-        " ",
-        F.element_at(w, i + 1),
-        F.element_at(w, i + 2),
-        F.element_at(w, i + 3),
-    )
-    # Docs with <3 tokens have no 3-shingles; without this guard element_at
-    # would index past the array end and throw under Spark 4's default ANSI
-    # mode (same guard as _spark_shingles in pipeline.py).
-    shingles = docs.filter(F.size(w) >= 3).select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), F.size(w) - 3),
-                    shingle_at,
-                )
-            )
-        ).alias("tok"),
-    )
+    One explode (:func:`shingles.shingles`) + one groupBy: the map side
+    computes K hashes per shingle, the reduce side takes per-doc minima —
+    a single linear shuffle on doc_id."""
     # One string digest per shingle; the K minhash functions then re-hash
     # the fixed-width hex digest with per-function seed PREFIXES — a
     # proper independent family at a fraction of the cost of K
@@ -116,8 +96,8 @@ def _minhash_signatures(docs: DataFrame) -> DataFrame:
     # (xxhash64 would be ~2× cheaper per shingle but has no DuckDB twin;
     # a deployment without the SQL-oracle requirement can swap it back —
     # every other stage is hash-family-agnostic.)
-    hashed = shingles.select(
-        "doc_id", F.md5("tok").alias("base")
+    hashed = shingles(docs).select(
+        "doc_id", F.md5("sh").alias("base")
     ).select(
         "doc_id",
         *[
@@ -133,10 +113,7 @@ def _minhash_signatures(docs: DataFrame) -> DataFrame:
 
 
 # the identical shingle → md5-minhash → band pipeline, as DuckDB SQL
-# (mirrors _minhash_signatures + q_dedup_near's banding exactly; the
-# bound-tokens subquery shape follows pipeline._DUCK_TOKENIZED — the
-# token list is materialized BEFORE the lambda indexes it, r11
-# --longtext rule)
+# (mirrors _minhash_signatures + q_dedup_near's banding exactly)
 _DN_SIG_COLS = ",\n           ".join(
     f"min(md5('{i}:' || b)) AS h{i}" for i in range(_MH_K)
 )
@@ -167,10 +144,7 @@ _DN_CAND_SQL = "\n        UNION\n".join(
     "q_dedup_near",
     oracle=f"""
     WITH sh AS (
-        SELECT doc_id,
-               unnest(list_transform(
-                   generate_series(1, len(l) - 2),
-                   i -> l[i] || ' ' || l[i + 1] || ' ' || l[i + 2])) AS sh
+        SELECT doc_id, unnest({duck_shingles()}) AS sh
         FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)
         WHERE len(l) >= 3
     ),
@@ -458,18 +432,29 @@ def q_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Signed-random-projection LSH: P hyperplanes → P sign bits → bucket key.
-# P(same bucket | angle θ) = (1 - θ/π)^P. With P=6 over N vectors the
-# expected bucket occupancy is N/64 — enough co-occupancy to surface the
-# most-similar pairs while pruning ~98% of the N²/2 candidate space.
-_SRP_PLANES = 6
+# P(same bucket | angle θ) = (1 - θ/π)^P. q_sim_pairs_lsh uses P=6: over N
+# vectors the expected bucket occupancy is N/64 — enough co-occupancy to
+# surface the most-similar pairs while pruning ~98% of the N²/2 candidate
+# space. q_dedup_embed runs 4 tables of 8 planes each.
+_LSH_BITS = 6
+
+#: Deterministic Gaussian hyperplanes (fixed seed 42), one per row, for
+#: 64-dim embeddings: q_sim_pairs_lsh reads rows 0-5, q_dedup_embed's
+#: table t rows 8t to 8t+7.
+SRP_PLANES = np.random.default_rng(42).standard_normal((32, 64))
 
 
-def _srp_hyperplanes(dim: int = 64):
-    """Deterministic Gaussian hyperplanes (fixed seed 42)."""
-    import numpy as np
-
-    rng = np.random.default_rng(42)
-    return rng.standard_normal((_SRP_PLANES, dim))
+def srp_bucket(col: str, planes) -> Column:
+    """BIGINT bucket key of array column ``col``: bit i is set where its
+    dot with ``planes[i]`` is >= 0."""
+    bits = [
+        F.when(
+            _dot(col, F.array(*[F.lit(float(v)) for v in p])) >= 0,
+            F.lit(1 << i),
+        ).otherwise(F.lit(0))
+        for i, p in enumerate(planes)
+    ]
+    return sum(bits[1:], bits[0]).cast("bigint")
 
 
 def _plane_sql(plane) -> str:
@@ -478,18 +463,18 @@ def _plane_sql(plane) -> str:
     return "[" + ", ".join(repr(float(v)) for v in plane) + "]"
 
 
-# The bucket key as SQL: the SAME sign-bit construction the Spark side
-# builds from higher-order-function dots. Both engines evaluate the
-# identical expression tree over identical double constants with
-# correctly-rounded IEEE ops (sequential in-order dot fold on both
-# sides — the q_sim_cosine_topk precedent), so the signs, buckets, pair
-# set, and 4-dp cosines are bit-equal — which is what lets this LSH
-# query carry a full value-hash oracle instead of a rows-only check.
-_SRP_BUCKET_SQL = "\n             + ".join(
-    f"(CASE WHEN list_inner_product(e, {_plane_sql(p)}) >= 0 "
-    f"THEN {1 << i} ELSE 0 END)"
-    for i, p in enumerate(_srp_hyperplanes())
-)
+def srp_bucket_sql(planes) -> str:
+    """:func:`srp_bucket` over the DuckDB column ``e``. Both engines
+    evaluate the identical expression tree over identical double
+    constants with correctly-rounded IEEE ops (sequential in-order dot
+    fold on both sides — the q_sim_cosine_topk precedent), so signs and
+    buckets are bit-equal, which is what lets the SRP queries carry a
+    full value-hash oracle instead of a rows-only check."""
+    return "\n             + ".join(
+        f"(CASE WHEN list_inner_product(e, {_plane_sql(p)}) >= 0 "
+        f"THEN {1 << i} ELSE 0 END)"
+        for i, p in enumerate(planes)
+    )
 
 
 @query(
@@ -502,7 +487,7 @@ _SRP_BUCKET_SQL = "\n             + ".join(
     ),
     s AS (
         SELECT vec_id, e,
-               {_SRP_BUCKET_SQL} AS bucket
+               {srp_bucket_sql(SRP_PLANES[:_LSH_BITS])} AS bucket
         FROM e
     )
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
@@ -541,7 +526,6 @@ def q_sim_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole algorithm (candidate rule stated on both sides, the
     q_dedup_ngram_jaccard df-pruning precedent). Rank-50 ties break on
     (vec_a, vec_b) on both sides."""
-    planes = _srp_hyperplanes()
     # INGEST GUARD (r12, --rowdup 10x probe): an at-least-once ingest
     # re-delivers exact copies including vec_id; without the dedup, a
     # vector duplicated on both sides of the bucket self-join emits the
@@ -555,15 +539,7 @@ def q_sim_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("e").isNotNull())
         .dropDuplicates()
     )
-    bits = [
-        F.when(
-            _dot("e", F.array(*[F.lit(float(v)) for v in plane])) >= 0, 1
-        ).otherwise(0)
-        for plane in planes
-    ]
-    bucket = sum(
-        (bit * F.lit(2**i) for i, bit in enumerate(bits)), F.lit(0)
-    ).cast("bigint")
+    bucket = srp_bucket("e", SRP_PLANES[:_LSH_BITS])
     # r13 optimization (guide §1.2 don't recompute): norm² rides the
     # signature row — computed once per VECTOR instead of twice per
     # candidate pair; sqrt(n2a)·sqrt(n2b) is the identical IEEE

@@ -20,9 +20,23 @@ from json_parquet_convertor_spark.operators.buckets import (
     basket_pairs,
     bucket_lists,
     bucket_members,
+    cross_pairs,
     sorted_pairs,
 )
-from json_parquet_convertor_spark.operators.llm import _dot
+from json_parquet_convertor_spark.operators.llm import (
+    SRP_PLANES,
+    _dot,
+    srp_bucket,
+    srp_bucket_sql,
+)
+from json_parquet_convertor_spark.operators.shingles import (
+    _DUCK_SHINGLE_INDEX,
+    _DUCK_TOKENIZED,
+    canonical_docs,
+    duck_shingles,
+    shingle_index,
+    shingles,
+)
 from json_parquet_convertor_spark.registry import query
 from json_parquet_convertor_spark.sources.io import load_table, spread
 
@@ -234,83 +248,9 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup: exact n-gram Jaccard (inverted index, fully oracled)
 # ---------------------------------------------------------------------------
 
-# 3-word shingle list over a BOUND token-list column ``l`` (docs with
-# >= 3 tokens). The split must be bound OUTSIDE the index lambda (r11,
-# --longtext): DuckDB, like Spark codegen, does no subexpression
-# elimination inside lambdas, so an inline string_split re-splits the
-# text once per ELEMENT — O(len²) per doc, unfinishable on a 1.4 MB
-# megadoc. Splice sites read FROM {_DUCK_TOKENIZED}. Element indexing
-# only — a list SLICE (l[i:i+k]) inside a lambda copies the whole bound
-# list per element in DuckDB 1.x (measured 120 s for one 60k-word doc).
-_DUCK_SHINGLES = """
-        list_transform(
-            generate_series(1, len(l) - 2),
-            i -> l[i] || ' ' || l[i + 1] || ' ' || l[i + 2])
-"""
-
-# the bound-tokens FROM clause _DUCK_SHINGLES indexes into
-# Canonical per-doc_id text (r13, --conflict): a conflicting re-delivery
-# carries the same doc_id with a DRIFTED text, so every doc_id-keyed
-# shingle/gram index must resolve versions first — max(text) is the
-# deterministic winner (binary compare, NULLs skipped identically by
-# both engines' MAX). This also subsumes the r11 --rowdup exact-copy
-# dedup for (doc_id, text).
-_DUCK_CANON_DOCS = (
-    "(SELECT doc_id, max(text) AS text FROM documents GROUP BY doc_id)"
-)
-
-_DUCK_TOKENIZED = (
-    f"(SELECT doc_id, string_split(text, ' ') AS l FROM {_DUCK_CANON_DOCS})"
-)
-
-
-def _spark_shingles(docs: DataFrame) -> DataFrame:
-    """(doc_id, sh) distinct 3-word shingles for docs with >= 3 tokens.
-
-    The token array is materialized as a real column BEFORE the
-    higher-order lambda indexes into it (r11, --longtext): codegen
-    subexpression elimination does not reach inside HOF lambdas, so an
-    inline ``split(text)`` under ``transform()`` re-splits the document
-    once per ELEMENT — O(len²) per row, >700x on a 60k-word doc (a
-    1.4 MB megadoc never finishes). Catalyst's CollapseProject keeps the
-    two projections apart because the array is referenced more than once
-    (pinned in tests/test_plans.py: no split() inside lambdafunction)."""
-    w = F.col("__w")
-    tri = lambda i: F.concat_ws(  # noqa: E731
-        " ",
-        F.element_at(w, i),
-        F.element_at(w, i + 1),
-        F.element_at(w, i + 2),
-    )
-    return (
-        spread(docs)
-        .select("doc_id", F.split("text", " ").alias("__w"))
-        .filter(F.size(w) >= 3)
-        .select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.transform(F.sequence(F.lit(1), F.size(w) - 2), tri)
-                )
-            ).alias("sh"),
-        )
-    )
-
-
 # Full exact-Jaccard pair SQL — the q_dedup_ngram_jaccard oracle, and the
 # edge set q_dedup_cluster's oracle builds its recursive closure on.
-_DUCK_JACCARD_PAIRS = f"""
-    WITH sh AS (
-        SELECT DISTINCT doc_id, unnest({_DUCK_SHINGLES}) AS sh
-        FROM {_DUCK_TOKENIZED}
-        WHERE len(l) >= 3
-    ),
-    rare AS (
-        SELECT sh FROM (SELECT sh, COUNT(*) AS df FROM sh GROUP BY sh)
-        WHERE df <= {STOP_SHINGLE_DF}
-    ),
-    pruned AS (SELECT doc_id, sh.sh FROM sh JOIN rare USING (sh)),
-    sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id),
+_DUCK_JACCARD_PAIRS = f"""{_DUCK_SHINGLE_INDEX}
     pairs AS (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(COUNT(*) AS BIGINT) AS c
         FROM pruned a JOIN pruned b ON a.sh = b.sh AND a.doc_id < b.doc_id
@@ -339,56 +279,14 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Intersection counts are taken on the pruned shingles, identically on
     both sides, hence oracle-stable.
 
-    Perf shape: the index carries xxhash64(shingle) longs, not the ~20-char
-    strings — smaller cache, cheaper shuffles, cheaper join compares; the
-    oracle keeps string shingles (counts diverge only on a 64-bit hash
-    collision, ~2^-64 per shingle pair). The cached (doc, shingle-hash)
-    index (a parquet stage table at 100 TB) feeds both the sizes and the
-    bucket aggregate.
-
-    Ingest guard (--rowdup): the shingle index is a SET per document, so
-    at-least-once re-delivered rows (exact copies incl. the doc_id) are
-    collapsed by a full-row dropDuplicates before indexing — without it a
-    doc duplicated on BOTH pair sides doubles n and quadruples c, and the
-    Jaccard denominator n_a + n_b - c hits exactly 0 (ANSI
-    DIVIDE_BY_ZERO). The oracle's DISTINCT (doc_id, shingle) index states
-    the same set semantics."""
-    # canonical version per doc_id (r13, --conflict): see _DUCK_CANON_DOCS
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .groupBy("doc_id")
-        .agg(F.max("text").alias("text"))
-    )
-    # token array materialized BEFORE the HOF lambda indexes it (r11,
-    # --longtext): an inline split under transform() re-splits the text
-    # per element — O(len²) per doc; see _spark_shingles
-    w = F.col("__w")
-    tri = lambda i: F.concat_ws(  # noqa: E731
-        " ",
-        F.element_at(w, i),
-        F.element_at(w, i + 1),
-        F.element_at(w, i + 2),
-    )
-    sh = (
-        spread(docs)
-        .select("doc_id", F.split("text", " ").alias("__w"))
-        .filter(F.size(w) >= 3)
-        .select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(w) - 2),
-                        lambda i: F.xxhash64(tri(i)),
-                    )
-                )
-            ).alias("sh"),
-        )
-    )
-    # the (doc, hash) index is cached for its two consumers; sizes stay on
-    # the full index, as the oracle computes them
-    sh = sh.cache()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    The index is :func:`shingles.shingle_index`: hashed shingles of the
+    canonical text of each doc_id, a SET per document. Without set
+    semantics a re-delivered doc (--rowdup) on BOTH pair sides doubles n
+    and quadruples c, and the Jaccard denominator n_a + n_b - c hits
+    exactly 0 (ANSI DIVIDE_BY_ZERO); the oracle's DISTINCT (doc_id,
+    shingle) index states the same set. Sizes stay on the full index, as
+    the oracle computes them."""
+    sh, sizes = shingle_index(spark, sf_dir)
     pairs = (
         bucket_members(sh, ["sh"], "doc_id", STOP_SHINGLE_DF)
         .select(sorted_pairs("members").alias("p"))
@@ -489,32 +387,10 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _de_hyperplanes():
-    """4 tables × 8 signed-random-projection planes (fixed seed 42)."""
-    import numpy as np
-
-    rng = np.random.default_rng(42)
-    return rng.standard_normal((32, 64))
-
-
-def _de_plane_sql(plane) -> str:
-    """One hyperplane as a DuckDB DOUBLE[] literal (repr round-trips)."""
-    return "[" + ", ".join(repr(float(v)) for v in plane) + "]"
-
-
-_DE_PLANES = _de_hyperplanes()
-
-# per-table 8-bit bucket keys as SQL — the same sign-bit construction the
-# Spark side builds from HOF dots (see q_sim_pairs_lsh: sequential-fold
-# dots over identical literal doubles are bit-equal cross-engine)
-_DE_BUCKET_SQL = [
-    "\n               + ".join(
-        f"(CASE WHEN list_inner_product(e, {_de_plane_sql(_DE_PLANES[t * 8 + i])}) >= 0 "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i in range(8)
-    )
-    for t in range(4)
-]
+# 4 tables × 8 signed-random-projection planes, and the per-table 8-bit
+# bucket keys as SQL (see llm.srp_bucket_sql)
+_DE_TABLES = [SRP_PLANES[t * 8:t * 8 + 8] for t in range(4)]
+_DE_BUCKET_SQL = [srp_bucket_sql(planes) for planes in _DE_TABLES]
 
 _DE_OCC_SQL = ",\n".join(
     f"""    occ{t} AS (
@@ -598,29 +474,11 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates()
     ).cache()  # read by the bucket join sides + the exact-cosine refilter
 
-    planes = _DE_PLANES
-
-    def bucket(t: int):
-        bits = [
-            F.when(
-                _dot(
-                    "e",
-                    F.array(
-                        *[F.lit(float(v)) for v in planes[t * 8 + i]]
-                    ),
-                )
-                >= 0,
-                F.lit(1 << i),
-            ).otherwise(F.lit(0))
-            for i in range(8)
-        ]
-        return sum(bits[1:], bits[0]).cast("bigint")
-
     sigs = emb.select(
         "vec_id",
-        F.posexplode(F.array(*[bucket(t) for t in range(4)])).alias(
-            "table_idx", "bucket"
-        ),
+        F.posexplode(
+            F.array(*[srp_bucket("e", planes) for planes in _DE_TABLES])
+        ).alias("table_idx", "bucket"),
     )
     # sigs feeds the hot-bucket screen and the list aggregate, so the
     # 32-dot signature pass is cached (tiny rows: id + 2 ints) rather than
@@ -852,11 +710,9 @@ def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         -- shingle union would hash a chimera matching no real version
         SELECT doc_id,
                list_sort(list_distinct(
-                   list_transform({_DUCK_SHINGLES}, s -> md5(s))
+                   list_transform({duck_shingles()}, s -> md5(s))
                )) AS hs
-        FROM (SELECT doc_id, string_split(text, ' ') AS l
-              FROM (SELECT doc_id, max(text) AS text
-                    FROM documents GROUP BY doc_id))
+        FROM {_DUCK_TOKENIZED}
         WHERE len(l) >= 3
     )
     SELECT doc_id,
@@ -874,12 +730,9 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch oracle-checkable. Conflicting re-delivered versions of a
     doc_id (r13, --conflict) resolve to the MAX text before shingling —
     one fingerprint per document, of one real version."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .groupBy("doc_id")
-        .agg(F.max("text").alias("text"))
+    sh = shingles(canonical_docs(spark, sf_dir)).select(
+        "doc_id", F.md5("sh").alias("h")
     )
-    sh = _spark_shingles(docs).select("doc_id", F.md5("sh").alias("h"))
     return (
         sh.groupBy("doc_id")
         .agg(F.slice(F.sort_array(F.collect_set("h")), 1, 4).alias("bottom"))
@@ -1400,20 +1253,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranks.select("v", F.col("r").cast("double").alias("rank"))
 
 
-_DUCK_CONTAINMENT = f"""
-    WITH sh AS (
-        SELECT DISTINCT doc_id, unnest({_DUCK_SHINGLES}) AS sh
-        FROM {_DUCK_TOKENIZED}
-        WHERE len(l) >= 3
-    ),
-    rare AS (
-        SELECT sh FROM (SELECT sh, COUNT(*) AS df FROM sh GROUP BY sh)
-        WHERE df <= {STOP_SHINGLE_DF}
-    ),
-    pruned AS (SELECT doc_id, sh.sh FROM sh JOIN rare USING (sh)),
-    sizes AS (
-        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
-    ),
+_DUCK_CONTAINMENT = f"""{_DUCK_SHINGLE_INDEX}
     pairs AS (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                CAST(COUNT(*) AS BIGINT) AS c
@@ -1448,56 +1288,13 @@ def q_text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     guard as q_dedup_ngram_jaccard: the index is a SET per doc, so
     re-delivered copies dedup before indexing (containment c/n is
     otherwise inflated asymmetrically around the 0.5 threshold)."""
-    # canonical version per doc_id (r13, --conflict): see _DUCK_CANON_DOCS
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .groupBy("doc_id")
-        .agg(F.max("text").alias("text"))
-    )
-    # token array materialized BEFORE the HOF lambda indexes it (r11,
-    # --longtext): an inline split under transform() re-splits the text
-    # per element — O(len²) per doc; see _spark_shingles
-    w = F.col("__w")
-    tri = lambda i: F.concat_ws(  # noqa: E731
-        " ",
-        F.element_at(w, i),
-        F.element_at(w, i + 1),
-        F.element_at(w, i + 2),
-    )
-    sh = (
-        spread(docs)
-        .select("doc_id", F.split("text", " ").alias("__w"))
-        .filter(F.size(w) >= 3)
-        .select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(w) - 2),
-                        lambda i: F.xxhash64(tri(i)),
-                    )
-                )
-            ).alias("sh"),
-        )
-    )
     # directed variant of q_dedup_ngram_jaccard's emission: each bucket's
     # list emits BOTH orientations in-row (x≠y over the list ≡ the
     # a.doc_id != b.doc_id join), at most df² pairs per bucket
-    sh = sh.cache()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    cross = F.explode(
-        F.flatten(
-            F.transform(
-                "members",
-                lambda x: F.transform(
-                    "members", lambda y: F.struct(x.alias("a"), y.alias("b"))
-                ),
-            )
-        )
-    )
+    sh, sizes = shingle_index(spark, sf_dir)
     pairs = (
         bucket_members(sh, ["sh"], "doc_id", STOP_SHINGLE_DF)
-        .select(cross.alias("p"))
+        .select(cross_pairs("members", "members").alias("p"))
         .filter(F.col("p.a") != F.col("p.b"))
         .groupBy(
             F.col("p.a").alias("doc_a"),
@@ -1828,20 +1625,7 @@ def q_embed_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_incremental",
-    oracle=f"""
-    WITH sh AS (
-        SELECT DISTINCT doc_id, unnest({_DUCK_SHINGLES}) AS sh
-        FROM {_DUCK_TOKENIZED}
-        WHERE len(l) >= 3
-    ),
-    rare AS (
-        SELECT sh FROM (SELECT sh, COUNT(*) AS df FROM sh GROUP BY sh)
-        WHERE df <= {STOP_SHINGLE_DF}
-    ),
-    pruned AS (SELECT doc_id, sh.sh FROM sh JOIN rare USING (sh)),
-    sizes AS (
-        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
-    ),
+    oracle=f"""{_DUCK_SHINGLE_INDEX}
     pairs AS (
         SELECT b.doc_id AS new_doc, c.doc_id AS corpus_doc,
                CAST(COUNT(*) AS BIGINT) AS i
@@ -1888,54 +1672,11 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexing (set semantics, mirroring the oracle's DISTINCT index)."""
     from pyspark.sql.window import Window
 
-    # canonical version per doc_id (r13, --conflict): see _DUCK_CANON_DOCS
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .groupBy("doc_id")
-        .agg(F.max("text").alias("text"))
-    )
-    # token array materialized BEFORE the HOF lambda indexes it (r11,
-    # --longtext): an inline split under transform() re-splits the text
-    # per element — O(len²) per doc; see _spark_shingles
-    w = F.col("__w")
-    tri = lambda i: F.concat_ws(  # noqa: E731
-        " ",
-        F.element_at(w, i),
-        F.element_at(w, i + 1),
-        F.element_at(w, i + 2),
-    )
-    sh = (
-        spread(docs)
-        .select("doc_id", F.split("text", " ").alias("__w"))
-        .filter(F.size(w) >= 3)
-        .select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(w) - 2),
-                        lambda i: F.xxhash64(tri(i)),
-                    )
-                )
-            ).alias("sh"),
-        )
-    )
     # one bucket aggregate collects each shingle's batch members and
     # corpus members as two lists (the when() conditions are the batch and
     # corpus filters), and batch×corpus pairs are emitted in-row
-    sh = sh.cache()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    sh, sizes = shingle_index(spark, sf_dir)
     doc = F.col("doc_id")
-    cross = F.explode(
-        F.flatten(
-            F.transform(
-                "bs",
-                lambda x: F.transform(
-                    "cs", lambda y: F.struct(x.alias("b"), y.alias("c"))
-                ),
-            )
-        )
-    )
     pairs = (
         bucket_lists(
             sh,
@@ -1944,10 +1685,10 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"bs": F.when(doc % 5 == 0, doc), "cs": F.when(doc % 5 != 0, doc)},
             sort=False,
         )
-        .select(cross.alias("p"))
+        .select(cross_pairs("bs", "cs").alias("p"))
         .groupBy(
-            F.col("p.b").alias("new_doc"),
-            F.col("p.c").alias("corpus_doc"),
+            F.col("p.a").alias("new_doc"),
+            F.col("p.b").alias("corpus_doc"),
         )
         .agg(F.count("*").alias("i"))
     )

@@ -727,10 +727,6 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# q_scan_jsonlines round-trip dir, written once per (process, sf_dir)
-_JSONL_CACHE: dict[str, str] = {}
-
-
 @query(
     "q_scan_jsonlines",
     # lossless long/string round-trip, so the source table is the oracle
@@ -742,15 +738,15 @@ def q_scan_jsonlines(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets, API exports). Unlike the reference's pretty-printed multiLine
     files (one JSON doc per whole file, unsplittable), NDJSON splits by
     line offset, so a 100 TB input parallelizes like any text scan.
-    Explicit schema on read — schema inference would be a second full pass."""
-    if sf_dir not in _JSONL_CACHE:
-        dst = run_tmp("jsonlines")
+    Explicit schema on read — schema inference would be a second full pass.
+    The round-trip copy is written once per (process, fixture)."""
+    dst = run_tmp("jsonlines", sf_dir)
+    if not os.path.exists(os.path.join(dst, "_SUCCESS")):
         load_table(spark, sf_dir, "documents").select(
             "doc_id", "lang", "n_chars"
         ).write.mode("overwrite").json(dst)
-        _JSONL_CACHE[sf_dir] = dst
     return spark.read.schema("doc_id long, lang string, n_chars long").json(
-        _JSONL_CACHE[sf_dir]
+        dst
     )
 
 

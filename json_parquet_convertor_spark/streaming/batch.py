@@ -268,6 +268,30 @@ def _stream_shuffle(spark: SparkSession, n: int = _STREAM_STATE_PARTITIONS):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+def _drain_to_memory(
+    spark: SparkSession, frame: DataFrame, mode: str
+) -> DataFrame:
+    """Run streaming ``frame`` to its end (``availableNow``) into a memory
+    sink under :func:`_stream_shuffle` and return the sink's rows.
+
+    The sink registers a temp view in the caller's session; the returned
+    frame is resolved from it first and the view is dropped, so repeated
+    calls leave no views (or their driver-held rows) behind."""
+    sink = f"jpc_mem_{uuid.uuid4().hex[:8]}"
+    with _stream_shuffle(spark):
+        q = (
+            frame.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    out = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    return out
+
+
 # File-stream sources need a micro-timestamp parquet directory (the fixture
 # stores TIMESTAMP(NANOS), which the file source can't read directly). The
 # replay copy is written ONCE per (sf_dir, query) per process and reused by
@@ -409,7 +433,6 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     src = _replay_source(spark, sf_dir, "watermark1f", lambda: ev, nfiles=1)
 
-    sink = f"jpc_wm_{uuid.uuid4().hex[:8]}"
     stream = spark.readStream.schema(ev.schema).parquet(src)
     agg = (
         stream.withWatermark("ts", "10 minutes")
@@ -421,16 +444,7 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return _drain_to_memory(spark, agg, "append")
 
 
 @query(
@@ -490,7 +504,6 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    sink = f"jpc_st_{uuid.uuid4().hex[:8]}"
     stream = spark.readStream.schema(ev.schema).parquet(src)
     out = stream.groupBy("user_id").applyInPandasWithState(
         track,
@@ -499,16 +512,7 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    with _stream_shuffle(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return _drain_to_memory(spark, out, "update")
 
 
 @query(
@@ -559,17 +563,7 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("weighted_value"),
         )
     )
-    sink = f"jpc_en_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return _drain_to_memory(spark, agg, "complete")
 
 
 @query(
@@ -707,16 +701,7 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("buy_ts").cast("long").alias("buy_epoch"),
         "value",
     )
-    sink = f"jpc_sj_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    raw = _drain_to_memory(spark, joined, "append")
     # Idempotent sink (r12): exactly-once for an at-least-once stream is
     # always in-flight dedup PLUS an idempotent sink keyed on output
     # identity (a Delta/Iceberg MERGE in production; a keyed distinct on
@@ -737,7 +722,6 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stderr whenever rows were removed (always-on: the memory table is
     # micro-batch sized, the two counts are cheap, and a silent guard is
     # exactly what the advice flags).
-    raw = spark.table(sink)
     deduped = raw.dropDuplicates(
         ["user_id", "click_epoch", "buy_epoch", "value"]
     )
@@ -861,18 +845,7 @@ def q_stream_s3_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "2")
         .parquet(src)
     )
-    sink = f"jpc_s3e_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
-        q = (
-            parse_s3_events(stream)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return _drain_to_memory(spark, parse_s3_events(stream), "append")
 
 
 # ---------------------------------------------------------------------------

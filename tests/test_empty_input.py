@@ -95,16 +95,19 @@ def test_affected_queries_match_on_empty_fixture(
 
 
 def test_write_once_scratch_is_fixture_keyed(spark, empty_dir, sf_dir):
-    """One process, two fixtures: the write-once partitioned layouts
-    (q_scan_pruned, q_scan_merge_schema, q_join_prune_dynamic) must key
-    their scratch dir by fixture, or the empty fixture's layout — written
-    first here, as in a full pytest session — is served to every later
-    fixture (caught r6: q_scan_pruned returned 0 rows at sf0.01 after
-    test_empty_input had populated the unkeyed dir)."""
+    """One process, two fixtures: the write-once layouts (q_scan_pruned,
+    q_scan_merge_schema, q_join_prune_dynamic, the q_scan_jsonlines
+    round-trip copy) must key their scratch dir by fixture, or the empty
+    fixture's layout — written first here, as in a full pytest session —
+    is served to every later fixture (caught r6: q_scan_pruned returned 0
+    rows at sf0.01 after test_empty_input had populated the unkeyed dir).
+    The third call goes back to the empty fixture: a write-once dir keyed
+    in memory but not on disk serves it the previous fixture's rows."""
     for name in ("q_scan_pruned", "q_scan_merge_schema",
-                 "q_join_prune_dynamic"):
+                 "q_join_prune_dynamic", "q_scan_jsonlines"):
         assert registry.QUERIES[name](spark, empty_dir).count() == 0
         assert registry.QUERIES[name](spark, sf_dir).count() > 0, name
+        assert registry.QUERIES[name](spark, empty_dir).count() == 0, name
 
 
 def test_kmeans_returns_empty_cleanly(spark, empty_dir):

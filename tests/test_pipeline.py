@@ -375,7 +375,7 @@ def test_sim_pairs_lsh_cosines_buckets_and_order_verified(spark, sf_dir):
     (cos_sim DESC, vec_a, vec_b) over what the buckets admitted."""
     import numpy as np
 
-    from json_parquet_convertor_spark.operators.llm import _srp_hyperplanes
+    from json_parquet_convertor_spark.operators.llm import _LSH_BITS, SRP_PLANES
     from json_parquet_convertor_spark.sources.io import load_table
 
     rows = registry.QUERIES["q_sim_pairs_lsh"](spark, sf_dir).collect()
@@ -385,7 +385,7 @@ def test_sim_pairs_lsh_cosines_buckets_and_order_verified(spark, sf_dir):
         r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
         for r in load_table(spark, sf_dir, "embeddings").collect()
     }
-    planes = _srp_hyperplanes()
+    planes = SRP_PLANES[:_LSH_BITS]
 
     def bucket(v):
         bits = (planes @ v >= 0).astype(int)

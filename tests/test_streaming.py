@@ -664,3 +664,31 @@ def test_stream_shuffle_caps_state_shards_at_task_slots(spark):
     with _stream_shuffle(spark, 1):
         assert int(spark.conf.get(key)) == 1
     assert spark.conf.get(key) == before
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_stream_watermark",
+        "q_stream_stateful",
+        "q_stream_enrich",
+        "q_stream_join",
+        "q_stream_s3_events",
+    ],
+)
+def test_memory_sink_streams_leave_no_views(spark, sf_dir, name):
+    """A memory sink registers a temp view holding its rows on the driver;
+    repeated calls must not pile those views up in the caller's session,
+    and the returned frame must still read after its view is gone."""
+    from json_parquet_convertor_spark import registry
+
+    def views():
+        return sorted(t.name for t in spark.catalog.listTables())
+
+    before = views()
+    first = registry.QUERIES[name](spark, sf_dir).count()
+    second = registry.QUERIES[name](spark, sf_dir).count()
+    assert views() == before
+    assert first == second
+    # the test fixture has no click→purchase pair for q_stream_join
+    assert first > 0 or name == "q_stream_join"
