@@ -1288,10 +1288,10 @@ def q_text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     guard as q_dedup_ngram_jaccard: the index is a SET per doc, so
     re-delivered copies dedup before indexing (containment c/n is
     otherwise inflated asymmetrically around the 0.5 threshold)."""
+    sh, sizes = shingle_index(spark, sf_dir)
     # directed variant of q_dedup_ngram_jaccard's emission: each bucket's
     # list emits BOTH orientations in-row (x≠y over the list ≡ the
     # a.doc_id != b.doc_id join), at most df² pairs per bucket
-    sh, sizes = shingle_index(spark, sf_dir)
     pairs = (
         bucket_members(sh, ["sh"], "doc_id", STOP_SHINGLE_DF)
         .select(cross_pairs("members", "members").alias("p"))
@@ -1672,10 +1672,10 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexing (set semantics, mirroring the oracle's DISTINCT index)."""
     from pyspark.sql.window import Window
 
+    sh, sizes = shingle_index(spark, sf_dir)
     # one bucket aggregate collects each shingle's batch members and
     # corpus members as two lists (the when() conditions are the batch and
     # corpus filters), and batch×corpus pairs are emitted in-row
-    sh, sizes = shingle_index(spark, sf_dir)
     doc = F.col("doc_id")
     pairs = (
         bucket_lists(
