@@ -81,6 +81,11 @@ _CHANGED_THIS_ROUND: list[str] = [
     "q_sim_pairs_lsh",
     # The round-trip copy is keyed by fixture on disk:
     "q_scan_jsonlines",
+    # The write-once layouts go through sources.io.materialize, keyed on
+    # the fixture's table stamps (the replay streams above do too):
+    "q_join_prune_dynamic",
+    "q_scan_pruned",
+    "q_scan_merge_schema",
 ]
 
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))

@@ -59,8 +59,11 @@ _SPLIT_QUERIES = (
 def _make_split_dir(spark, sf_dir: str) -> str:
     """One-time repartition(32) copies of the big tables (lineitem,
     documents); every other table is symlinked unchanged."""
-    from json_parquet_convertor_spark.operators.relational import run_tmp
-    from json_parquet_convertor_spark.sources.io import TABLES, load_table
+    from json_parquet_convertor_spark.sources.io import (
+        TABLES,
+        load_table,
+        run_tmp,
+    )
 
     split = run_tmp("bench_split")
     os.makedirs(split, exist_ok=True)

@@ -20,7 +20,7 @@ from pyspark.sql.window import Window
 
 from json_parquet_convertor_spark.exact import dsum, fday, fsec
 from json_parquet_convertor_spark.registry import query
-from json_parquet_convertor_spark.sources.io import load_table, spread
+from json_parquet_convertor_spark.sources.io import load_table, materialize, spread
 
 
 @query(
@@ -510,7 +510,7 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     The ``merge`` hint opts out of the broadcast that AQE would otherwise
     pick for the small test dim — at 100 TB customer outgrows broadcast
     and this bucketed plan is exactly what you want already in place."""
-    from json_parquet_convertor_spark.operators.relational import _RUN_TOKEN, run_tmp
+    from json_parquet_convertor_spark.sources.io import _RUN_TOKEN, run_tmp
 
     # Stable per-process names + overwrite mode: repeated invocations (bench
     # reps, verify sweeps) reuse the same two catalog entries and scratch dir
@@ -920,23 +920,18 @@ def q_join_prune_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is THE mechanism that turns "join fact to a filtered
     dim" into "read 1% of the fact table": static pruning can't see
     through the join, and without DPP the scan reads every partition.
-    The partitioned copy is written once per process (not per call) —
-    layout jobs are amortized across every query that reads them."""
-    import os
-
-    from json_parquet_convertor_spark.operators.relational import run_tmp
-
-    dest = run_tmp("dpp_orders", sf_dir)
+    The partitioned copy is written once per fixture stamp (not per call)
+    — layout jobs are amortized across every query that reads them."""
     monthly = load_table(spark, sf_dir, "orders").withColumn(
         "o_month", F.date_format("o_orderdate", "yyyy-MM")
     )
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-        (
-            monthly
-            .write.partitionBy("o_month")
-            .mode("overwrite")
-            .parquet(dest)
-        )
+    dest = materialize(
+        "dpp_orders",
+        sf_dir,
+        lambda d: monthly.write.partitionBy("o_month")
+        .mode("overwrite")
+        .parquet(d),
+    )
     # explicit schema: an empty partitioned write has no month dirs to
     # infer from (r6 empty-fixture sweep); DPP still fires on the
     # declared partition column

@@ -950,7 +950,8 @@ def q_text_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # df must be a DISTINCT count, as in the oracle: a doc_id carrying two
     # texts of different token counts (a conflicting re-delivery) puts two
     # (doc_id, term) rows into tf, one per doc_len, and a NULL doc_id is
-    # no document
+    # no document: a term seen only under NULL doc_ids has df 0, and its
+    # score is NULL, as in the oracle (try_divide, not an ANSI error)
     df = tf.groupBy("term").agg(
         F.countDistinct("doc_id").cast("bigint").alias("df")
     )
@@ -973,7 +974,7 @@ def q_text_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             "term",
             (
                 (F.col("tf").cast("double") / F.col("doc_len"))
-                * F.log(F.col("n_docs").cast("double") / F.col("df"))
+                * F.log(F.try_divide(F.col("n_docs").cast("double"), "df"))
             ).alias("score"),
         )
     )

@@ -8,12 +8,7 @@ TakeOrderedAndProject.
 
 from __future__ import annotations
 
-import atexit
-import hashlib
 import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,8 +17,10 @@ from json_parquet_convertor_spark import convert
 from json_parquet_convertor_spark.registry import query
 from json_parquet_convertor_spark.sources.io import (
     load_table,
+    materialize,
     read_csv,
     read_json,
+    run_tmp,
     write_csv,
     write_parquet,
 )
@@ -31,33 +28,6 @@ from json_parquet_convertor_spark.sources.io import (
 # ---------------------------------------------------------------------------
 # B1 — scans / sources / sinks
 # ---------------------------------------------------------------------------
-
-# Per-process unique token so concurrent harness runs (driver verify + local
-# pytest) never collide on the same scratch directories.
-_RUN_TOKEN = f"{os.getpid()}_{uuid.uuid4().hex[:8]}"
-
-# The whole per-process scratch tree is removed at interpreter exit so sink /
-# round-trip queries never leak /tmp data across runs.
-atexit.register(
-    shutil.rmtree,
-    os.path.join(tempfile.gettempdir(), f"jpc_{_RUN_TOKEN}"),
-    ignore_errors=True,
-)
-
-
-def run_tmp(name: str, sf_dir: str | None = None) -> str:
-    """Per-run-unique scratch dir for sink/round-trip queries.
-
-    Pass ``sf_dir`` for any WRITE-ONCE layout derived from a fixture
-    table: the process token alone is not enough when one process runs
-    several fixtures (a full pytest session runs the empty fixture
-    before the driver one — an unkeyed write-once dir then serves the
-    empty layout to every later fixture)."""
-    if sf_dir is not None:
-        digest = hashlib.md5(sf_dir.encode("utf-8")).hexdigest()[:8]
-        name = f"{name}_{digest}"
-    return os.path.join(tempfile.gettempdir(), f"jpc_{_RUN_TOKEN}", name)
-
 
 @query(
     "q_scan_parquet",
@@ -739,12 +709,15 @@ def q_scan_jsonlines(spark: SparkSession, sf_dir: str) -> DataFrame:
     files (one JSON doc per whole file, unsplittable), NDJSON splits by
     line offset, so a 100 TB input parallelizes like any text scan.
     Explicit schema on read — schema inference would be a second full pass.
-    The round-trip copy is written once per (process, fixture)."""
-    dst = run_tmp("jsonlines", sf_dir)
-    if not os.path.exists(os.path.join(dst, "_SUCCESS")):
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id", "lang", "n_chars"
-        ).write.mode("overwrite").json(dst)
+    The round-trip copy is written once per fixture stamp (materialize)."""
+    dst = materialize(
+        "jsonlines",
+        sf_dir,
+        lambda d: load_table(spark, sf_dir, "documents")
+        .select("doc_id", "lang", "n_chars")
+        .write.mode("overwrite")
+        .json(d),
+    )
     return spark.read.schema("doc_id long, lang string, n_chars long").json(
         dst
     )
@@ -935,10 +908,11 @@ def q_json_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition PRUNING at the scan: orders are laid out hive-partitioned
-    by o_orderstatus (written once per run), and the status filter then
-    never touches non-matching partitions — it resolves against the file
-    LISTING, zero data I/O for pruned branches (plan-asserted: the filter
-    appears under PartitionFilters, not as a data filter).
+    by o_orderstatus (written once per fixture stamp), and the status
+    filter then never touches non-matching partitions — it resolves
+    against the file LISTING, zero data I/O for pruned branches
+    (plan-asserted: the filter appears under PartitionFilters, not as a
+    data filter).
 
     This is the top storage-layout lever at 100 TB: partition by the
     always-filtered low-cardinality column (date, source, status) and
@@ -947,15 +921,14 @@ def q_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     via min/max stats) — real layouts compose both."""
     from json_parquet_convertor_spark.exact import dsum
 
-    part_dir = run_tmp("orders_by_status", sf_dir)
     orders = load_table(spark, sf_dir, "orders")
-    if not os.path.isdir(part_dir):
-        (
-            orders
-            .write.partitionBy("o_orderstatus")
-            .mode("overwrite")
-            .parquet(part_dir)
-        )
+    part_dir = materialize(
+        "orders_by_status",
+        sf_dir,
+        lambda d: orders.write.partitionBy("o_orderstatus")
+        .mode("overwrite")
+        .parquet(d),
+    )
     # explicit schema: an empty partitioned write has nothing to infer
     # from (r6 empty-fixture sweep); partition pruning still applies
     pruned = spark.read.schema(orders.schema).parquet(part_dir).filter(
@@ -1039,8 +1012,7 @@ def q_scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     state pins the merged schema explicitly instead of re-inferring."""
     from json_parquet_convertor_spark.exact import dsum
 
-    base = run_tmp("merge_schema", sf_dir)
-    if not os.path.isdir(base):
+    def write(base: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
         (
             orders.filter(F.col("o_orderkey") % 2 == 0)
@@ -1054,6 +1026,8 @@ def q_scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(os.path.join(base, "v2"))
         )
+
+    base = materialize("merge_schema", sf_dir, write)
     merged = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(base, "v1"), os.path.join(base, "v2")
     )

@@ -40,9 +40,8 @@ from pyspark.sql.window import Window
 
 from json_parquet_convertor_spark import convert
 from json_parquet_convertor_spark.exact import dsum
-from json_parquet_convertor_spark.operators.relational import run_tmp
 from json_parquet_convertor_spark.registry import query
-from json_parquet_convertor_spark.sources.io import load_table
+from json_parquet_convertor_spark.sources.io import load_table, materialize, run_tmp
 
 
 def _win_epoch(col: str) -> F.Column:
@@ -292,29 +291,24 @@ def _drain_to_memory(
     return out
 
 
-# File-stream sources need a micro-timestamp parquet directory (the fixture
-# stores TIMESTAMP(NANOS), which the file source can't read directly). The
-# replay copy is written ONCE per (sf_dir, query) per process and reused by
-# every later invocation — bench reps and verify sweeps pay the setup cost
-# exactly once, and the write itself is parallel (coalesce(4), not 1).
-_REPLAY_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _replay_source(
     spark: SparkSession, sf_dir: str, name: str, build, nfiles: int = 4
 ) -> str:
-    """Materialize ``build()`` as a parquet dir usable as a stream source;
-    memoized per (sf_dir, name) for the process lifetime. ``nfiles=1``
-    pins a SINGLE source file — one data micro-batch under AvailableNow,
-    so watermark-vs-arrival-order effects cannot occur (q_stream_watermark's
-    promoted oracle depends on that determinism)."""
-    key = (sf_dir, name)
-    if key not in _REPLAY_CACHE:
-        safe = sf_dir.strip("/").replace("/", "_")
-        path = run_tmp(os.path.join("replay", safe, name))
-        build().coalesce(nfiles).write.mode("overwrite").parquet(path)
-        _REPLAY_CACHE[key] = path
-    return _REPLAY_CACHE[key]
+    """Write ``build()`` once as a parquet dir usable as a stream source
+    (the fixture stores TIMESTAMP(NANOS), which the file source can't read
+    directly). The copy follows the one freshness rule for everything
+    derived from a fixture (``sources.io.materialize``): it is rewritten
+    only when a table stamp under ``sf_dir`` changes, so bench reps and
+    verify sweeps pay the write once and a rewritten fixture never replays
+    old rows. ``nfiles=1`` pins a SINGLE source file — one data
+    micro-batch under AvailableNow, so watermark-vs-arrival-order effects
+    cannot occur (q_stream_watermark's promoted oracle depends on that
+    determinism)."""
+    return materialize(
+        os.path.join("replay", name),
+        sf_dir,
+        lambda d: build().coalesce(nfiles).write.mode("overwrite").parquet(d),
+    )
 
 
 # The stream's sink read-back is fully determined by the embedded reference

@@ -6,7 +6,13 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# Drive the checkout this script sits in, in the driver and in the Python
+# workers (UDFs and Python data sources import the package there too).
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH", "")) if p
+)
 
 from pyspark.sql import SparkSession
 

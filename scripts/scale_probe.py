@@ -125,7 +125,7 @@ def main() -> int:
     args = ap.parse_args()
 
     from json_parquet_convertor_spark import registry
-    from json_parquet_convertor_spark.operators.relational import run_tmp
+    from json_parquet_convertor_spark.sources.io import run_tmp
     from json_parquet_convertor_spark.session import get_spark
 
     registry.load_all()

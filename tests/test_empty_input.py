@@ -94,7 +94,36 @@ def test_affected_queries_match_on_empty_fixture(
     assert ok, f"{name}: {detail}"
 
 
-def test_write_once_scratch_is_fixture_keyed(spark, empty_dir, sf_dir):
+WRITE_ONCE = (
+    "q_scan_pruned",
+    "q_scan_merge_schema",
+    "q_join_prune_dynamic",
+    "q_scan_jsonlines",
+)
+REPLAYED_STREAMS = (
+    "q_stream_foreachbatch",
+    "q_stream_quality_gate",
+    "q_stream_stateful",
+    "q_stream_s3_events",
+)
+
+
+def _halve_table(path: str) -> None:
+    """Rewrite a fixture table in place with its first half of rows; the
+    new file lands by ``os.replace``, as an atomic producer would land it."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(path)
+    tmp = path + ".rewrite"
+    pq.write_table(table.slice(0, table.num_rows // 2), tmp)
+    if os.path.isdir(path):  # a directory table cannot be replaced by rename
+        shutil.rmtree(path)
+    os.replace(tmp, path)
+
+
+def test_write_once_scratch_is_fixture_keyed(spark, empty_dir, sf_dir, tmp_path):
     """One process, two fixtures: the write-once layouts (q_scan_pruned,
     q_scan_merge_schema, q_join_prune_dynamic, the q_scan_jsonlines
     round-trip copy) must key their scratch dir by fixture, or the empty
@@ -102,12 +131,74 @@ def test_write_once_scratch_is_fixture_keyed(spark, empty_dir, sf_dir):
     is served to every later fixture (caught r6: q_scan_pruned returned 0
     rows at sf0.01 after test_empty_input had populated the unkeyed dir).
     The third call goes back to the empty fixture: a write-once dir keyed
-    in memory but not on disk serves it the previous fixture's rows."""
-    for name in ("q_scan_pruned", "q_scan_merge_schema",
-                 "q_join_prune_dynamic", "q_scan_jsonlines"):
+    in memory but not on disk serves it the previous fixture's rows.
+
+    Then one fixture path rewritten mid-session: a copy of the fixture
+    whose events, lineitem, orders and documents are halved after every
+    copy derived from them was written. The write-once layouts and the
+    streams' replay copies must then match the rewritten tables, not the
+    rows they were first built from."""
+    import shutil
+
+    import duckdb
+
+    from tests.oracle_utils import compare_query, register_duck_views
+
+    for name in WRITE_ONCE:
         assert registry.QUERIES[name](spark, empty_dir).count() == 0
         assert registry.QUERIES[name](spark, sf_dir).count() > 0, name
         assert registry.QUERIES[name](spark, empty_dir).count() == 0, name
+
+    copy = str(tmp_path / "rewritten")
+    shutil.copytree(sf_dir, copy)
+    for name in WRITE_ONCE + REPLAYED_STREAMS:
+        assert registry.QUERIES[name](spark, copy).count() > 0, name
+    for t in ("events", "lineitem", "orders", "documents"):
+        _halve_table(os.path.join(copy, f"{t}.parquet"))
+    con = duckdb.connect()
+    try:
+        register_duck_views(con, copy)
+        for name in WRITE_ONCE + REPLAYED_STREAMS:
+            ok, detail = compare_query(
+                spark, con, registry.QUERIES[name], registry.ORACLES[name],
+                copy,
+            )
+            assert ok, f"{name} after the rewrite: {detail}"
+    finally:
+        con.close()
+
+
+def test_spread_reprobes_only_on_a_stamp_change(spark, tmp_path):
+    """spread() memoizes partition counts by plan hash, which does not see
+    a table rewritten under the same path. A warm load_table hit keeps the
+    counts; a changed table stamp drops them, so the next spread() probes
+    the new layout instead of repartitioning by the old count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from json_parquet_convertor_spark.sources.io import load_table, spread
+
+    target = spark.sparkContext.defaultParallelism
+    table = pa.table(
+        {"r_regionkey": pa.array([0, 1], pa.int64()), "r_name": ["a", "b"]}
+    )
+    path = tmp_path / "region.parquet"
+    path.mkdir()
+    pq.write_table(table, str(path / "part-0.parquet"))
+    sf = str(tmp_path)
+
+    df = load_table(spark, sf, "region")
+    assert spread(df) is not df  # one file: repartitioned up to target
+    memo = spark.__dict__["_jpc_spread_memo"]
+    assert load_table(spark, sf, "region") is df  # warm hit
+    assert spark.__dict__["_jpc_spread_memo"] is memo  # counts kept
+
+    for i in range(1, target):  # enough part files to fill every slot
+        pq.write_table(table, str(path / f"part-{i}.parquet"))
+    fresh = load_table(spark, sf, "region")
+    assert fresh is not df
+    assert spread(fresh) is fresh  # re-probed: target files, no repartition
+    assert fresh.count() == 2 * target
 
 
 def test_kmeans_returns_empty_cleanly(spark, empty_dir):

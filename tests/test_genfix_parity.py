@@ -2182,23 +2182,32 @@ def test_uri_host_rejects_version_marker(spark):
     assert row["ok"] == "crawl-src0.example.com"
 
 
-def test_keywords_df_counts_documents_not_doc_lengths(spark, tmp_path):
+_KEYWORD_DOCS = [
+    (1, "alpha beta gamma"),
+    (1, "alpha beta"),
+    (2, "beta delta delta"),
+    (3, "alpha epsilon"),
+]
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [_KEYWORD_DOCS, _KEYWORD_DOCS + [(None, "zzqx yyqw zzqx")]],
+    ids=["conflict", "null_doc_id"],
+)
+def test_keywords_df_counts_documents_not_doc_lengths(spark, tmp_path, rows):
     """q_text_keywords against its oracle when one doc_id carries two texts
     of different token counts (a conflicting re-delivery): tf then holds
     two rows per shared (doc_id, term), one per doc_len, while the
-    oracle's df is COUNT(DISTINCT doc_id)."""
+    oracle's df is COUNT(DISTINCT doc_id). With a NULL doc_id whose terms
+    no other document carries, those terms have df 0: the oracle scores
+    them NULL, and the engine must not raise DIVIDE_BY_ZERO."""
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from tests.oracle_utils import compare_query
 
-    rows = [
-        (1, "alpha beta gamma"),
-        (1, "alpha beta"),
-        (2, "beta delta delta"),
-        (3, "alpha epsilon"),
-    ]
     n = len(rows)
     table = pa.table(
         {
