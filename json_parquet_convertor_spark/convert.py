@@ -60,9 +60,9 @@ def json_to_parquet(
     """End-to-end A3→A5→A6: read JSON, apply conversion semantics, write
     snappy parquet, return the read-back DataFrame."""
     schema = schema or PERSON_JSON_SCHEMA
-    raw = read_json(spark, src, schema=schema, multiline=True, drop_malformed=True)
+    raw = read_json(spark, src, schema)
     converted = person_to_parquet_df(raw) if schema is PERSON_JSON_SCHEMA else raw
-    write_parquet(converted, dst, compression="snappy")
+    write_parquet(converted, dst)
     # read-back honors the partial-file policy: our own write is
     # commit-protocol-atomic, but a REUSED dst may carry foreign dirt (the
     # reference's non-atomic loop leaves exactly that). It reads under the
@@ -131,9 +131,7 @@ def json_to_parquet_per_file(
     from collections import Counter
 
     schema = schema or PERSON_JSON_SCHEMA
-    raw = read_json(
-        spark, src, schema=schema, multiline=True, drop_malformed=True
-    )
+    raw = read_json(spark, src, schema)
     names = Counter(p.rsplit("/", 1)[-1] for p in raw.inputFiles())
     dup = sorted(n for n, c in names.items() if c > 1)
     if dup:

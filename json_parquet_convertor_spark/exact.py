@@ -148,3 +148,25 @@ def fday(col: Column | str) -> Column:
 def sql_davg(expr: str) -> str:
     """Oracle-side (DuckDB) twin of :func:`davg`."""
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,4))) AS DOUBLE) / COUNT({expr})"
+
+
+#: Knuth's multiplicative constant, the mix of the deterministic id hash
+#: that splits, samples, shards and mixes the corpus in both engines.
+ID_MIX = 2654435761
+
+
+def id_hash(col: str, m: int) -> Column:
+    """INT bucket in ``[0, m)`` of id column ``col``: ``id * ID_MIX mod m``
+    computed reduce-first, ``((id mod m) * (ID_MIX mod m)) mod m``. The
+    congruent form keeps products below 2^40; the naive ``id * ID_MIX``
+    overflows int64 on snowflake-scale ids (``--bigid``), which ANSI Spark
+    turns into an error."""
+    return F.pmod(
+        F.pmod(F.col(col), F.lit(m)) * F.lit(ID_MIX % m), F.lit(m)
+    ).cast("int")
+
+
+def sql_id_hash(col: str, m: int) -> str:
+    """Oracle-side (DuckDB) twin of :func:`id_hash`. DuckDB's ``%`` takes
+    the dividend's sign, so the two agree on non-negative ids."""
+    return f"CAST((({col} % {m}) * {ID_MIX % m}) % {m} AS INT)"

@@ -21,7 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from json_parquet_convertor_spark.exact import fday, fsec
-from json_parquet_convertor_spark.operators.buckets import basket_pairs
+from json_parquet_convertor_spark.operators.buckets import (
+    basket_pairs,
+    duck_basket_pairs,
+)
 from json_parquet_convertor_spark.registry import query
 from json_parquet_convertor_spark.sources.io import load_table, spread
 
@@ -647,17 +650,7 @@ def q_skew_diagnose(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_pairs_copurchase",
-    oracle="""
-    WITH li AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    )
-    SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
-           CAST(COUNT(*) AS BIGINT) AS n_orders
-    FROM li a JOIN li b
-      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    GROUP BY 1, 2
-    HAVING COUNT(*) >= 2
-    """,
+    oracle=f"SELECT part_a, part_b, n_orders FROM {duck_basket_pairs(2)}",
 )
 def q_pairs_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise co-occurrence mining (market-basket / co-citation shape):
@@ -682,15 +675,9 @@ def q_pairs_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_graph_triangles",
-    oracle="""
-    WITH li AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ), e AS (
-        SELECT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM li a JOIN li b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING COUNT(*) >= 2
+    oracle=f"""
+    WITH e AS (
+        SELECT part_a AS pa, part_b AS pb FROM {duck_basket_pairs(2)}
     )
     SELECT CAST((SELECT COUNT(DISTINCT v) FROM (
                SELECT pa AS v FROM e UNION ALL SELECT pb FROM e
@@ -997,7 +984,7 @@ def q_stats_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_pairs_lift",
-    oracle="""
+    oracle=f"""
     WITH li AS (
         SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
     ),
@@ -1007,12 +994,7 @@ def q_stats_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT l_partkey, CAST(COUNT(*) AS BIGINT) AS s FROM li GROUP BY 1
     ),
     pairs AS (
-        SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
-               CAST(COUNT(*) AS BIGINT) AS ab
-        FROM li a JOIN li b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING COUNT(*) >= 3
+        SELECT part_a, part_b, n_orders AS ab FROM {duck_basket_pairs(3)}
     )
     SELECT part_a, part_b, ab,
            round(CAST(ab AS DOUBLE) / sa.s, 4) AS confidence,

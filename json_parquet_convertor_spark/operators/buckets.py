@@ -2,14 +2,16 @@
 
 Near-duplicate search (MinHash bands, SimHash chunks, hyperplane tables,
 the inverted shingle index) and basket mining share one algorithm: rows
-meet only inside a bucket key, never in an all-pairs crossJoin.
+meet only inside a bucket key, never in an all-pairs crossJoin. This
+module states each rule once per engine: the Spark builders first, their
+DuckDB twins (the oracle side) after them.
 
 - One aggregate on the bucket key collapses each bucket to its sorted
   member list, and pairs are emitted in-row: ``i < j`` over the sorted
-  list is exactly the ``a.m < b.m`` bucket self-join. ``collect_list``
-  skips NULL members as the ``<`` predicate does. That costs one
-  exchange on the bucket key, where a bucket self-join plus a pair
-  distinct costs 4-5 per query.
+  list is exactly the ``a.m < b.m`` bucket self-join that the DuckDB twin
+  spells out. ``collect_list`` skips NULL members as the ``<`` predicate
+  does. That costs one exchange on the bucket key, where a bucket
+  self-join plus a pair distinct costs 4-5 per query.
 - Over-dense buckets are excluded from pair emission on both sides: the
   oracles keep ``HAVING COUNT(*) <= cap``, and the Spark side filters on
   the same row count, which counts NULL members too. A boilerplate clique
@@ -21,6 +23,9 @@ meet only inside a bucket key, never in an all-pairs crossJoin.
   (:func:`_screen_hot_buckets`): a collect buffer cannot spill mid-group,
   so filtering after the list is built would still materialize the
   clique's full member array in one task.
+- A NULL bucket key is one bucket, as GROUP BY makes it: the Spark screen
+  matches it null-safely and the DuckDB twin joins on ``IS NOT DISTINCT
+  FROM``.
 - Baskets (:func:`basket_pairs`) have no cap: TPC-H orders hold at most 7
   lines. A pipeline with unbounded baskets caps k before the explode,
   the same guard as the stop-shingle cap.
@@ -103,6 +108,23 @@ def bucket_members(
     return bucket_lists(keyed, key_cols, cap, {"members": F.col(member)})
 
 
+def banded_pairs(
+    keyed: DataFrame, key_cols: list[str], member: str, names: tuple[str, str]
+) -> DataFrame:
+    """The distinct member pairs ``names[0] < names[1]`` that share a
+    bucket (``key_cols``: band index and band key) of at most
+    LSH_BUCKET_CAP rows. A pair colliding in several bands comes out
+    once, and a member repeated in one bucket gives no self pair."""
+    a, b = names
+    return (
+        bucket_members(keyed, key_cols, member, LSH_BUCKET_CAP)
+        .select(sorted_pairs("members").alias("p"))
+        .filter(F.col("p.a") < F.col("p.b"))
+        .select(F.col("p.a").alias(a), F.col("p.b").alias(b))
+        .distinct()
+    )
+
+
 def sorted_pairs(arr: str) -> Column:
     """Explode array column ``arr`` into one ``struct(a, b)`` per element
     pair with ``a`` before ``b``: on a sorted list, every ``a < b`` pair
@@ -156,3 +178,49 @@ def basket_pairs(li: DataFrame, min_orders: int) -> DataFrame:
         .agg(F.count("*").alias("n_orders"))
         .filter(F.col("n_orders") >= min_orders)
     )
+
+
+# ---------------------------------------------------------------------------
+# DuckDB twins
+# ---------------------------------------------------------------------------
+
+
+def duck_banded_pairs(
+    rel: str, member: str, keys: list[str], names: tuple[str, str]
+) -> str:
+    """The oracle side of :func:`banded_pairs` over relation ``rel``, one
+    row per member with one key expression per band (``keys``): an
+    ``occ{i}`` CTE of the band's keys held by at most LSH_BUCKET_CAP rows,
+    then ``cand``, the UNION of the per-band self-joins on ``<``. Splice
+    sites continue the WITH list and join payload back by member."""
+    a, b = names
+    occ = ",\n".join(
+        f"""    occ{i} AS (
+        SELECT {k} AS k FROM {rel} GROUP BY 1
+        HAVING COUNT(*) <= {LSH_BUCKET_CAP}
+    )"""
+        for i, k in enumerate(keys)
+    )
+    cand = "\n        UNION\n".join(
+        f"""        SELECT x.{member} AS {a}, y.{member} AS {b}
+        FROM {rel} x JOIN {rel} y
+          ON x.{k} IS NOT DISTINCT FROM y.{k} AND x.{member} < y.{member}
+        JOIN occ{i} ON x.{k} IS NOT DISTINCT FROM occ{i}.k"""
+        for i, k in enumerate(keys)
+    )
+    return f"{occ},\n    cand AS (\n{cand}\n    )"
+
+
+def duck_basket_pairs(min_orders: int) -> str:
+    """The oracle side of :func:`basket_pairs`, as a parenthesized
+    ``(part_a, part_b, n_orders)`` subquery: the ``l_orderkey`` self-join
+    of the distinct (order, part) lines."""
+    return f"""(
+        WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
+        SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
+               CAST(COUNT(*) AS BIGINT) AS n_orders
+        FROM li a JOIN li b
+          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+        GROUP BY 1, 2
+        HAVING COUNT(*) >= {min_orders}
+    )"""

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from json_parquet_convertor_spark.exact import fsec
+from json_parquet_convertor_spark.exact import fsec, id_hash, sql_id_hash
 from json_parquet_convertor_spark.operators.shingles import (
     _DUCK_TOKENIZED,
     canonical_docs,
@@ -29,13 +29,6 @@ from json_parquet_convertor_spark.operators.shingles import (
 )
 from json_parquet_convertor_spark.registry import query
 from json_parquet_convertor_spark.sources.io import load_table, spread
-
-# Knuth multiplicative mix — same constant as sampling.py so shard
-# assignment is consistent across the whole pipeline. Always applied
-# REDUCE-FIRST ((id % m) * (MIX % m)) % m: identical output, but products
-# stay far inside int64 even for snowflake-scale ids (--bigid axis),
-# where the naive id * MIX overflows and hard-errors under ANSI Spark.
-_MIX = 2654435761
 
 # tokens per packed training sequence
 _PACK = 512
@@ -46,7 +39,7 @@ _PACK = 512
     oracle=f"""
     WITH d AS (
         SELECT doc_id,
-               CAST(((doc_id % 8) * {_MIX % 8}) % 8 AS INT) AS shard,
+               {sql_id_hash('doc_id', 8)} AS shard,
                CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
         FROM documents
     ), o AS (
@@ -83,9 +76,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
-        F.pmod(
-            F.pmod(F.col("doc_id"), F.lit(8)) * F.lit(_MIX % 8), F.lit(8)
-        ).cast("int").alias("shard"),
+        id_hash("doc_id", 8).alias("shard"),
         F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
     )
     w = (
@@ -416,10 +407,10 @@ def q_text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(20 + (TRY_CAST(SUBSTR(source, 4) AS INT) * 13) % 75 AS INT)
                AS rate_pct,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(CASE WHEN ((doc_id % 100) * {_MIX % 100}) % 100
+           CAST(SUM(CASE WHEN {sql_id_hash('doc_id', 100)}
                               < 20 + (TRY_CAST(SUBSTR(source, 4) AS INT) * 13) % 75
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-           CAST(SUM(CASE WHEN ((doc_id % 100) * {_MIX % 100}) % 100
+           CAST(SUM(CASE WHEN {sql_id_hash('doc_id', 100)}
                               < 20 + (TRY_CAST(SUBSTR(source, 4) AS INT) * 13) % 75
                          THEN n_chars ELSE 0 END) AS BIGINT) AS kept_chars
     FROM documents
@@ -446,9 +437,7 @@ def q_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(20)
         + (F.expr("try_cast(substring(source, 4, 10) AS INT)") * 13) % 75
     ).cast("int")
-    keep = F.pmod(
-        F.pmod(F.col("doc_id"), F.lit(100)) * F.lit(_MIX % 100), F.lit(100)
-    ) < rate
+    keep = id_hash("doc_id", 100) < rate
     return docs.groupBy("source").agg(
         F.first(rate).alias("rate_pct"),
         F.count("*").alias("n_docs"),

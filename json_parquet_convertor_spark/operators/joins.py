@@ -513,8 +513,9 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_parquet_convertor_spark.sources.io import _RUN_TOKEN, run_tmp
 
     # Stable per-process names + overwrite mode: repeated invocations (bench
-    # reps, verify sweeps) reuse the same two catalog entries and scratch dir
-    # instead of accumulating uuid-suffixed ones per call.
+    # reps, verify sweeps) reuse the same two catalog entries instead of
+    # accumulating uuid-suffixed ones per call; each call's files go to its
+    # own scratch dir.
     t_orders, t_cust = f"jpc_orders_b_{_RUN_TOKEN}", f"jpc_cust_b_{_RUN_TOKEN}"
     base = run_tmp("bucketed")
 

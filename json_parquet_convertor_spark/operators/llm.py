@@ -21,9 +21,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from json_parquet_convertor_spark.operators.buckets import (
-    LSH_BUCKET_CAP,
-    bucket_members,
-    sorted_pairs,
+    banded_pairs,
+    duck_banded_pairs,
 )
 from json_parquet_convertor_spark.operators.shingles import (
     duck_shingles,
@@ -122,21 +121,8 @@ _DN_BAND_KEYS = ",\n           ".join(
     " || ".join(f"h{b * _MH_R + r}" for r in range(_MH_R)) + f" AS k{b}"
     for b in range(_MH_B)
 )
-_DN_OCC_SQL = ",\n".join(
-    f"""    occ{b} AS (
-        SELECT k{b} AS k FROM bands GROUP BY 1
-        HAVING COUNT(*) <= {LSH_BUCKET_CAP}
-    )"""
-    for b in range(_MH_B)
-)
-
-_DN_CAND_SQL = "\n        UNION\n".join(
-    f"""        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               a.sig AS sa, b.sig AS sb
-        FROM bands a JOIN bands b
-          ON a.k{b} = b.k{b} AND a.doc_id < b.doc_id
-        JOIN occ{b} ON a.k{b} = occ{b}.k"""
-    for b in range(_MH_B)
+_DN_CAND_SQL = duck_banded_pairs(
+    "bands", "doc_id", [f"k{b}" for b in range(_MH_B)], ("doc_a", "doc_b")
 )
 
 
@@ -160,17 +146,19 @@ _DN_CAND_SQL = "\n        UNION\n".join(
            {_DN_BAND_KEYS}
         FROM sig
     ),
-{_DN_OCC_SQL},
-    cand AS (
 {_DN_CAND_SQL}
-    )
     SELECT doc_a, doc_b, est_jaccard FROM (
         SELECT doc_a, doc_b,
                round(list_sum(list_transform(
                    generate_series(1, {_MH_K}),
                    i -> CASE WHEN sa[i] = sb[i] THEN 1 ELSE 0 END))
                    / {_MH_K}.0, 4) AS est_jaccard
-        FROM cand
+        FROM (
+            SELECT c.doc_a, c.doc_b, a.sig AS sa, b.sig AS sb
+            FROM cand c
+            JOIN bands a ON c.doc_a = a.doc_id
+            JOIN bands b ON c.doc_b = b.doc_id
+        )
     )
     WHERE est_jaccard >= 0.5
     """,
@@ -225,14 +213,9 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the lists hold only doc_ids; signatures join back per deduped pair
     cand = (
-        bucket_members(
-            bands, ["band_idx", "band_hash"], "doc_id", LSH_BUCKET_CAP
+        banded_pairs(
+            bands, ["band_idx", "band_hash"], "doc_id", ("doc_a", "doc_b")
         )
-        .select(sorted_pairs("members").alias("p"))
-        .select(
-            F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b")
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
         .join(sa, "doc_a")
         .join(sb, "doc_b")
     )

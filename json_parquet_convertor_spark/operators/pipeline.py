@@ -15,12 +15,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from json_parquet_convertor_spark.operators.buckets import (
-    LSH_BUCKET_CAP,
     STOP_SHINGLE_DF,
+    banded_pairs,
     basket_pairs,
     bucket_lists,
     bucket_members,
     cross_pairs,
+    duck_banded_pairs,
+    duck_basket_pairs,
     sorted_pairs,
 )
 from json_parquet_convertor_spark.operators.llm import (
@@ -121,21 +123,8 @@ _SH_CHUNK_LIST = "[" + ", ".join(
     + ")"
     for c in range(8)
 ) + "]"
-_SH_OCC_SQL = ",\n".join(
-    f"""    occ{c} AS (
-        SELECT ch[{c + 1}] AS k FROM chunks GROUP BY 1
-        HAVING COUNT(*) <= {LSH_BUCKET_CAP}
-    )"""
-    for c in range(8)
-)
-
-_SH_CAND_SQL = "\n        UNION\n".join(
-    f"""        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               a.ch AS ca, b.ch AS cb
-        FROM chunks a JOIN chunks b
-          ON a.ch[{c + 1}] = b.ch[{c + 1}] AND a.doc_id < b.doc_id
-        JOIN occ{c} ON a.ch[{c + 1}] = occ{c}.k"""
-    for c in range(8)
+_SH_CAND_SQL = duck_banded_pairs(
+    "chunks", "doc_id", [f"ch[{c + 1}]" for c in range(8)], ("doc_a", "doc_b")
 )
 
 
@@ -159,16 +148,18 @@ _SH_CAND_SQL = "\n        UNION\n".join(
     chunks AS (
         SELECT doc_id, {_SH_CHUNK_LIST} AS ch FROM votes
     ),
-{_SH_OCC_SQL},
-    cand AS (
 {_SH_CAND_SQL}
-    )
     SELECT doc_a, doc_b, hamming FROM (
         SELECT doc_a, doc_b,
                CAST(list_sum(list_transform(
                    generate_series(1, 8),
                    i -> bit_count(xor(ca[i], cb[i])))) AS BIGINT) AS hamming
-        FROM cand
+        FROM (
+            SELECT c.doc_a, c.doc_b, a.ch AS ca, b.ch AS cb
+            FROM cand c
+            JOIN chunks a ON c.doc_a = a.doc_id
+            JOIN chunks b ON c.doc_b = b.doc_id
+        )
     )
     WHERE hamming <= 7
     """,
@@ -209,15 +200,8 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the lists hold only doc_ids: sorting structs that carry the ch
     # arrays measured slower than joining the fingerprints back per
     # deduped pair (5.93 s vs 5.22 s at sf0.1)
-    cand = (
-        bucket_members(
-            chunks, ["chunk_idx", "chunk"], "doc_id", LSH_BUCKET_CAP
-        )
-        .select(sorted_pairs("members").alias("p"))
-        .select(
-            F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b")
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
+    cand = banded_pairs(
+        chunks, ["chunk_idx", "chunk"], "doc_id", ("doc_a", "doc_b")
     )
     fa = fps.select(F.col("doc_id").alias("doc_a"), F.col("ch").alias("ca"))
     fb = fps.select(F.col("doc_id").alias("doc_b"), F.col("ch").alias("cb"))
@@ -392,20 +376,8 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DE_TABLES = [SRP_PLANES[t * 8:t * 8 + 8] for t in range(4)]
 _DE_BUCKET_SQL = [srp_bucket_sql(planes) for planes in _DE_TABLES]
 
-_DE_OCC_SQL = ",\n".join(
-    f"""    occ{t} AS (
-        SELECT b{t} AS k FROM s GROUP BY 1
-        HAVING COUNT(*) <= {LSH_BUCKET_CAP}
-    )"""
-    for t in range(4)
-)
-
-_DE_CAND_SQL = "\n        UNION\n".join(
-    f"""        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-        FROM s a JOIN s b
-          ON a.b{t} = b.b{t} AND a.vec_id < b.vec_id
-        JOIN occ{t} ON a.b{t} = occ{t}.k"""
-    for t in range(4)
+_DE_CAND_SQL = duck_banded_pairs(
+    "s", "vec_id", [f"b{t}" for t in range(4)], ("vec_a", "vec_b")
 )
 
 
@@ -425,10 +397,7 @@ _DE_CAND_SQL = "\n        UNION\n".join(
                {_DE_BUCKET_SQL[3]} AS b3
         FROM e
     ),
-{_DE_OCC_SQL},
-    cand AS (
 {_DE_CAND_SQL}
-    )
     SELECT vec_a, vec_b, cos_sim FROM (
         SELECT c.vec_a, c.vec_b,
                round(
@@ -482,19 +451,10 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # sigs feeds the hot-bucket screen and the list aggregate, so the
     # 32-dot signature pass is cached (tiny rows: id + 2 ints) rather than
-    # recomputed. The a != b guard drops pairs of conflicting
-    # re-deliveries that share a vec_id, as the oracle's strict < does.
-    sigs = sigs.cache()
-    cand = (
-        bucket_members(
-            sigs, ["table_idx", "bucket"], "vec_id", LSH_BUCKET_CAP
-        )
-        .select(sorted_pairs("members").alias("p"))
-        .filter(F.col("p.a") != F.col("p.b"))
-        .select(
-            F.col("p.a").alias("vec_a"), F.col("p.b").alias("vec_b")
-        )
-        .distinct()
+    # recomputed. Conflicting re-deliveries that share a vec_id meet in
+    # one bucket and give no pair: banded_pairs keeps a < b only.
+    cand = banded_pairs(
+        sigs.cache(), ["table_idx", "bucket"], "vec_id", ("vec_a", "vec_b")
     )
 
     # r13 optimization (guide §1.2 don't recompute): the exact-cosine
@@ -2389,20 +2349,13 @@ def q_er_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_graph_bfs",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE
-    basket AS (
-        SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-    ),
-    pairs AS (
-        SELECT a.p AS pa, b.p AS pb, COUNT(*) AS w
-        FROM basket a JOIN basket b ON a.o = b.o AND a.p < b.p
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2
-    ),
+    pairs AS {duck_basket_pairs(2)},
     edges AS (
-        SELECT pa AS src, pb AS dst FROM pairs
+        SELECT part_a AS src, part_b AS dst FROM pairs
         UNION ALL
-        SELECT pb, pa FROM pairs
+        SELECT part_b, part_a FROM pairs
     ),
     reach(node, lvl) AS (
         SELECT CAST(0 AS BIGINT), 0

@@ -811,7 +811,7 @@ def q_scan_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     (path, length, content) row per file, feeding the mapInPandas decode
     operators downstream, q_multimodal_decode).
 
-    Eight deterministic ASCII blobs are staged once per run; the oracle
+    Eight deterministic ASCII blobs are staged per call; the oracle
     reconstructs name/length/md5 arithmetically (same bytes → same md5 hex
     in both engines).
 
@@ -821,12 +821,11 @@ def q_scan_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     many-small-files crawl case. The md5 runs JVM-side on the binary
     column, no Python in the path."""
     src = run_tmp("binary_src")
-    if not os.path.isdir(src):
-        os.makedirs(src, exist_ok=True)
-        for i in range(8):
-            payload = f"blob-{i}:" + "x" * (100 + 17 * i)
-            with open(os.path.join(src, f"blob_{i}.bin"), "wb") as fh:
-                fh.write(payload.encode("ascii"))
+    os.makedirs(src)
+    for i in range(8):
+        payload = f"blob-{i}:" + "x" * (100 + 17 * i)
+        with open(os.path.join(src, f"blob_{i}.bin"), "wb") as fh:
+            fh.write(payload.encode("ascii"))
     files = spark.read.format("binaryFile").load(src)
     return files.select(
         F.element_at(F.split("path", "/"), -1).alias("fname"),

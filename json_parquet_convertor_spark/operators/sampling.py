@@ -19,29 +19,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from json_parquet_convertor_spark.exact import fday, fsec
+from json_parquet_convertor_spark.exact import (
+    ID_MIX,
+    fday,
+    fsec,
+    id_hash,
+    sql_id_hash,
+)
 from json_parquet_convertor_spark.registry import query
 from json_parquet_convertor_spark.sources.io import load_table, spread
-
-# deterministic id → [0, 100) bucket, identical in Spark and DuckDB
-_MIX = 2654435761
-
-
-def _bucket(col: str, mod: int) -> F.Column:
-    return F.pmod(
-        F.pmod(F.col(col), F.lit(mod)) * F.lit(_MIX % mod), F.lit(mod)
-    ).cast("int")
-
-
-def _bucket_sql(col: str, mod: int) -> str:
-    return f"CAST((({col} % {mod}) * {_MIX % mod}) % {mod} AS INT)"
-
 
 @query(
     "q_sample_split",
     oracle=f"""
-    SELECT CASE WHEN {_bucket_sql('doc_id', 100)} < 80 THEN 'train'
-                WHEN {_bucket_sql('doc_id', 100)} < 90 THEN 'val'
+    SELECT CASE WHEN {sql_id_hash('doc_id', 100)} < 80 THEN 'train'
+                WHEN {sql_id_hash('doc_id', 100)} < 90 THEN 'val'
                 ELSE 'test' END AS split,
            lang,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -57,7 +49,7 @@ def q_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     row between splits — the property that keeps eval sets uncontaminated
     across corpus versions."""
     docs = load_table(spark, sf_dir, "documents")
-    b = _bucket("doc_id", 100)
+    b = id_hash("doc_id", 100)
     split = (
         F.when(b < 80, "train").when(b < 90, "val").otherwise("test")
     )
@@ -70,9 +62,9 @@ def q_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_sample_stratified",
     oracle=f"""
-    SELECT doc_id, lang, {_bucket_sql('doc_id', 100)} AS bucket
+    SELECT doc_id, lang, {sql_id_hash('doc_id', 100)} AS bucket
     FROM documents
-    WHERE {_bucket_sql('doc_id', 100)} < 10
+    WHERE {sql_id_hash('doc_id', 100)} < 10
     """,
 )
 def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,7 +73,7 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection — no shuffle at all; at 100 TB this is how you cut dev
     subsets out of the corpus without a sort or a rand() seed headache."""
     docs = load_table(spark, sf_dir, "documents")
-    b = _bucket("doc_id", 100)
+    b = id_hash("doc_id", 100)
     return docs.select("doc_id", "lang", b.alias("bucket")).filter(
         F.col("bucket") < 10
     )
@@ -90,7 +82,7 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_corpus_shard",
     oracle=f"""
-    SELECT {_bucket_sql('doc_id', 8)} AS shard,
+    SELECT {sql_id_hash('doc_id', 8)} AS shard,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_chars) AS BIGINT) AS total_chars,
            CAST(MIN(doc_id) AS BIGINT) AS min_doc,
@@ -106,7 +98,7 @@ def q_corpus_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids are assigned sequentially; the summary proves it. At scale this
     becomes ``df.write.partitionBy('shard')`` — one output dir per rank."""
     docs = load_table(spark, sf_dir, "documents")
-    return docs.groupBy(_bucket("doc_id", 8).alias("shard")).agg(
+    return docs.groupBy(id_hash("doc_id", 8).alias("shard")).agg(
         F.count("*").alias("n_docs"),
         F.sum("n_chars").alias("total_chars"),
         F.min("doc_id").alias("min_doc"),
@@ -119,8 +111,7 @@ def q_corpus_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH k AS (
         SELECT doc_id, lang, n_chars,
-               pow((CAST(((doc_id % 1000003) * {_MIX % 1000003}) % 1000003
-                         AS DOUBLE) + 1.0)
+               pow((CAST({sql_id_hash('doc_id', 1000003)} AS DOUBLE) + 1.0)
                        / 1000004.0,
                    1.0 / CAST(n_chars AS DOUBLE)) AS es_key
         FROM documents
@@ -159,11 +150,7 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_chars") > 0
     )
     u = (
-        F.pmod(
-            F.pmod(F.col("doc_id"), F.lit(1000003)) * F.lit(_MIX % 1000003),
-            F.lit(1000003),
-        ).cast("double")
-        + F.lit(1.0)
+        id_hash("doc_id", 1000003).cast("double") + F.lit(1.0)
     ) / F.lit(1000004.0)
     es_key = F.pow(u, F.lit(1.0) / F.col("n_chars").cast("double"))
     return (
@@ -198,7 +185,7 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT d.lang,
            CAST(d.n_docs AS BIGINT) AS n_docs,
-           CAST(SUM(CASE WHEN ((doc_id % 1000003) * {_MIX % 1000003}) % 1000003
+           CAST(SUM(CASE WHEN {sql_id_hash('doc_id', 1000003)}
                               < CAST(floor(frac * 1000003) AS BIGINT)
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
            ROUND(MIN(frac), 4) AS keep_frac
@@ -248,10 +235,7 @@ def q_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     # threshold would flip membership (same latent class as the
     # q_rfm_segment day-number fix; frac >= 0 so floor == truncate here)
     kept = (
-        F.pmod(
-            F.pmod(F.col("doc_id"), F.lit(1000003)) * F.lit(_MIX % 1000003),
-            F.lit(1000003),
-        )
+        id_hash("doc_id", 1000003)
         < F.floor(F.col("frac") * 1000003).cast("bigint")
     ).cast("bigint")
     return (
@@ -363,7 +347,7 @@ def _boot_case_sql(u: str) -> str:
     WITH expanded AS (
         SELECT l_returnflag, b,
                (((l_orderkey * 8 + l_linenumber) % 1000003)
-                * {_MIX % 1000003}
+                * {ID_MIX % 1000003}
                 + b * {_BOOT_MIX2}) % 1000003 AS h1,
                l_extendedprice
         FROM lineitem CROSS JOIN (
@@ -372,7 +356,7 @@ def _boot_case_sql(u: str) -> str:
     ),
     weighted AS (
         SELECT l_returnflag, b AS rep,
-               (h1 * {_MIX}) % 1000000 / 1000000.0 AS u,
+               (h1 * {ID_MIX}) % 1000000 / 1000000.0 AS u,
                l_extendedprice
         FROM expanded
     ),
@@ -454,12 +438,12 @@ def q_sample_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_extendedprice",
         F.col("b"),
         F.pmod(
-            F.pmod(F.col("rid"), F.lit(1000003)) * (_MIX % 1000003)
+            F.pmod(F.col("rid"), F.lit(1000003)) * (ID_MIX % 1000003)
             + F.col("b") * _BOOT_MIX2,
             F.lit(1000003),
         ).alias("h1"),
     )
-    u = F.pmod(F.col("h1") * _MIX, F.lit(1000000)) / 1000000.0
+    u = F.pmod(F.col("h1") * ID_MIX, F.lit(1000000)) / 1000000.0
     rep = F.col("b")
     w = F.lit(8)
     for k in range(len(_POIS_CDF) - 1, -1, -1):

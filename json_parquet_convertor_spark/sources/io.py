@@ -137,17 +137,22 @@ atexit.register(shutil.rmtree, _RUN_ROOT, ignore_errors=True)
 
 
 def run_tmp(name: str, sf_dir: str | None = None) -> str:
-    """Per-run scratch dir for sink and round-trip queries.
+    """Scratch dir under the run root for sink and round-trip queries.
 
-    Pass ``sf_dir`` for anything derived from a fixture: the directory is
-    then keyed by the fixture path and the :func:`_stamp` of every table in
-    :data:`TABLES`, so another fixture, or the same fixture rewritten in
-    place, gets a fresh directory instead of the old copy."""
-    if sf_dir is not None:
-        stamps = [_stamp(f"{sf_dir}/{t}.parquet") for t in TABLES]
-        digest = hashlib.md5(repr((sf_dir, stamps)).encode()).hexdigest()
-        name = f"{name}_{digest[:8]}"
-    return os.path.join(_RUN_ROOT, name)
+    Without ``sf_dir`` every call gets a fresh directory: a query returns
+    a frame that reads its own output back lazily, so a later call that
+    rewrote the same directory would delete the files under that frame.
+
+    Pass ``sf_dir`` for write-once copies derived from a fixture
+    (:func:`materialize`): the directory is then keyed by the fixture path
+    and the :func:`_stamp` of every table in :data:`TABLES`, so another
+    fixture, or the same fixture rewritten in place, gets a fresh
+    directory instead of the old copy."""
+    if sf_dir is None:
+        return os.path.join(_RUN_ROOT, f"{name}_{uuid.uuid4().hex}")
+    stamps = [_stamp(f"{sf_dir}/{t}.parquet") for t in TABLES]
+    digest = hashlib.md5(repr((sf_dir, stamps)).encode()).hexdigest()
+    return os.path.join(_RUN_ROOT, f"{name}_{digest[:8]}")
 
 
 def materialize(name: str, sf_dir: str, write: Callable[[str], None]) -> str:
@@ -478,41 +483,34 @@ def spread(df: DataFrame) -> DataFrame:
 
 
 def read_json(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str | None = None,
-    multiline: bool = True,
-    drop_malformed: bool = True,
+    spark: SparkSession, path: str, schema: StructType
 ) -> DataFrame:
     """JSON reader with the reference's input shape (A3/A4).
 
     The reference's inputs are pretty-printed single-object files
-    (``sample_json/person2.json``), hence ``multiLine``. An explicit schema
-    reproduces "unknown keys dropped"; ``DROPMALFORMED`` reproduces
+    (``sample_json/person2.json``), hence ``multiLine``. The explicit
+    schema reproduces "unknown keys dropped"; ``DROPMALFORMED`` reproduces
     "type mismatch → skip file" (``convertor/convertor.go:137-141``).
     """
-    reader = spark.read.option("multiLine", str(multiline).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    if drop_malformed:
-        reader = reader.option("mode", "DROPMALFORMED")
-    return reader.json(path)
+    return (
+        spark.read.option("multiLine", "true")
+        .schema(schema)
+        .option("mode", "DROPMALFORMED")
+        .json(path)
+    )
 
 
 def write_parquet(
-    df: DataFrame,
-    path: str,
-    compression: str = "snappy",
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
+    df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
-    """Parquet sink matching the reference's (A6): snappy, dictionary-encoded.
+    """Parquet sink matching the reference's (A6): snappy, dictionary-encoded,
+    overwriting ``path``.
 
     The reference fixes a 16 MiB row-group target (``convertor/convertor.go:180``);
     Spark's default 128 MiB ``parquet.block.size`` is the right call at scale —
     fewer, larger row groups scan faster. Dictionary encoding is on by default.
     """
-    writer = df.write.mode(mode).option("compression", compression)
+    writer = df.write.mode("overwrite").option("compression", "snappy")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

@@ -348,7 +348,7 @@ def q_stream_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference sample persons, schema-enforced and zero-filled — so the
     DuckDB twin states those rows inline (the q_s3_event_parse pattern),
     generated from the SAME ``convert.SAMPLE_PERSONS`` source of truth."""
-    base = os.path.join(run_tmp("stream_convert"), uuid.uuid4().hex[:8])
+    base = run_tmp("stream_convert")
     src = convert.write_sample_json(os.path.join(base, "json"))
     out = os.path.join(base, "parquet")
     ckpt = os.path.join(base, "ckpt")
@@ -763,7 +763,7 @@ def q_stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("user_id", "value")
     src = _replay_source(spark, sf_dir, "fbatch", lambda: ev)
 
-    base = os.path.join(run_tmp("stream_fbatch"), uuid.uuid4().hex[:8])
+    base = run_tmp("stream_fbatch")
     out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
 
     def _fb(batch_df: DataFrame, batch_id: int) -> None:
@@ -883,7 +883,7 @@ def q_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_quantity", "l_returnflag"
     )
     src = _replay_source(spark, sf_dir, "qgate", lambda: li)
-    base = os.path.join(run_tmp("stream_qgate"), uuid.uuid4().hex[:8])
+    base = run_tmp("stream_qgate")
     good_dir = os.path.join(base, "good")
     quar_dir = os.path.join(base, "quarantine")
     ckpt = os.path.join(base, "ckpt")

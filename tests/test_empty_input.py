@@ -168,6 +168,19 @@ def test_write_once_scratch_is_fixture_keyed(spark, empty_dir, sf_dir, tmp_path)
         con.close()
 
 
+@pytest.mark.parametrize(
+    "name", ["q_sink_partitioned", "q_scan_csv", "q_convert_parquet_json"]
+)
+def test_returned_frame_survives_a_second_call(spark, sf_dir, name):
+    """A sink query writes under run_tmp() and returns a frame that reads
+    its output back lazily. A second call writes to its own directory, so
+    the first frame's files are still there when it is counted."""
+    query = registry.QUERIES[name]
+    first = query(spark, sf_dir)
+    second = query(spark, sf_dir)
+    assert first.count() == second.count() > 0
+
+
 def test_spread_reprobes_only_on_a_stamp_change(spark, tmp_path):
     """spread() memoizes partition counts by plan hash, which does not see
     a table rewritten under the same path. A warm load_table hit keeps the

@@ -249,10 +249,10 @@ def test_join_point_in_time_matches_bruteforce(spark, duck, sf_dir):
 def test_sample_bootstrap_matches_python_resampling(spark, duck, sf_dir):
     """Replicate means and trimmed CI recomputed with the same hash chain
     and Poisson inverse-CDF in pure Python."""
+    from json_parquet_convertor_spark.exact import ID_MIX
     from json_parquet_convertor_spark.operators.sampling import (
         _BOOT_B,
         _BOOT_MIX2,
-        _MIX,
         _POIS_CDF,
     )
 
@@ -266,8 +266,8 @@ def test_sample_bootstrap_matches_python_resampling(spark, duck, sf_dir):
         point[flag][0] += price
         point[flag][1] += 1
         for b in range(_BOOT_B):
-            h1 = (rid * _MIX + b * _BOOT_MIX2) % 1000003
-            u = (h1 * _MIX) % 1000000 / 1000000.0
+            h1 = (rid * ID_MIX + b * _BOOT_MIX2) % 1000003
+            u = (h1 * ID_MIX) % 1000000 / 1000000.0
             w = next(
                 (k for k, c in enumerate(_POIS_CDF) if u < c), 8
             )
