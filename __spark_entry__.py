@@ -92,6 +92,19 @@ _CHANGED_THIS_ROUND: list[str] = [
     "q_sample_temperature",
     "q_pack_sequences",
     "q_corpus_mix",
+    # Term streams, term counts and document frequency come from
+    # operators/terms.py (tfidf's df is now a distinct document count;
+    # q_text_keywords is listed above):
+    "q_text_tfidf",
+    "q_rank_bm25",
+    "q_text_entropy",
+    "q_text_lm_score",
+    "q_text_vocab",
+    "q_text_zipf",
+    "q_text_hapax",
+    "q_agg_freq_items",
+    # The salt is exact.id_hash, an INT:
+    "q_join_salted",
 ]
 
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))

@@ -54,14 +54,10 @@ def person_to_parquet_df(df: DataFrame) -> DataFrame:
     )
 
 
-def json_to_parquet(
-    spark: SparkSession, src: str, dst: str, schema: StructType | None = None
-) -> DataFrame:
+def json_to_parquet(spark: SparkSession, src: str, dst: str) -> DataFrame:
     """End-to-end A3→A5→A6: read JSON, apply conversion semantics, write
     snappy parquet, return the read-back DataFrame."""
-    schema = schema or PERSON_JSON_SCHEMA
-    raw = read_json(spark, src, schema)
-    converted = person_to_parquet_df(raw) if schema is PERSON_JSON_SCHEMA else raw
+    converted = person_to_parquet_df(read_json(spark, src, PERSON_JSON_SCHEMA))
     write_parquet(converted, dst)
     # read-back honors the partial-file policy: our own write is
     # commit-protocol-atomic, but a REUSED dst may carry foreign dirt (the
@@ -90,9 +86,7 @@ def write_sample_json(dirpath: str) -> str:
     return dirpath
 
 
-def json_to_parquet_per_file(
-    spark: SparkSession, src: str, dst: str, schema: StructType | None = None
-) -> DataFrame:
+def json_to_parquet_per_file(spark: SparkSession, src: str, dst: str) -> DataFrame:
     """Reference output-layout parity: ONE single parquet file per input
     JSON file, named ``<input-basename>.parquet`` — the naming convention a
     migrating user of the reference expects (``convertor/convertor.go:171``
@@ -130,13 +124,12 @@ def json_to_parquet_per_file(
     import shutil
     from collections import Counter
 
-    schema = schema or PERSON_JSON_SCHEMA
-    raw = read_json(spark, src, schema)
+    raw = read_json(spark, src, PERSON_JSON_SCHEMA)
     names = Counter(p.rsplit("/", 1)[-1] for p in raw.inputFiles())
     dup = sorted(n for n, c in names.items() if c > 1)
     if dup:
         raise ValueError(f"{src}: several input files share the basename(s) {dup}")
-    converted = person_to_parquet_df(raw) if schema is PERSON_JSON_SCHEMA else raw
+    converted = person_to_parquet_df(raw)
     keyed = converted.withColumn(
         "_key", F.regexp_extract(F.input_file_name(), r"([^/]+)$", 1)
     )

@@ -68,11 +68,6 @@ def dec(col: Column | str, precision: int = 12, scale: int = 2) -> Column:
     return c.cast(f"decimal({precision},{scale})")
 
 
-def sql_dsum(expr: str) -> str:
-    """Oracle-side (DuckDB) twin of :func:`dsum`."""
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,4))) AS DOUBLE)"
-
-
 def _floor_div_micros(c: Column, unit_us: int) -> Column:
     """Exact floor(unix_micros(c) / unit_us) in pure LONG arithmetic.
 
@@ -143,11 +138,6 @@ def fday(col: Column | str) -> Column:
     where per-row expression cost is visible at 100 TB."""
     c = F.col(col) if isinstance(col, str) else col
     return _floor_div_micros(c, 86_400_000_000)
-
-
-def sql_davg(expr: str) -> str:
-    """Oracle-side (DuckDB) twin of :func:`davg`."""
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,4))) AS DOUBLE) / COUNT({expr})"
 
 
 #: Knuth's multiplicative constant, the mix of the deterministic id hash

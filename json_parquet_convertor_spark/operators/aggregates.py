@@ -12,6 +12,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from json_parquet_convertor_spark.exact import davg, dsum, fday, fsec
+from json_parquet_convertor_spark.operators.terms import (
+    duck_term_freq,
+    term_freq,
+)
 from json_parquet_convertor_spark.registry import query
 from json_parquet_convertor_spark.sources.io import load_table, spread
 
@@ -449,13 +453,8 @@ def q_agg_sketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_freq_items",
-    oracle="""
-    WITH toks AS (
-        SELECT unnest(string_split(text, ' ')) AS tok FROM documents
-    ),
-    counts AS (
-        SELECT tok, CAST(COUNT(*) AS BIGINT) AS freq FROM toks GROUP BY tok
-    )
+    oracle=f"""
+    WITH counts AS {duck_term_freq("tok")}
     SELECT tok, freq
     FROM counts
     WHERE freq >= (SELECT SUM(freq) FROM counts) * 0.005
@@ -470,8 +469,7 @@ def q_agg_freq_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     The tf table is cached — it is read twice (total + filter) and at 100 TB
     it is the vocabulary, several orders smaller than the corpus."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(F.split("text", " ")).alias("tok"))
-    counts = toks.groupBy("tok").agg(F.count("*").alias("freq")).cache()
+    counts = term_freq(docs, "tok").cache()
     total = counts.agg(F.sum("freq").alias("n_total"))
     return (
         counts.crossJoin(F.broadcast(total))

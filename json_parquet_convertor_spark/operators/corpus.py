@@ -27,6 +27,7 @@ from json_parquet_convertor_spark.operators.shingles import (
     duck_shingles,
     shingles,
 )
+from json_parquet_convertor_spark.operators.terms import duck_tokens, tokens
 from json_parquet_convertor_spark.registry import query
 from json_parquet_convertor_spark.sources.io import load_table, spread
 
@@ -548,11 +549,8 @@ def q_text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_lm_score",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        FROM documents
-    ),
+    oracle=f"""
+    WITH tok AS {duck_tokens("token")},
     tf AS (SELECT token, COUNT(*) AS tfn FROM tok GROUP BY token),
     tot AS (SELECT SUM(tfn) AS totn FROM tf),
     lp AS (
@@ -590,10 +588,7 @@ def q_text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lp table past a few GB, drop the broadcast hint and this becomes
     a shuffled hash join on token with the same surrounding plan (the
     corpus side then shuffles once; correctness unchanged)."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    tok = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("token")
-    )
+    tok = tokens(spread(load_table(spark, sf_dir, "documents")), "token")
     tf = tok.groupBy("token").agg(F.count("*").alias("tfn"))
     tot = tf.agg(F.sum("tfn").alias("totn"))
     lp = tf.crossJoin(F.broadcast(tot)).select(

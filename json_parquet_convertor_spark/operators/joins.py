@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from json_parquet_convertor_spark.exact import dsum, fday, fsec
+from json_parquet_convertor_spark.exact import dsum, fday, fsec, id_hash
 from json_parquet_convertor_spark.registry import query
 from json_parquet_convertor_spark.sources.io import load_table, materialize, spread
 
@@ -598,13 +598,7 @@ def q_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         "l_extendedprice",
-        # reduce-first mix: (k % n) * (MIX % n) stays inside int64 for
-        # snowflake-scale keys (--bigid) where k * MIX overflows under ANSI
-        F.pmod(
-            F.pmod(F.col("l_orderkey"), F.lit(salt_n))
-            * F.lit(2654435761 % salt_n),
-            F.lit(salt_n),
-        ).alias("salt"),
+        id_hash("l_orderkey", salt_n).alias("salt"),
     )
     joined = li.join(
         F.broadcast(dim_salted),

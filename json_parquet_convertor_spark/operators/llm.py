@@ -28,6 +28,14 @@ from json_parquet_convertor_spark.operators.shingles import (
     duck_shingles,
     shingles,
 )
+from json_parquet_convertor_spark.operators.terms import (
+    DUCK_DOC_FREQ,
+    DUCK_DOC_TERMS,
+    doc_freq,
+    doc_terms,
+    duck_tokens,
+    tokens,
+)
 from json_parquet_convertor_spark.registry import query
 from json_parquet_convertor_spark.sources.io import load_table, spread
 
@@ -280,23 +288,13 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_tfidf",
-    oracle="""
-    WITH terms AS (
-        -- split bound ONCE below the unnest (r11, --longtext): DuckDB,
-        -- like Spark's Generate, re-evaluates an unnest's SIBLING
-        -- projections per OUTPUT row, so an inline len(string_split)
-        -- re-splits the document once per term — O(len²) per doc
-        SELECT doc_id, len(l) AS doc_len, unnest(l) AS term
-        FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)
-    ),
+    oracle=f"""
+    WITH terms AS ({DUCK_DOC_TERMS}),
     tf AS (
         SELECT doc_id, term, doc_len, CAST(COUNT(*) AS BIGINT) AS tf_raw
         FROM terms GROUP BY doc_id, term, doc_len
     ),
-    df AS (
-        SELECT term, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-        FROM terms GROUP BY term
-    ),
+    df AS ({DUCK_DOC_FREQ}),
     n AS (SELECT COUNT(*) AS n_docs FROM documents)
     SELECT tf.doc_id, tf.term, tf.tf_raw, df.df,
            round((tf.tf_raw / tf.doc_len) * ln(n.n_docs / df.df), 4) AS tfidf
@@ -310,35 +308,19 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar joins in as a broadcast literal (crossJoin with a 1-row frame, the
     scale-safe way to attach a global constant)."""
     raw = load_table(spark, sf_dir, "documents")
-    docs = spread(raw)
-    # split bound ONCE before the explode (r11, --longtext): codegen
-    # re-evaluates the Generate's SIBLING projections per OUTPUT row, so
-    # an inline size(split(text)) next to explode(split(text)) re-splits
-    # the document once per term — O(len²) per doc (jstack showed the
-    # straggler task pinned in UTF8String.split under generate_doConsume)
-    terms = docs.select(
-        "doc_id", F.split("text", " ").alias("__w")
-    ).select(
-        "doc_id",
-        F.size("__w").alias("doc_len"),
-        F.explode("__w").alias("term"),
+    tf = (
+        doc_terms(spread(raw))
+        .groupBy("doc_id", "term", "doc_len")
+        .agg(F.count("*").alias("tf_raw"))
     )
-    tf = terms.groupBy("doc_id", "term", "doc_len").agg(
-        F.count("*").alias("tf_raw")
-    )
-    # document frequency derives from tf (already one row per (doc, term)) —
-    # a count, not a second explode+countDistinct pass over the corpus
-    df = tf.groupBy("term").agg(F.count("*").cast("bigint").alias("df"))
-    # r14 (guide §2.4): n_docs counts the UN-spread scan — the same
-    # number, minus the spread() repartition the 1-row branch paid as
-    # its own stage (its empty-ReadSchema scan subtree shared nothing
-    # with the tf branch's, so that exchange never got reused)
+    # n_docs counts the UN-spread scan — the same number, minus the
+    # spread() repartition the 1-row branch would pay as its own stage
     n = raw.agg(F.count("*").alias("n_docs"))
     tfidf = (F.col("tf_raw") / F.col("doc_len")) * F.log(
-        F.col("n_docs") / F.col("df")
+        F.try_divide(F.col("n_docs"), F.col("df"))
     )
     return (
-        tf.join(df, "term")
+        tf.join(doc_freq(tf), "term")
         .crossJoin(F.broadcast(n))
         .select(
             "doc_id",
@@ -627,11 +609,8 @@ def q_multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_rank_bm25",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        FROM documents
-    ),
+    oracle=f"""
+    WITH tok AS {duck_tokens("token")},
     tf AS (
         SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS tf
         FROM tok GROUP BY 1, 2
@@ -696,10 +675,7 @@ def q_rank_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast join per term. Top-20 compiles to TakeOrderedAndProject. A
     thousand-query batch would broadcast a (query_id, term) table instead
     — same plan."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    tok = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("token")
-    )
+    tok = tokens(spread(load_table(spark, sf_dir, "documents")), "token")
     # tf feeds THREE consumers (df, the query-term top-3, and the scoring
     # join) and dl two (corpus stats + scoring) — cache both so the token
     # explode + first aggregation runs once, not per consumer (at scale
@@ -863,22 +839,13 @@ def q_rank_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_keywords",
-    oracle="""
-    WITH terms AS (
-        -- split bound ONCE below the unnest (r11, --longtext): DuckDB,
-        -- like Spark's Generate, re-evaluates an unnest's SIBLING
-        -- projections per OUTPUT row, so an inline len(string_split)
-        -- re-splits the document once per term — O(len²) per doc
-        SELECT doc_id, len(l) AS doc_len, unnest(l) AS term
-        FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)
-    ),
+    oracle=f"""
+    WITH terms AS ({DUCK_DOC_TERMS}),
     tf AS (
         SELECT doc_id, term, doc_len, COUNT(*) AS tf
         FROM terms GROUP BY 1, 2, 3
     ),
-    df AS (
-        SELECT term, COUNT(DISTINCT doc_id) AS df FROM tf GROUP BY 1
-    ),
+    df AS ({DUCK_DOC_FREQ}),
     n AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM terms),
     scored AS (
         SELECT t.doc_id, t.term,
@@ -914,43 +881,20 @@ def q_text_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     in both engines: pure counts through identical op order) with the
     term string as the deterministic tiebreak."""
     raw = load_table(spark, sf_dir, "documents")
-    docs = spread(raw)
-    # split bound ONCE before the explode (r11, --longtext): codegen
-    # re-evaluates the Generate's SIBLING projections per OUTPUT row, so
-    # an inline size(split(text)) next to explode(split(text)) re-splits
-    # the document once per term — O(len²) per doc (jstack showed the
-    # straggler task pinned in UTF8String.split under generate_doConsume)
-    terms = docs.select(
-        "doc_id", F.split("text", " ").alias("__w")
-    ).select(
-        "doc_id",
-        F.size("__w").alias("doc_len"),
-        F.explode("__w").alias("term"),
+    tf = (
+        doc_terms(spread(raw))
+        .groupBy("doc_id", "term", "doc_len")
+        .agg(F.count(F.lit(1)).alias("tf"))
     )
-    tf = terms.groupBy("doc_id", "term", "doc_len").agg(
-        F.count(F.lit(1)).alias("tf")
-    )
-    # df must be a DISTINCT count, as in the oracle: a doc_id carrying two
-    # texts of different token counts (a conflicting re-delivery) puts two
-    # (doc_id, term) rows into tf, one per doc_len, and a NULL doc_id is
-    # no document: a term seen only under NULL doc_ids has df 0, and its
-    # score is NULL, as in the oracle (try_divide, not an ANSI error)
-    df = tf.groupBy("term").agg(
-        F.countDistinct("doc_id").cast("bigint").alias("df")
-    )
-    # r13 optimization (guide §1.2 don't compute what you throw away):
-    # n_docs counted distinct doc_ids over the EXPLODED terms — a third
-    # full tokenize+explode pass of the corpus. The same number falls out
-    # of the un-exploded docs table: explode drops exactly the NULL-text
-    # rows (split(NULL) is NULL; every non-NULL text yields ≥1 token),
-    # and countDistinct skips NULL doc_ids on both shapes. r14: counted
-    # on the UN-spread scan (the same rows; the 1-row branch skips the
-    # spread() repartition stage).
+    # n_docs is the oracle's distinct doc_ids over the terms, counted on
+    # the un-exploded, un-spread scan: explode drops exactly the NULL-text
+    # rows (every non-NULL text yields >= 1 term), and countDistinct
+    # skips NULL doc_ids on both shapes
     n = raw.filter(F.col("text").isNotNull()).agg(
         F.countDistinct("doc_id").alias("n_docs")
     )
     scored = (
-        tf.join(df, "term")
+        tf.join(doc_freq(tf), "term")
         .crossJoin(F.broadcast(n))
         .select(
             "doc_id",

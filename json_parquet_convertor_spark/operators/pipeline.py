@@ -39,6 +39,12 @@ from json_parquet_convertor_spark.operators.shingles import (
     shingle_index,
     shingles,
 )
+from json_parquet_convertor_spark.operators.terms import (
+    duck_term_freq,
+    duck_tokens,
+    term_freq,
+    tokens,
+)
 from json_parquet_convertor_spark.registry import query
 from json_parquet_convertor_spark.sources.io import load_table, spread
 
@@ -491,10 +497,10 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # text analysis: language-ID, quality, tokens, fingerprint
 # ---------------------------------------------------------------------------
 
-# Fixed marker-n-gram profiles (the mechanism of n-gram language-ID; the
-# synthetic corpus shares one vocabulary across langs, so this demonstrates
-# the scoring pipeline, not classifier accuracy).
-_LANG_MARKERS = {"en": " the ", "es": " data ", "zh": " window "}
+# q_text_langid's fixed marker-n-gram profiles (' the ' en, ' data ' es,
+# ' window ' zh) are the mechanism of n-gram language-ID; the synthetic
+# corpus shares one vocabulary across langs, so this demonstrates the
+# scoring pipeline, not classifier accuracy.
 
 
 def _occ_sql(marker: str) -> str:
@@ -927,10 +933,8 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_vocab",
-    oracle="""
-    SELECT term, CAST(COUNT(*) AS BIGINT) AS freq
-    FROM (SELECT unnest(string_split(text, ' ')) AS term FROM documents)
-    GROUP BY term
+    oracle=f"""
+    SELECT term, freq FROM {duck_term_freq()}
     ORDER BY freq DESC, term
     LIMIT 20
     """,
@@ -941,11 +945,8 @@ def q_text_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists, BPE merges, and df-pruning thresholds; at 100 TB the explode +
     count is one linear shuffle on the term and the top-k is
     TakeOrderedAndProject (per-partition heaps)."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
     return (
-        docs.select(F.explode(F.split("text", " ")).alias("term"))
-        .groupBy("term")
-        .agg(F.count("*").alias("freq"))
+        term_freq(spread(load_table(spark, sf_dir, "documents")))
         .orderBy(F.col("freq").desc(), "term")
         .limit(20)
     )
@@ -1738,11 +1739,8 @@ def q_multimodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_entropy",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS t
-        FROM documents
-    ),
+    oracle=f"""
+    WITH tok AS {duck_tokens("t")},
     tf AS (
         SELECT doc_id, t, CAST(COUNT(*) AS BIGINT) AS c
         FROM tok GROUP BY 1, 2
@@ -1774,10 +1772,7 @@ def q_text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     serves the tf groupBy, and the doc-length join is co-partitioned on
     the same key — no second wide exchange. State per doc is its
     distinct-token count."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    tok = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("t")
-    )
+    tok = tokens(spread(load_table(spark, sf_dir, "documents")), "t")
     tf = tok.groupBy("doc_id", "t").agg(F.count("*").alias("c"))
     dl = tf.groupBy("doc_id").agg(F.sum("c").alias("n"))
     p = F.col("c").cast("double") / F.col("n")
@@ -1981,12 +1976,10 @@ def _kmeans_model(spark: SparkSession, sf_dir: str) -> dict | None:
 
 @query(
     "q_text_zipf",
-    oracle="""
+    oracle=f"""
     WITH v AS (
-        SELECT term, CAST(COUNT(*) AS BIGINT) AS freq
-        FROM (SELECT unnest(string_split(text, ' ')) AS term
-              FROM documents)
-        GROUP BY term ORDER BY freq DESC, term LIMIT 100
+        SELECT term, freq FROM {duck_term_freq()}
+        ORDER BY freq DESC, term LIMIT 100
     ),
     r AS (
         SELECT ln(CAST(ROW_NUMBER() OVER (ORDER BY freq DESC, term)
@@ -2026,11 +2019,8 @@ def q_text_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-data pattern (cf. q_rank_rrf)."""
     from pyspark.sql import Window
 
-    docs = spread(load_table(spark, sf_dir, "documents"))
     v = (
-        docs.select(F.explode(F.split("text", " ")).alias("term"))
-        .groupBy("term")
-        .agg(F.count("*").cast("bigint").alias("freq"))
+        term_freq(spread(load_table(spark, sf_dir, "documents")))
         .orderBy(F.col("freq").desc(), "term")
         .limit(100)
     )
@@ -2068,13 +2058,8 @@ def q_text_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_hapax",
-    oracle="""
-    WITH v AS (
-        SELECT term, CAST(COUNT(*) AS BIGINT) AS freq
-        FROM (SELECT unnest(string_split(text, ' ')) AS term
-              FROM documents)
-        GROUP BY term
-    )
+    oracle=f"""
+    WITH v AS {duck_term_freq()}
     SELECT CAST(COUNT(*) AS BIGINT) AS vocab_size,
            CAST(SUM(freq) AS BIGINT) AS n_tokens,
            CAST(SUM(CASE WHEN freq = 1 THEN 1 ELSE 0 END) AS BIGINT)
@@ -2104,12 +2089,7 @@ def q_text_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. The frequency table is the same stage q_text_vocab /
     q_text_zipf build — in a real pipeline it's computed once and these
     scorecards are free."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    v = (
-        docs.select(F.explode(F.split("text", " ")).alias("term"))
-        .groupBy("term")
-        .agg(F.count("*").cast("bigint").alias("freq"))
-    )
+    v = term_freq(spread(load_table(spark, sf_dir, "documents")))
     return v.agg(
         F.count("*").cast("bigint").alias("vocab_size"),
         F.sum("freq").cast("bigint").alias("n_tokens"),

@@ -144,14 +144,3 @@ def lambda_split_violations(df: DataFrame) -> list[str]:
                         hits.append(cls)
                 k += 1
     return hits
-
-
-def assert_scan_pruned(df: DataFrame, must_have: list[str], must_not: list[str]) -> None:
-    """Assert column pruning reached the scan's ReadSchema."""
-    schemas = audit(df)["read_schemas"]
-    assert schemas, "no FileScan ReadSchema found"
-    joined = " ".join(schemas)
-    for col in must_have:
-        assert col in joined, f"{col} missing from ReadSchema: {joined}"
-    for col in must_not:
-        assert col not in joined, f"{col} not pruned from ReadSchema: {joined}"

@@ -16,8 +16,6 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ByteType,
-    DoubleType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -219,30 +217,21 @@ def test_all_malformed_input_quarantine_policy_reads_empty(
 
 
 @_CONVERSIONS
-@pytest.mark.parametrize("caller_schema", [False, True], ids=["default", "caller"])
-def test_read_back_schema_equals_inferred(spark, tmp_path, convert_fn, caller_schema):
+@pytest.mark.parametrize(
+    "record",
+    [{"ID": "1", "name": "A", "nationality": "X", "age": 7}],
+    ids=["default"],
+)
+def test_read_back_schema_equals_inferred(spark, tmp_path, convert_fn, record):
     """The read-back is read under the written frame's schema, not inferred
     from the footers; it must be exactly what inference would give —
-    names, types and nullability — for the default and a caller schema."""
+    names, types and nullability."""
     src = str(tmp_path / "in")
     dst = str(tmp_path / "out")
-    if caller_schema:
-        schema = StructType(
-            [
-                StructField("ID", StringType(), False),
-                StructField("age", LongType(), True),
-                StructField("score", DoubleType(), True),
-            ]
-        )
-        _write(src, "a.json", {"ID": "1", "age": 5, "score": 1.5, "extra": "x"})
-        expected = StructType([StructField(f.name, f.dataType, True) for f in schema])
-    else:
-        schema = None
-        _write(src, "a.json", {"ID": "1", "name": "A", "nationality": "X", "age": 7})
-        expected = _PERSON_PARQUET_SCHEMA
-    back = convert_fn(spark, src, dst, schema=schema)
+    _write(src, "a.json", record)
+    back = convert_fn(spark, src, dst)
     assert back.schema == spark.read.parquet(dst).schema
-    assert back.schema == expected
+    assert back.schema == _PERSON_PARQUET_SCHEMA
     assert back.count() == 1
 
 

@@ -2182,26 +2182,45 @@ def test_uri_host_rejects_version_marker(spark):
     assert row["ok"] == "crawl-src0.example.com"
 
 
-_KEYWORD_DOCS = [
+_TERM_DOCS = [
     (1, "alpha beta gamma"),
     (1, "alpha beta"),
     (2, "beta delta delta"),
     (3, "alpha epsilon"),
 ]
 
+#: the queries built on operators/terms.py
+_TERM_QUERIES = [
+    "q_text_tfidf",
+    "q_text_keywords",
+    "q_rank_bm25",
+    "q_text_entropy",
+    "q_text_lm_score",
+    "q_text_vocab",
+    "q_text_zipf",
+    "q_text_hapax",
+    "q_agg_freq_items",
+]
+
 
 @pytest.mark.parametrize(
     "rows",
-    [_KEYWORD_DOCS, _KEYWORD_DOCS + [(None, "zzqx yyqw zzqx")]],
-    ids=["conflict", "null_doc_id"],
+    [
+        _TERM_DOCS,
+        _TERM_DOCS + [(None, "zzqx yyqw zzqx")],
+        _TERM_DOCS + [(None, "alpha beta")],
+    ],
+    ids=["conflict", "null_doc_id", "null_shared"],
 )
-def test_keywords_df_counts_documents_not_doc_lengths(spark, tmp_path, rows):
-    """q_text_keywords against its oracle when one doc_id carries two texts
-    of different token counts (a conflicting re-delivery): tf then holds
-    two rows per shared (doc_id, term), one per doc_len, while the
-    oracle's df is COUNT(DISTINCT doc_id). With a NULL doc_id whose terms
-    no other document carries, those terms have df 0: the oracle scores
-    them NULL, and the engine must not raise DIVIDE_BY_ZERO."""
+def test_term_queries_match_oracles(spark, tmp_path, rows):
+    """The term-statistics queries against their oracles when one doc_id
+    carries two texts of different token counts (a conflicting
+    re-delivery) and when a NULL doc_id carries text. tf then holds two
+    rows per shared (doc_id, term), one per doc_len, while df is
+    COUNT(DISTINCT doc_id) in the oracles. A NULL doc_id whose terms no
+    other document carries gives those terms df 0: the oracles score them
+    NULL, and the engine must not raise DIVIDE_BY_ZERO. A NULL doc_id
+    sharing its terms adds to tf but not to df."""
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -2221,14 +2240,18 @@ def test_keywords_df_counts_documents_not_doc_lengths(spark, tmp_path, rows):
     path = str(tmp_path / "documents.parquet")
     pq.write_table(table, path)
     con = duckdb.connect()
+    failed = {}
     try:
         con.execute(
             f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')"
         )
-        ok, detail = compare_query(
-            spark, con, registry.QUERIES["q_text_keywords"],
-            registry.ORACLES["q_text_keywords"], str(tmp_path),
-        )
-        assert ok, detail
+        for name in _TERM_QUERIES:
+            ok, detail = compare_query(
+                spark, con, registry.QUERIES[name], registry.ORACLES[name],
+                str(tmp_path),
+            )
+            if not ok:
+                failed[name] = detail
     finally:
         con.close()
+    assert not failed, failed
