@@ -105,6 +105,17 @@ _CHANGED_THIS_ROUND: list[str] = [
     "q_agg_freq_items",
     # The salt is exact.id_hash, an INT:
     "q_join_salted",
+    # The vector rules come from operators/vectors.py (a zero vector's
+    # cosine is NULL; q_dedup_embed and q_sim_pairs_lsh are listed above):
+    "q_sim_cosine_topk",
+    "q_sim_ann_ivf",
+    "q_knn_graph",
+    "q_multimodal_join",
+    "q_embed_pca",
+    "q_embed_whiten",
+    "q_embed_kmeans",
+    "q_embed_pool",
+    "q_embed_quantize",
 ]
 
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))

@@ -378,7 +378,7 @@ def q_fn_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_fn_url",
-    oracle="""
+    oracle=r"""
     -- bad = unparseable: NULL component nulls the whole concat'd URL;
     -- embedded whitespace (--ctrl plants ' src5 ' sources) makes
     -- java.net.URI reject it, which try_parse_url maps to NULL

@@ -25,6 +25,7 @@ from json_parquet_convertor_spark.operators.buckets import (
     basket_pairs,
     duck_basket_pairs,
 )
+from json_parquet_convertor_spark.operators.vectors import finite
 from json_parquet_convertor_spark.registry import query
 from json_parquet_convertor_spark.sources.io import load_table, spread
 
@@ -555,18 +556,14 @@ def q_embed_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     result, never over the data.
 
     Non-finite components (a NaN/Inf from a bad upstream encoder batch —
-    r8 --extreme sweep) are EXCLUDED from the pool per position: one bad
+    the --extreme axis) are EXCLUDED from the pool per position: one bad
     float must not poison the whole centroid (the BIGINT cast of
     floor(NaN*1e9) also errors outright under ANSI on both engines).
     n_vecs therefore counts finite contributions at that position."""
     emb = load_table(spark, sf_dir, "embeddings")
     e = spread(emb).select(
         "label", F.posexplode("embedding").alias("pos0", "val")
-    ).filter(
-        ~F.isnan("val")
-        & (F.col("val") > F.lit(float("-inf")))
-        & (F.col("val") < F.lit(float("inf")))
-    )
+    ).filter(finite(F.col("val")))
     return e.groupBy(
         "label", (F.col("pos0") + 1).cast("int").alias("pos")
     ).agg(

@@ -28,6 +28,7 @@ from json_parquet_convertor_spark.operators.shingles import (
     shingles,
 )
 from json_parquet_convertor_spark.operators.terms import duck_tokens, tokens
+from json_parquet_convertor_spark.operators.vectors import finite
 from json_parquet_convertor_spark.registry import query
 from json_parquet_convertor_spark.sources.io import load_table, spread
 
@@ -301,7 +302,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     operation-for-operation identically in the DuckDB oracle, so the raw
     double `scale` hash-matches bit-for-bit.
 
-    Non-finite components (r8 --extreme sweep) SATURATE like a real int8
+    Non-finite components (the --extreme axis) SATURATE like a real int8
     quantizer's clip stage: NaN -> 0, +Inf -> 127, -Inf -> -127, and the
     scale comes from the max |x| over FINITE components only (an Inf scale
     would zero every finite component; the unguarded INT cast of NaN
@@ -318,17 +319,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = df.withColumn(
         "scale",
         F.coalesce(
-            F.array_max(
-                F.transform(
-                    F.filter(
-                        "e",
-                        lambda x: ~F.isnan(x)
-                        & (x > F.lit(-_inf))
-                        & (x < F.lit(_inf)),
-                    ),
-                    F.abs,
-                )
-            ),
+            F.array_max(F.transform(F.filter("e", finite), F.abs)),
             F.lit(0.0),
         )
         / F.lit(127.0),
@@ -759,7 +750,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_dedup_url",
-    oracle="""
+    oracle=r"""
     WITH u AS (
         -- case variance is synthesized ASCII-ONLY (translate, not
         -- upper): full-vs-simple Unicode case mapping disagrees across

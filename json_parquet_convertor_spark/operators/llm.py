@@ -16,8 +16,7 @@ Scale posture per operator is documented on each query. Common knobs:
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from json_parquet_convertor_spark.operators.buckets import (
@@ -35,6 +34,18 @@ from json_parquet_convertor_spark.operators.terms import (
     doc_terms,
     duck_tokens,
     tokens,
+)
+from json_parquet_convertor_spark.operators.vectors import (
+    SRP_PLANES,
+    cosine,
+    dot,
+    duck_cosine,
+    duck_dot,
+    duck_embedding,
+    embedding,
+    finite,
+    srp_bucket,
+    srp_bucket_sql,
 )
 from json_parquet_convertor_spark.registry import query
 from json_parquet_convertor_spark.sources.io import load_table, spread
@@ -337,29 +348,14 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _dot(a, b):
-    """Higher-order-function dot product — JVM-side, no Python in the path."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-
 @query(
     "q_sim_cosine_topk",
-    oracle="""
+    oracle=f"""
     WITH probe AS (
-        SELECT CAST(embedding AS DOUBLE[]) AS pe
+        SELECT {duck_embedding()} AS pe
         FROM embeddings WHERE vec_id = 0
     )
-    SELECT vec_id, label,
-           round(
-               list_inner_product(CAST(embedding AS DOUBLE[]), pe)
-               / (sqrt(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                          CAST(embedding AS DOUBLE[])))
-                  * sqrt(list_inner_product(pe, pe))), 4) AS cos_sim
+    SELECT vec_id, label, {duck_cosine(duck_embedding(), "pe")} AS cos_sim
     FROM embeddings CROSS JOIN probe
     WHERE vec_id <> 0
     ORDER BY cos_sim DESC, vec_id
@@ -376,21 +372,20 @@ def q_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: brute force IS the right baseline (one linear scan, no state);
     the sub-linear path is q_sim_pairs_lsh's bucketing. Floats widen to
     double before math to match DuckDB exactly."""
-    # r13 optimization (guide §1.2 don't recompute): the probe's self-dot
-    # is a constant of the 1-row broadcast frame — compute it there once
-    # instead of once per corpus row (same fold, bit-equal cosines); the
-    # corpus-side self-dot stays per row, where it is irreducible.
+    # the probe's self-dot is a constant of the 1-row broadcast frame:
+    # computed there once instead of once per corpus row (same fold,
+    # bit-equal cosines)
     emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("e")
+        "vec_id", "label", embedding("e")
     )
     probe = emb.filter(F.col("vec_id") == 0).select(
-        F.col("e").alias("pe"), _dot("e", "e").alias("n2p")
+        F.col("e").alias("pe"), dot("e", "e").alias("n2p")
     )
-    cos = _dot("e", "pe") / (F.sqrt(_dot("e", "e")) * F.sqrt("n2p"))
+    cos = cosine("e", "pe", dot("e", "e"), "n2p")
     return (
         emb.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(probe))
-        .select("vec_id", "label", F.round(cos, 4).alias("cos_sim"))
+        .select("vec_id", "label", cos.alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(10)
     )
@@ -403,50 +398,12 @@ def q_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # space. q_dedup_embed runs 4 tables of 8 planes each.
 _LSH_BITS = 6
 
-#: Deterministic Gaussian hyperplanes (fixed seed 42), one per row, for
-#: 64-dim embeddings: q_sim_pairs_lsh reads rows 0-5, q_dedup_embed's
-#: table t rows 8t to 8t+7.
-SRP_PLANES = np.random.default_rng(42).standard_normal((32, 64))
-
-
-def srp_bucket(col: str, planes) -> Column:
-    """BIGINT bucket key of array column ``col``: bit i is set where its
-    dot with ``planes[i]`` is >= 0."""
-    bits = [
-        F.when(
-            _dot(col, F.array(*[F.lit(float(v)) for v in p])) >= 0,
-            F.lit(1 << i),
-        ).otherwise(F.lit(0))
-        for i, p in enumerate(planes)
-    ]
-    return sum(bits[1:], bits[0]).cast("bigint")
-
-
-def _plane_sql(plane) -> str:
-    """One hyperplane as a DuckDB DOUBLE[] literal. repr() round-trips
-    doubles exactly, so both engines bind bit-identical constants."""
-    return "[" + ", ".join(repr(float(v)) for v in plane) + "]"
-
-
-def srp_bucket_sql(planes) -> str:
-    """:func:`srp_bucket` over the DuckDB column ``e``. Both engines
-    evaluate the identical expression tree over identical double
-    constants with correctly-rounded IEEE ops (sequential in-order dot
-    fold on both sides — the q_sim_cosine_topk precedent), so signs and
-    buckets are bit-equal, which is what lets the SRP queries carry a
-    full value-hash oracle instead of a rows-only check."""
-    return "\n             + ".join(
-        f"(CASE WHEN list_inner_product(e, {_plane_sql(p)}) >= 0 "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(planes)
-    )
-
 
 @query(
     "q_sim_pairs_lsh",
     oracle=f"""
     WITH e AS (
-        SELECT DISTINCT vec_id, CAST(embedding AS DOUBLE[]) AS e
+        SELECT DISTINCT vec_id, {duck_embedding()} AS e
         FROM embeddings
         WHERE embedding IS NOT NULL
     ),
@@ -456,10 +413,7 @@ def srp_bucket_sql(planes) -> str:
         FROM e
     )
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           round(
-               list_inner_product(a.e, b.e)
-               / (sqrt(list_inner_product(a.e, a.e))
-                  * sqrt(list_inner_product(b.e, b.e))), 4) AS cos_sim
+           {duck_cosine("a.e", "b.e")} AS cos_sim
     FROM s a JOIN s b
       ON a.bucket = b.bucket AND a.vec_id < b.vec_id
     ORDER BY cos_sim DESC NULLS LAST, vec_a, vec_b
@@ -482,40 +436,32 @@ def q_sim_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiple independent tables (union of T such plans) and precision by the
     exact-cosine refilter.
 
-    Driver contract (r12 verdict task 2, promoted from rows-only): the
-    hyperplanes are bound as literal double arrays in BOTH engines, the
-    dot products fold sequentially in both (HOF aggregate ↔
-    list_inner_product), and every IEEE op is correctly rounded — so
-    signs, buckets, the candidate pair set, and the 4-dp cosines are
-    bit-equal cross-engine and the oracle is a full value-hash twin of
-    the whole algorithm (candidate rule stated on both sides, the
-    q_dedup_ngram_jaccard df-pruning precedent). Rank-50 ties break on
+    Oracle contract: signs, buckets, the candidate pair set and the 4-dp
+    cosines are bit-equal cross-engine (operators/vectors.py), so the
+    oracle is a full value-hash twin of the whole algorithm, the
+    candidate rule stated on both sides. Rank-50 ties break on
     (vec_a, vec_b) on both sides."""
-    # INGEST GUARD (r12, --rowdup 10x probe): an at-least-once ingest
-    # re-delivers exact copies including vec_id; without the dedup, a
-    # vector duplicated on both sides of the bucket self-join emits the
-    # SAME (vec_a, vec_b) pair once per physical-row combination. Set
-    # semantics on (vec_id, embedding) — mirrored by the oracle's
-    # SELECT DISTINCT; NULL embeddings carry no geometry and are
-    # excluded on both sides.
+    # Ingest guard (--rowdup): an at-least-once ingest re-delivers exact
+    # copies including vec_id; without the dedup, a vector duplicated on
+    # both sides of the bucket self-join emits the SAME (vec_a, vec_b)
+    # pair once per physical-row combination. Set semantics on
+    # (vec_id, embedding) — mirrored by the oracle's SELECT DISTINCT;
+    # NULL embeddings carry no geometry and are excluded on both sides.
     emb = spread(
         load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
+        .select("vec_id", embedding("e"))
         .filter(F.col("e").isNotNull())
         .dropDuplicates()
     )
     bucket = srp_bucket("e", SRP_PLANES[:_LSH_BITS])
-    # r13 optimization (guide §1.2 don't recompute): norm² rides the
-    # signature row — computed once per VECTOR instead of twice per
-    # candidate pair; sqrt(n2a)·sqrt(n2b) is the identical IEEE
-    # expression over identical doubles, so the 4-dp cosines are
-    # bit-equal (see q_dedup_embed's refilter note)
+    # norm² rides the signature row: computed once per vector instead of
+    # twice per candidate pair
     sigs = emb.select(
-        "vec_id", "e", _dot("e", "e").alias("n2"), bucket.alias("bucket")
+        "vec_id", "e", dot("e", "e").alias("n2"), bucket.alias("bucket")
     )
 
     a, b = sigs.alias("a"), sigs.alias("b")
-    cos = _dot("ea", "eb") / (F.sqrt("n2a") * F.sqrt("n2b"))
+    cos = cosine("ea", "eb", "n2a", "n2b")
     return (
         a.join(
             b,
@@ -530,7 +476,7 @@ def q_sim_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.n2").alias("n2a"),
             F.col("b.n2").alias("n2b"),
         )
-        .select("vec_a", "vec_b", F.round(cos, 4).alias("cos_sim"))
+        .select("vec_a", "vec_b", cos.alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc_nulls_last(), "vec_a", "vec_b")
         .limit(50)
     )
@@ -541,17 +487,16 @@ def q_sim_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+_MM_NORM2 = duck_dot(duck_embedding("e"), duck_embedding("e"))
+
+
 @query(
     "q_multimodal_join",
-    oracle="""
+    oracle=f"""
     SELECT d.doc_id, d.lang, d.n_chars, e.label,
            CAST(len(e.embedding) AS INT) AS dim,
-           CASE WHEN isfinite(list_inner_product(
-                    CAST(e.embedding AS DOUBLE[]),
-                    CAST(e.embedding AS DOUBLE[])))
-                THEN round(sqrt(list_inner_product(
-                    CAST(e.embedding AS DOUBLE[]),
-                    CAST(e.embedding AS DOUBLE[]))), 4)
+           CASE WHEN isfinite({_MM_NORM2})
+                THEN round(sqrt({_MM_NORM2}), 4)
            END AS norm,
            CASE WHEN isfinite(CAST(e.embedding[1] AS DOUBLE))
                 THEN round(CAST(e.embedding[1] AS DOUBLE), 4)
@@ -567,16 +512,11 @@ def q_multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A vector with a non-finite component has no meaningful L2 norm —
     both features surface as NULL rather than propagating NaN/Inf into
-    the result (r8 --extreme sweep; a raw Inf cell also breaks value
+    the result (the --extreme axis; a raw Inf cell also breaks value
     hashing downstream)."""
-    _inf = float("inf")
-
-    def _finite(c):
-        return ~F.isnan(c) & (c > F.lit(-_inf)) & (c < F.lit(_inf))
-
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("e")
+        "vec_id", "label", embedding("e")
     )
     # materialize the dot product once — referencing the aggregate HOF in
     # both the finite guard and the branch would evaluate it twice per row
@@ -588,7 +528,7 @@ def q_multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_chars",
             "label",
             F.size("e").alias("dim"),
-            _dot("e", "e").alias("norm2"),
+            dot("e", "e").alias("norm2"),
             F.element_at("e", 1).alias("fd"),
         )
         .select(
@@ -598,9 +538,9 @@ def q_multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             "dim",
             F.when(
-                _finite(F.col("norm2")), F.round(F.sqrt("norm2"), 4)
+                finite(F.col("norm2")), F.round(F.sqrt("norm2"), 4)
             ).alias("norm"),
-            F.when(_finite(F.col("fd")), F.round(F.col("fd"), 4)).alias(
+            F.when(finite(F.col("fd")), F.round(F.col("fd"), 4)).alias(
                 "first_dim"
             ),
         )

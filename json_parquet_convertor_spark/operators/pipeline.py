@@ -25,12 +25,6 @@ from json_parquet_convertor_spark.operators.buckets import (
     duck_basket_pairs,
     sorted_pairs,
 )
-from json_parquet_convertor_spark.operators.llm import (
-    SRP_PLANES,
-    _dot,
-    srp_bucket,
-    srp_bucket_sql,
-)
 from json_parquet_convertor_spark.operators.shingles import (
     _DUCK_SHINGLE_INDEX,
     _DUCK_TOKENIZED,
@@ -44,6 +38,21 @@ from json_parquet_convertor_spark.operators.terms import (
     duck_tokens,
     term_freq,
     tokens,
+)
+from json_parquet_convertor_spark.operators.vectors import (
+    DUCK_FINITE_VEC,
+    SRP_PLANES,
+    cosine,
+    dot,
+    duck_cosine,
+    duck_embedding,
+    duck_l2,
+    embedding,
+    finite_vec,
+    l2,
+    moment_fit,
+    srp_bucket,
+    srp_bucket_sql,
 )
 from json_parquet_convertor_spark.registry import query
 from json_parquet_convertor_spark.sources.io import load_table, spread
@@ -378,7 +387,7 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # 4 tables × 8 signed-random-projection planes, and the per-table 8-bit
-# bucket keys as SQL (see llm.srp_bucket_sql)
+# bucket keys as SQL
 _DE_TABLES = [SRP_PLANES[t * 8:t * 8 + 8] for t in range(4)]
 _DE_BUCKET_SQL = [srp_bucket_sql(planes) for planes in _DE_TABLES]
 
@@ -391,7 +400,7 @@ _DE_CAND_SQL = duck_banded_pairs(
     "q_dedup_embed",
     oracle=f"""
     WITH e AS (
-        SELECT DISTINCT vec_id, CAST(embedding AS DOUBLE[]) AS e
+        SELECT DISTINCT vec_id, {duck_embedding()} AS e
         FROM embeddings
         WHERE embedding IS NOT NULL
     ),
@@ -405,11 +414,7 @@ _DE_CAND_SQL = duck_banded_pairs(
     ),
 {_DE_CAND_SQL}
     SELECT vec_a, vec_b, cos_sim FROM (
-        SELECT c.vec_a, c.vec_b,
-               round(
-                   list_inner_product(ea.e, eb.e)
-                   / (sqrt(list_inner_product(ea.e, ea.e))
-                      * sqrt(list_inner_product(eb.e, eb.e))), 4) AS cos_sim
+        SELECT c.vec_a, c.vec_b, {duck_cosine("ea.e", "eb.e")} AS cos_sim
         FROM cand c
         JOIN e ea ON c.vec_a = ea.vec_id
         JOIN e eb ON c.vec_b = eb.vec_id
@@ -427,12 +432,9 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables (operators/buckets.py) — still no all-pairs anything; the
     distinct of candidate pairs shuffles only id pairs.
 
-    Driver contract (r12 verdict task 2, promoted from rows-only): the
-    hyperplanes are bound as literal double arrays in BOTH engines and
-    the dots fold sequentially in both (HOF aggregate ↔
-    list_inner_product, the q_sim_cosine_topk precedent), so signs,
-    buckets, the candidate pair set, and the 4-dp cosines are bit-equal
-    cross-engine — a full value-hash oracle of the whole algorithm, the
+    Oracle contract: signs, buckets, the candidate pair set and the 4-dp
+    cosines are bit-equal cross-engine (operators/vectors.py), so the
+    oracle is a full value-hash twin of the whole algorithm, the
     candidate rule stated on both sides. The signature pass therefore
     computes its 32 dots as HOF expressions instead of the earlier
     Arrow-matmul pandas_udf: BLAS reassociates the sum, which is the one
@@ -444,7 +446,7 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     geometry and are excluded on both sides."""
     emb = spread(
         load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
+        .select("vec_id", embedding("e"))
         .filter(F.col("e").isNotNull())
         .dropDuplicates()
     ).cache()  # read by the bucket join sides + the exact-cosine refilter
@@ -463,14 +465,10 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
         sigs.cache(), ["table_idx", "bucket"], "vec_id", ("vec_a", "vec_b")
     )
 
-    # r13 optimization (guide §1.2 don't recompute): the exact-cosine
-    # refilter evaluated THREE interpreted HOF dots per candidate pair
-    # (38k pairs at sf0.1); the two self-dots depend only on the vector,
-    # so compute norm² once per VECTOR (|V| dots, not 2·|pairs|) and
-    # carry the 8-byte scalar through the join. sqrt(n2a)·sqrt(n2b) is
-    # the identical IEEE expression over identical doubles — bit-equal
-    # cosines (this restores the pre-promotion precomputed-norms shape).
-    emb_n = emb.select("vec_id", "e", _dot("e", "e").alias("n2"))
+    # the two self-dots of the exact-cosine refilter depend only on the
+    # vector: norm² is computed once per vector (|V| dots, not 2·|pairs|)
+    # and the 8-byte scalar rides through the join
+    emb_n = emb.select("vec_id", "e", dot("e", "e").alias("n2"))
     ea = emb_n.select(
         F.col("vec_id").alias("vec_a"),
         F.col("e").alias("ea"),
@@ -481,15 +479,14 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e").alias("eb"),
         F.col("n2").alias("n2b"),
     )
-    cos = _dot("ea", "eb") / (F.sqrt("n2a") * F.sqrt("n2b"))
+    cos = cosine("ea", "eb", "n2a", "n2b")
     return (
         cand.join(ea, "vec_a")
         .join(eb, "vec_b")
-        .select("vec_a", "vec_b", F.round(cos, 4).alias("cos_sim"))
+        .select("vec_a", "vec_b", cos.alias("cos_sim"))
         .filter(F.col("cos_sim") >= 0.35)
-        # r14 (guide §2.4): determinism-only global sort removed — see
-        # q_dedup_simhash's note (order-insensitive driver hash, no
-        # ORDER BY in the oracle, set-comparing tests).
+        # no global sort: see q_dedup_simhash's note (order-insensitive
+        # row hash, no ORDER BY in the oracle, set-comparing tests)
     )
 
 
@@ -717,27 +714,24 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_sim_ann_ivf",
-    oracle="""
+    oracle=f"""
     WITH cents AS (
-        SELECT vec_id AS c_id, CAST(embedding AS DOUBLE[]) AS ce
+        SELECT vec_id AS c_id, {duck_embedding()} AS ce
         FROM embeddings WHERE vec_id < 8
     ),
     assign AS (
         SELECT vec_id, c_id, e FROM (
-            SELECT e.vec_id, c.c_id, CAST(e.embedding AS DOUBLE[]) AS e,
+            SELECT e.vec_id, c.c_id, {duck_embedding("e")} AS e,
                    ROW_NUMBER() OVER (
                        PARTITION BY e.vec_id
-                       ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.ce),
+                       ORDER BY {duck_l2(duck_embedding("e"), "c.ce")},
                                 c.c_id
                    ) AS rn
             FROM embeddings e CROSS JOIN cents c
         ) WHERE rn = 1
     ),
     probe AS (SELECT c_id AS pc, e AS pe FROM assign WHERE vec_id = 42)
-    SELECT a.vec_id,
-           round(list_inner_product(a.e, p.pe)
-                 / (sqrt(list_inner_product(a.e, a.e))
-                    * sqrt(list_inner_product(p.pe, p.pe))), 4) AS cos_sim
+    SELECT a.vec_id, {duck_cosine("a.e", "p.pe")} AS cos_sim
     FROM assign a CROSS JOIN probe p
     WHERE a.c_id = p.pc AND a.vec_id <> 42
     ORDER BY cos_sim DESC, a.vec_id
@@ -758,19 +752,12 @@ def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
+        "vec_id", embedding("e")
     )
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("c_id"), F.col("e").alias("ce")
     )
-    dist = F.sqrt(
-        F.aggregate(
-            F.zip_with("e", "ce", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(dist, F.col("c_id"))
+    w = Window.partitionBy("vec_id").orderBy(l2("e", "ce"), F.col("c_id"))
     assign = (
         emb.crossJoin(F.broadcast(cents))
         .withColumn("rn", F.row_number().over(w))
@@ -780,12 +767,12 @@ def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = assign.filter(F.col("vec_id") == 42).select(
         F.col("c_id").alias("pc"), F.col("e").alias("pe")
     )
-    cos = _dot("e", "pe") / (F.sqrt(_dot("e", "e")) * F.sqrt(_dot("pe", "pe")))
+    cos = cosine("e", "pe", dot("e", "e"), dot("pe", "pe"))
     return (
         assign.join(
             F.broadcast(probe), (F.col("c_id") == F.col("pc")) & (F.col("vec_id") != 42)
         )
-        .select("vec_id", F.round(cos, 4).alias("cos_sim"))
+        .select("vec_id", cos.alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(5)
     )
@@ -1015,16 +1002,14 @@ def q_text_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_knn_graph",
-    oracle="""
+    oracle=f"""
     WITH e AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+        SELECT vec_id, {duck_embedding()} AS v FROM embeddings
     ),
     p AS (SELECT vec_id AS p_id, v AS pv FROM e WHERE vec_id % 25 = 0),
     pairs AS (
         SELECT p.p_id, e.vec_id AS neighbor_id,
-               round(list_inner_product(e.v, p.pv)
-                     / (sqrt(list_inner_product(e.v, e.v))
-                        * sqrt(list_inner_product(p.pv, p.pv))), 4) AS cos_sim
+               {duck_cosine("e.v", "p.pv")} AS cos_sim
         FROM e CROSS JOIN p
         WHERE e.vec_id <> p.p_id
     ),
@@ -1044,41 +1029,39 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup mining: every probe gets its 5 closest corpus vectors as
     graph edges.
 
-    Shape: the probe set broadcasts (bounded, table/25), the corpus scans
-    ONCE; per-probe top-k runs as a row_number window partitioned by
+    Shape: the probe set (vec_id % 25 == 0, 1/25 of the corpus, so it
+    grows with the corpus) broadcasts and the corpus scans ONCE; per-probe top-k runs as a row_number window partitioned by
     probe, ordered by the 4-dp-rounded cosine with an id tiebreak so rank
     boundaries are engine-independent. Dot/norm math is higher-order
     array functions — JVM-side, inside codegen.
 
-    Scale: broadcast-probe brute force is exactly right while probes are
-    bounded (cost = scan × |probes|, embarrassingly parallel, no shuffle
+    Scale: broadcast-probe brute force is right only while the probe set
+    fits a broadcast (cost = scan × |probes|, embarrassingly parallel, no shuffle
     of the corpus — only the k·|probes| candidate rows move). For
     all-pairs kNN at 100 TB the candidate generator swaps to the LSH
     bucket joins (q_sim_pairs_lsh / q_dedup_embed); this operator is the
     exact refinement those pipelines share."""
     from pyspark.sql.window import Window
 
-    # r13 optimization (guide §1.2 don't recompute): each self-dot is a
-    # function of one side only, so it is computed ONCE per corpus row /
-    # probe row BELOW the crossJoin instead of once per (row × probe)
-    # pair — |V| + |P| interpreted HOF dots instead of 2·|V|·|P|. Same
-    # fold over the same doubles → bit-equal cosines.
+    # each self-dot is a function of one side only, so it is computed
+    # once per corpus row / probe row BELOW the crossJoin instead of once
+    # per (row × probe) pair: |V| + |P| HOF dots instead of 2·|V|·|P|
     emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    ).select("vec_id", "v", _dot("v", "v").alias("n2v"))
+        "vec_id", embedding("v")
+    ).select("vec_id", "v", dot("v", "v").alias("n2v"))
     probes = emb.filter(F.col("vec_id") % 25 == 0).select(
         F.col("vec_id").alias("p_id"),
         F.col("v").alias("pv"),
         F.col("n2v").alias("n2p"),
     )
-    cos = _dot("v", "pv") / (F.sqrt("n2v") * F.sqrt("n2p"))
+    cos = cosine("v", "pv", "n2v", "n2p")
     pairs = (
         emb.crossJoin(F.broadcast(probes))
         .filter(F.col("vec_id") != F.col("p_id"))
         .select(
             "p_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.round(cos, 4).alias("cos_sim"),
+            cos.alias("cos_sim"),
         )
     )
     w = Window.partitionBy("p_id").orderBy(
@@ -1276,61 +1259,11 @@ def q_text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-#: Finite-VECTOR guard (r13 sixteen-axes composed catch): --extreme plants
-#: NaN/±Inf components, and a vector with one has no geometry — moments,
-#: eigensolves, distances, and inertia all go NaN and every downstream
-#: invariant flag turns 0/NULL. The moment/centroid family EXCLUDES such
-#: vectors on BOTH sides (the same per-operator choice the quantizer makes
-#: by saturating, corpus.py:278). The Spark predicate treats a NULL
-#: component as non-finite (forall yields NULL → filter drops); the DuckDB
-#: twin states that explicitly (list_filter drops NULL lambda results).
-_DUCK_FINITE_VEC = (
-    "embedding IS NOT NULL AND len(list_filter(CAST(embedding AS DOUBLE[]),"
-    " x -> NOT isfinite(x) OR x IS NULL)) = 0"
-)
-
-
-def _finite_vec(col):
-    """All-components-finite predicate for an array<double> column."""
-    _inf = float("inf")
-    return F.forall(
-        col,
-        lambda x: ~F.isnan(x) & (x > F.lit(-_inf)) & (x < F.lit(_inf)),
-    )
-
-
-def _embed_moment_partials(emb: DataFrame, d: int) -> DataFrame:
-    """Per-Arrow-batch (n, Σx, ΣxxT) moment partials over an embedding
-    column — the shared fit stage of q_embed_pca and q_embed_whiten.
-    Embarrassingly parallel: one numpy matmul per batch, ~(8 + 8d + 8d²)
-    bytes out per batch, no raw vector ever shuffles."""
-
-    def partials(it):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            if not len(pdf):
-                continue
-            m = np.vstack(pdf["embedding"].to_numpy()).astype("float64")
-            yield pd.DataFrame(
-                {
-                    "n": [m.shape[0]],
-                    "s": [m.sum(axis=0).tolist()],
-                    "g": [(m.T @ m).ravel().tolist()],
-                }
-            )
-
-    return spread(emb).mapInPandas(
-        partials, "n long, s array<double>, g array<double>"
-    )
-
-
 @query(
     "q_embed_pca",
     oracle=f"""
     WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_vectors
-               FROM embeddings WHERE {_DUCK_FINITE_VEC})
+               FROM embeddings WHERE {DUCK_FINITE_VEC})
     SELECT CAST(i AS INT) AS component,
            n.n_vectors,
            CAST(1 AS BIGINT) AS evals_nonincreasing,
@@ -1358,7 +1291,7 @@ def q_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     1024) merge level (tree-reduce) — the partial format is
     merge-anywhere, nothing else changes.
 
-    Driver contract (r12 verdict task 2): eigenvalues are
+    Oracle contract: eigenvalues are
     summation-order-sensitive in the last ulp (no cross-engine twin), so
     the emitted row is the INVARIANT — per component, the exact vector
     count plus 0/1 flags: eigenvalues sorted non-increasing, each
@@ -1368,32 +1301,21 @@ def q_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     near rank-2: trailing eigenvalues are ±1e-18-noise, so range checks
     carry a relative tolerance and a zero-variance corpus passes
     vacuously). Vectors with a non-finite or NULL component are
-    EXCLUDED on both sides (_DUCK_FINITE_VEC — the r13 composed-sweep
-    catch: one NaN poisons the whole eigensolve). The oracle states the
+    EXCLUDED on both sides (operators/vectors.py: one NaN poisons the
+    whole eigensolve). The oracle states the
     counts and expects every flag 1; tests re-verify raw eigenvalues
     against a full-data numpy PCA."""
     d = 64
     emb = (
         load_table(spark, sf_dir, "embeddings")
-        .select(F.col("embedding").cast("array<double>").alias("embedding"))
-        .filter(_finite_vec(F.col("embedding")))
+        .select(embedding("embedding"))
+        .filter(finite_vec(F.col("embedding")))
     )
-    parts = _embed_moment_partials(emb, d)
 
-    def eig_top(it):
+    def eig_top(n_tot, _, cov):
         import numpy as np
         import pandas as pd
 
-        n_tot, s_tot, g_tot = 0, np.zeros(d), np.zeros((d, d))
-        for pdf in it:
-            for _, row in pdf.iterrows():
-                n_tot += int(row["n"])
-                s_tot += np.asarray(row["s"])
-                g_tot += np.asarray(row["g"]).reshape(d, d)
-        if n_tot == 0:
-            return
-        mean = s_tot / n_tot
-        cov = g_tot / n_tot - np.outer(mean, mean)
         evals = np.linalg.eigh(cov)[0][::-1]  # descending
         total = float(evals.sum())
         trace = float(np.trace(cov))
@@ -1423,7 +1345,9 @@ def q_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    return parts.repartition(1).mapInPandas(
+    return moment_fit(
+        emb,
+        d,
         eig_top,
         "component int, n_vectors long, evals_nonincreasing long, "
         "share_in_range long, cum_le_one long, eigsum_matches_trace long",
@@ -1437,7 +1361,7 @@ def q_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) AS BIGINT) AS n_vectors,
            CAST(1 AS BIGINT) AS whiten_identity_ok
     FROM embeddings
-    WHERE {_DUCK_FINITE_VEC}
+    WHERE {DUCK_FINITE_VEC}
     GROUP BY label
     """,
 )
@@ -1449,7 +1373,7 @@ def q_embed_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
     are wildly uneven (whitened data has identity covariance, asserted
     in tests).
 
-    Driver contract (r12 verdict task 2): the whitened norms are
+    Oracle contract: the whitened norms are
     eigensolver-derived (no cross-engine twin), so the emitted row is
     the INVARIANT — per-label exact counts plus a 0/1 flag asserting the
     GLOBAL mean squared whitened norm equals Σᵢ λᵢ/max(λᵢ, ε), the exact
@@ -1458,7 +1382,7 @@ def q_embed_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
     contributes ~0, so near-rank-2 generated fixtures pass with
     effective-rank ≈ 2, not d); tolerance 1e-3 relative absorbs the
     ε-amplified eigensolve noise. Vectors with a non-finite or NULL
-    component are EXCLUDED on both sides (_DUCK_FINITE_VEC). The oracle
+    component are EXCLUDED on both sides (operators/vectors.py). The oracle
     states per-label counts and expects the flag to be 1.
 
     Scale design: the fit stage reduces to one 33 KB matrix row; APPLY
@@ -1472,32 +1396,18 @@ def q_embed_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = 64
     df = (
         load_table(spark, sf_dir, "embeddings")
-        .select(
-            "label",
-            F.col("embedding").cast("array<double>").alias("embedding"),
-        )
-        .filter(_finite_vec(F.col("embedding")))
+        .select("label", embedding("embedding"))
+        .filter(finite_vec(F.col("embedding")))
     )
-    parts = _embed_moment_partials(df.select("embedding"), d)
 
-    def fit(it):
+    def fit(_, mu, cov):
         import numpy as np
         import pandas as pd
 
-        n_tot, s_tot, g_tot = 0, np.zeros(d), np.zeros((d, d))
-        for pdf in it:
-            for _, row in pdf.iterrows():
-                n_tot += int(row["n"])
-                s_tot += np.asarray(row["s"])
-                g_tot += np.asarray(row["g"]).reshape(d, d)
-        if n_tot == 0:
-            return
-        mu = s_tot / n_tot
-        cov = g_tot / n_tot - np.outer(mu, mu)
         evals, evecs = np.linalg.eigh(cov)
-        # RELATIVE eigenvalue floor (rcond-style; r13 sf0.1 composed
-        # catch): an absolute 1e-12 floor amplifies covariance float
-        # noise by λmax·ulp/ε ≈ 5e-3 PER floored direction — 60 floored
+        # RELATIVE eigenvalue floor (rcond-style): an absolute 1e-12
+        # floor amplifies covariance float noise by λmax·ulp/ε ≈ 5e-3
+        # PER floored direction — 60 floored
         # directions on the rank-2 fixtures put ~0.3 of noise into the
         # trace identity. ε = 1e-9·λmax bounds the amplification at
         # ~1e-7 per direction regardless of data scale (and is the
@@ -1516,8 +1426,11 @@ def q_embed_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    wrow = parts.repartition(1).mapInPandas(
-        fit, "mu array<double>, w array<double>, expected_msq double"
+    wrow = moment_fit(
+        df.select("embedding"),
+        d,
+        fit,
+        "mu array<double>, w array<double>, expected_msq double",
     ).cache()  # read by the apply stage AND the final flag join
 
     def apply_w(it):
@@ -1532,7 +1445,7 @@ def q_embed_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
             m = np.vstack(pdf["embedding"].to_numpy()).astype("float64")
             z = (m - mu) @ w.T
             sq = (z * z).sum(axis=1)
-            # label is NULLABLE (r11, --evolve: old-schema part files miss
+            # label is NULLABLE (--evolve: old-schema part files miss
             # it entirely) — ship it as pandas nullable Int64 (bare int32
             # astype crashes on NaN) and keep the NULL group like a Spark
             # GROUP BY would (dropna would silently drop those vectors)
@@ -1553,7 +1466,7 @@ def q_embed_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one GLOBAL flag (same value on every row): mean ||z||² over ALL
     # vectors vs the fit stage's trace-identity expectation
-    # tolerance is RANK-AWARE (r13 --tz sweep catch): on near-rank-2
+    # tolerance is RANK-AWARE (seen on the --tz fixture): on near-rank-2
     # generated embeddings the ε-floor amplifies eigensolve/assembly
     # noise by 1/ε in each floored direction (~0.25% of the trace
     # observed at sf0.01) — 1% relative + 1e-3·d absolute keeps the flag
@@ -1792,7 +1705,7 @@ def q_text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_embed_kmeans",
     oracle=f"""
     WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_vectors
-               FROM embeddings WHERE {_DUCK_FINITE_VEC})
+               FROM embeddings WHERE {DUCK_FINITE_VEC})
     SELECT CAST(i AS INT) AS centroid_id,
            n.n_vectors,
            CAST(1 AS BIGINT) AS inertia_monotone,
@@ -1819,15 +1732,15 @@ def q_embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaves executors. Ties in assignment break to the lowest centroid
     id.
 
-    Driver contract (r12 verdict task 2): cluster sizes sit on float
+    Oracle contract: cluster sizes sit on float
     distance-comparison boundaries (no cross-engine twin), so the
     emitted row is the INVARIANT — one row per centroid with the exact
     corpus size plus 0/1 flags: total inertia non-increasing across the
     Lloyd iterations (the algorithm's defining guarantee, up to 1e-9
     relative float slack) and every vector assigned to exactly one
     cluster. Vectors with a non-finite or NULL component are EXCLUDED
-    on both sides (_DUCK_FINITE_VEC — NaN distances poison inertia and
-    assignment). The oracle states k = min(8, n) rows over the finite
+    on both sides (operators/vectors.py: NaN distances poison inertia
+    and assignment). The oracle states k = min(8, n) rows over the finite
     corpus and expects both flags 1; raw sizes/inertia stay
     numpy-re-verified in tests."""
     model = _kmeans_model(spark, sf_dir)
@@ -1870,11 +1783,8 @@ def _kmeans_model(spark: SparkSession, sf_dir: str) -> dict | None:
     d, k, iters = 64, 8, 3
     emb = (
         load_table(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("embedding"),
-        )
-        .filter(_finite_vec(F.col("embedding")))
+        .select("vec_id", embedding("embedding"))
+        .filter(finite_vec(F.col("embedding")))
     )
     seeds = [
         np.asarray(r["embedding"], dtype="float64")

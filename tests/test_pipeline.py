@@ -133,9 +133,7 @@ def test_embed_pca_matches_numpy(spark, sf_dir):
     asserts the emitted flags on top."""
     import numpy as np
 
-    from json_parquet_convertor_spark.operators.pipeline import (
-        _embed_moment_partials,
-    )
+    from json_parquet_convertor_spark.operators.vectors import moment_partials
     from json_parquet_convertor_spark.sources.io import load_table
 
     out = registry.QUERIES["q_embed_pca"](spark, sf_dir).collect()
@@ -161,8 +159,8 @@ def test_embed_pca_matches_numpy(spark, sf_dir):
     # compare against the full-data numpy covariance eigensolve
     d = 64
     n_tot, s_tot, g_tot = 0, np.zeros(d), np.zeros((d, d))
-    for p in _embed_moment_partials(
-        load_table(spark, sf_dir, "embeddings").select("embedding"), d
+    for p in moment_partials(
+        load_table(spark, sf_dir, "embeddings").select("embedding")
     ).collect():
         n_tot += int(p["n"])
         s_tot += np.asarray(p["s"])
@@ -375,7 +373,8 @@ def test_sim_pairs_lsh_cosines_buckets_and_order_verified(spark, sf_dir):
     (cos_sim DESC, vec_a, vec_b) over what the buckets admitted."""
     import numpy as np
 
-    from json_parquet_convertor_spark.operators.llm import _LSH_BITS, SRP_PLANES
+    from json_parquet_convertor_spark.operators.llm import _LSH_BITS
+    from json_parquet_convertor_spark.operators.vectors import SRP_PLANES
     from json_parquet_convertor_spark.sources.io import load_table
 
     rows = registry.QUERIES["q_sim_pairs_lsh"](spark, sf_dir).collect()

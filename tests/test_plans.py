@@ -109,7 +109,7 @@ def test_query_has_no_cartesian(spark, sf_dir, name):
             "q_agg_freq_items",  # 1-row total-count broadcast onto tf table
             "q_sql_cte",  # grand-total CTE reuse = 1-row IdentityBroadcast
             "q_text_lm_score",  # 1-row corpus-total broadcast onto tf table
-            "q_knn_graph",  # bounded probe-set broadcast (LSH is scale path)
+            "q_knn_graph",  # probe broadcast: 1/25 of the corpus, not bounded
             "q_win_funnel",  # crossJoins of three 1-row funnel-count aggs
             "q_rank_bm25",  # 1-row (N, avgdl) corpus-stats broadcast
             "q_time_spine",  # 1-row day-bounds broadcast onto the type list
