@@ -160,3 +160,27 @@ def sql_id_hash(col: str, m: int) -> str:
     """Oracle-side (DuckDB) twin of :func:`id_hash`. DuckDB's ``%`` takes
     the dividend's sign, so the two agree on non-negative ids."""
     return f"CAST((({col} % {m}) * {ID_MIX % m}) % {m} AS INT)"
+
+
+def _ratio4(num: tuple[str, ...], den: tuple[str, ...], int_type: str,
+            div: str) -> str:
+    p, q = (" * ".join(f"CAST({c} AS {int_type})" for c in f)
+            for f in (num, den))
+    return f"CAST((20000 * {p} + {q}) {div} (2 * {q}) AS DOUBLE) / 10000"
+
+
+def ratio4(num: tuple[str, ...], den: tuple[str, ...]) -> Column:
+    """DOUBLE ``Π num / Π den`` rounded half-up to 4 dp, the products of
+    non-negative integer columns (``Π den > 0``).
+
+    A computed ratio cannot be rounded as a double: Spark rounds its
+    shortest decimal string half-up, DuckDB the scaled binary value, so
+    57/800 = 0.07125 gives 0.0713 in Spark and 0.0712 in DuckDB. The
+    rounding runs on the integers instead, ``(2·10⁴·p + q) div (2·q)``,
+    exact in DECIMAL(38,0), and only the 4-dp result becomes a double."""
+    return F.expr(_ratio4(num, den, "DECIMAL(38,0)", "div"))
+
+
+def sql_ratio4(num: tuple[str, ...], den: tuple[str, ...]) -> str:
+    """Oracle-side (DuckDB) twin of :func:`ratio4`, exact in HUGEINT."""
+    return _ratio4(num, den, "HUGEINT", "//")

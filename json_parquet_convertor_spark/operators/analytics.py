@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from json_parquet_convertor_spark.exact import fday, fsec
+from json_parquet_convertor_spark.exact import fday, fsec, ratio4, sql_ratio4
 from json_parquet_convertor_spark.operators.buckets import (
     basket_pairs,
     duck_basket_pairs,
@@ -994,9 +994,8 @@ def q_stats_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT part_a, part_b, n_orders AS ab FROM {duck_basket_pairs(3)}
     )
     SELECT part_a, part_b, ab,
-           round(CAST(ab AS DOUBLE) / sa.s, 4) AS confidence,
-           round(CAST(ab AS DOUBLE) * n.n_orders / (sa.s * sb.s), 4)
-               AS lift
+           {sql_ratio4(("ab",), ("sa.s",))} AS confidence,
+           {sql_ratio4(("ab", "n.n_orders"), ("sa.s", "sb.s"))} AS lift
     FROM pairs
     JOIN supp sa ON part_a = sa.l_partkey
     JOIN supp sb ON part_b = sb.l_partkey
@@ -1008,8 +1007,9 @@ def q_pairs_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     P(b|a) and lift P(a,b)/(P(a)·P(b)) — the step that turns
     q_pairs_copurchase's raw counts into rankable rules (lift > 1 ⇒
     genuinely bought together, not just both popular). All three
-    probabilities reduce to exact integer count ratios, so both engines
-    derive identical doubles.
+    probabilities reduce to exact integer count ratios, and both engines
+    round each ratio from its counts (``exact.ratio4``), so they derive
+    identical doubles.
 
     Scale design: same in-basket pair count as the pair miner (bounded by
     per-order basket size); the per-part support table is joined back
@@ -1029,10 +1029,8 @@ def q_pairs_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = li.groupBy("l_partkey").agg(F.count("*").alias("s"))
     # supp/n stay on the full distinct table, which still counts
     # NULL-order rows exactly as the oracle's GROUP BY does
-    pairs = basket_pairs(li, 3)
-    # both frames name a column n_orders: the pair's order count (ab)
-    # and the corpus order count
-    ab, n_orders = pairs["n_orders"], n["n_orders"]
+    # the pair's order count, renamed apart from the corpus order count
+    pairs = basket_pairs(li, 3).withColumnRenamed("n_orders", "ab")
     sa = supp.select(
         F.col("l_partkey").alias("part_a"), F.col("s").alias("sa")
     )
@@ -1046,12 +1044,9 @@ def q_pairs_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "part_a",
             "part_b",
-            ab.alias("ab"),
-            F.round(ab.cast("double") / F.col("sa"), 4).alias("confidence"),
-            F.round(
-                ab.cast("double") * n_orders / (F.col("sa") * F.col("sb")),
-                4,
-            ).alias("lift"),
+            "ab",
+            ratio4(("ab",), ("sa",)).alias("confidence"),
+            ratio4(("ab", "n_orders"), ("sa", "sb")).alias("lift"),
         )
     )
 

@@ -358,7 +358,7 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT vec_id, label, {duck_cosine(duck_embedding(), "pe")} AS cos_sim
     FROM embeddings CROSS JOIN probe
     WHERE vec_id <> 0
-    ORDER BY cos_sim DESC, vec_id
+    ORDER BY cos_sim DESC NULLS LAST, vec_id
     LIMIT 10
     """,
 )
@@ -386,7 +386,7 @@ def q_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(probe))
         .select("vec_id", "label", cos.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), "vec_id")
+        .orderBy(F.col("cos_sim").desc_nulls_last(), "vec_id")
         .limit(10)
     )
 

@@ -734,7 +734,7 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT a.vec_id, {duck_cosine("a.e", "p.pe")} AS cos_sim
     FROM assign a CROSS JOIN probe p
     WHERE a.c_id = p.pc AND a.vec_id <> 42
-    ORDER BY cos_sim DESC, a.vec_id
+    ORDER BY cos_sim DESC NULLS LAST, a.vec_id
     LIMIT 5
     """,
 )
@@ -773,7 +773,7 @@ def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.broadcast(probe), (F.col("c_id") == F.col("pc")) & (F.col("vec_id") != 42)
         )
         .select("vec_id", cos.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), "vec_id")
+        .orderBy(F.col("cos_sim").desc_nulls_last(), "vec_id")
         .limit(5)
     )
 
@@ -1016,7 +1016,8 @@ def q_text_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     r AS (
         SELECT p_id, neighbor_id, cos_sim,
                CAST(row_number() OVER (
-                   PARTITION BY p_id ORDER BY cos_sim DESC, neighbor_id
+                   PARTITION BY p_id
+                   ORDER BY cos_sim DESC NULLS LAST, neighbor_id
                ) AS INT) AS rnk
         FROM pairs
     )
@@ -1065,7 +1066,7 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.partitionBy("p_id").orderBy(
-        F.col("cos_sim").desc(), "neighbor_id"
+        F.col("cos_sim").desc_nulls_last(), "neighbor_id"
     )
     return pairs.select(
         "*", F.row_number().over(w).cast("int").alias("rnk")

@@ -17,9 +17,12 @@ twin beside its Spark half.
   are outside the contract: DuckDB raises on both.
 - Cosine is rounded to 4 dp and divides once with ``F.try_divide``: a
   zero vector's cosine is NULL, as DuckDB's division by zero gives, where
-  ANSI ``/`` raises ``DIVIDE_BY_ZERO``. Callers that carry each vector's
-  norm² pass it in, so a self-dot is computed once per vector, not once
-  per pair.
+  ANSI ``/`` raises ``DIVIDE_BY_ZERO``. A pair with a non-finite vector
+  has no cosine either: its fold is always NaN (``Inf·0``, ``Inf/Inf``),
+  and both engines map a NaN cosine to NULL, so it sorts with the NULLs
+  instead of above every number. Callers that carry each vector's norm²
+  pass it in, so a self-dot is computed once per vector, not once per
+  pair.
 - Finite guard: a component is finite unless NaN or ±Inf; a NULL
   component or vector is not (the filter drops it in both engines). A
   vector with a non-finite component has no geometry: the moment and
@@ -72,15 +75,18 @@ def duck_dot(a: str, b: str) -> str:
 
 def cosine(a, b, n2a, n2b) -> Column:
     """4-dp cosine of array columns ``a`` and ``b``, whose norm² are
-    ``n2a`` and ``n2b``; NULL where either vector is zero."""
-    return F.round(F.try_divide(dot(a, b), F.sqrt(n2a) * F.sqrt(n2b)), 4)
+    ``n2a`` and ``n2b``; NULL where either vector is zero or not finite."""
+    c = F.try_divide(dot(a, b), F.sqrt(n2a) * F.sqrt(n2b))
+    return F.round(F.nanvl(c, F.lit(None).cast("double")), 4)
 
 
 def duck_cosine(a: str, b: str) -> str:
-    """Twin of :func:`cosine`, the norms computed in place."""
+    """Twin of :func:`cosine`, the norms computed in place. DuckDB, like
+    Spark, compares NaN equal to NaN, so ``nullif`` drops it."""
     return (
-        f"round({duck_dot(a, b)}"
-        f" / (sqrt({duck_dot(a, a)}) * sqrt({duck_dot(b, b)})), 4)"
+        f"round(nullif({duck_dot(a, b)}"
+        f" / (sqrt({duck_dot(a, a)}) * sqrt({duck_dot(b, b)})),"
+        " 'NaN'::DOUBLE), 4)"
     )
 
 

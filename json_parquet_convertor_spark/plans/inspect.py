@@ -1,28 +1,34 @@
 """Physical-plan inspection utilities.
 
 Programmatic access to the facts that define a query's 100 TB posture:
-which filters reached the scan, which columns survived pruning, what join
-strategies Catalyst picked, how many shuffles the plan costs, and whether
-anything quadratic (cartesian / nested-loop) slipped in. Used by
-``tests/test_plans.py`` to pin plan shapes as regression tests, and
-available interactively for tuning:
+how many shuffles and broadcasts the plan costs, which join strategies
+Catalyst picked (a cartesian or nested-loop join among them), whether
+aggregation is partial, and how often each table and its heavy column is
+read. ``audit`` is the one reader of these facts: ``tests/test_plans.py``
+compares it against ``plans/inventory.json`` for every registered query,
+and it is available interactively for tuning:
 
     from json_parquet_convertor_spark.plans.inspect import audit
-    audit(df)   # -> {"exchanges": 1, "joins": ["BroadcastHashJoin"], ...}
+    audit(df)   # -> {"shuffles": 1, "joins": {"BroadcastHashJoin": 1}, ...}
 """
 
 from __future__ import annotations
 
 import re
+from collections import Counter
 
 from pyspark.sql import DataFrame
 
-# physical operators that imply a quadratic or driver-bound shape
-_QUADRATIC = ("CartesianProduct",)
-_JOIN_RE = re.compile(
-    r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|"
-    r"BroadcastNestedLoopJoin|CartesianProduct)"
-)
+from json_parquet_convertor_spark.sources.io import TABLES
+
+_JOINS = ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+          "BroadcastNestedLoopJoin", "CartesianProduct")
+#: a plan line's node name, after the tree markers and codegen stage id
+_NODE_RE = re.compile(r"^[\s:|+-]*(?:\*\(\d+\) )?(\w*)")
+_TABLE_RE = re.compile(r"Location: [^\[]*\[[^\]]*?/(\w+)\.parquet\b")
+#: the wide per-row payloads: documents.text, embeddings.embedding and
+#: events.props
+_HEAVY_RE = re.compile(r"ReadSchema: .*[<,](?:text|embedding|props):")
 
 
 def physical_plan(df: DataFrame) -> str:
@@ -31,30 +37,48 @@ def physical_plan(df: DataFrame) -> str:
 
 
 def audit(df: DataFrame) -> dict:
-    """Summarize the plan facts that matter at scale."""
-    plan = physical_plan(df)
-    lines = plan.splitlines()
+    """The plan facts that matter at scale, from the executed-plan string.
+
+    - ``shuffles``: ``Exchange`` nodes (broadcast and reused ones apart);
+    - ``broadcasts``: ``BroadcastExchange`` nodes;
+    - ``joins``: count per join node, ``CartesianProduct`` included;
+    - ``hash_aggregates``, ``take_ordered``, ``generates``: counts of
+      ``HashAggregate``, ``TakeOrderedAndProject`` and ``Generate``;
+    - ``scans``: ``FileScan`` count per fixture table, and ``heavy_scans``
+      of those, the ones whose read schema holds ``text``, ``embedding``
+      or ``props``. Any file outside the fixture counts as ``"other"``:
+      sink and round-trip queries write a fresh directory per call, so
+      their paths are not stable facts.
+
+    A cached relation's subtree is printed, and counted, once per
+    consumer. Counters hold only the keys that occur."""
+    nodes: Counter = Counter()
+    scans: Counter = Counter()
+    heavy: Counter = Counter()
+    for line in physical_plan(df).splitlines():
+        node = _NODE_RE.match(line).group(1)
+        nodes[node] += 1
+        if node == "FileScan":
+            t = _TABLE_RE.search(line)
+            label = t.group(1) if t and t.group(1) in TABLES else "other"
+            scans[label] += 1
+            if _HEAVY_RE.search(line):
+                heavy[label] += 1
     return {
-        "exchanges": sum(
-            1 for l in lines if "Exchange" in l and "Reused" not in l
-        ),
-        "joins": _JOIN_RE.findall(plan),
-        "pushed_filters": [
-            m for l in lines for m in re.findall(r"PushedFilters: \[([^\]]*)\]", l)
-        ],
-        "read_schemas": [
-            l.split("ReadSchema:", 1)[1].strip() for l in lines if "ReadSchema:" in l
-        ],
-        "has_quadratic": any(q in plan for q in _QUADRATIC),
-        "take_ordered": "TakeOrderedAndProject" in plan,
-        "hash_aggregates": plan.count("HashAggregate"),
-        "windows": [l.strip() for l in lines if re.search(r"\bWindow \[", l)],
+        "shuffles": nodes["Exchange"],
+        "broadcasts": nodes["BroadcastExchange"],
+        "joins": {j: nodes[j] for j in _JOINS if nodes[j]},
+        "hash_aggregates": nodes["HashAggregate"],
+        "take_ordered": nodes["TakeOrderedAndProject"],
+        "generates": nodes["Generate"],
+        "scans": dict(scans),
+        "heavy_scans": dict(heavy),
     }
 
 
 #: expression classes that re-tokenize a string; inside a HOF lambda each
-#: is re-evaluated once per array ELEMENT — O(len²) per row (the r11
-#: --longtext killer). StringSplitSQL backs split_part()/sentences-style
+#: is re-evaluated once per array ELEMENT — O(len²) per row on
+#: --longtext megadocs. StringSplitSQL backs split_part()/sentences-style
 #: SQL splits — same cost shape as StringSplit.
 _SPLIT_CLASSES = ("StringSplit", "StringSplitSQL")
 
@@ -93,13 +117,13 @@ def lambda_split_violations(df: DataFrame) -> list[str]:
     are O(len²) per row on --longtext megadocs/giant tokens:
 
     - ``transform(seq, i -> split(text)[i])`` — re-splits the whole
-      document per element (r11). The correct shape binds the split as
+      document per element. The correct shape binds the split as
       the HOF *input* (a sibling, not a descendant, of the lambda).
     - ``transform(sequence(1, n), i -> substring(w, i, k))`` where ``w``
       comes from OUTER scope and the position depends on the lambda
       variable — UTF8 substring seeks character boundaries from the
-      string start, so position-proportional cost × len elements (r12,
-      q_bpe_merge: 23 CPU-minutes on one 64 KiB token). The correct
+      string start, so position-proportional cost × len elements
+      (q_bpe_merge took 23 CPU-minutes on one 64 KiB token). The correct
       shape binds ``split(w, '')`` once and pairs via zip_with/slice.
       ``substring(tok, ...)`` where ``tok`` IS the lambda variable is
       linear in the element and not flagged; a lambda-independent
@@ -108,7 +132,7 @@ def lambda_split_violations(df: DataFrame) -> list[str]:
     Walks the optimized logical plan via ``toJSON()`` — one py4j call,
     never truncated — so ``spark.sql.debug.maxToStringFields`` plan-string
     truncation can't hide a violation and a sibling split() on the same
-    formatted line can't false-positive (r11 ADVICE on the old line-scan).
+    formatted line can't false-positive, as a line scan did.
     """
     import json
 

@@ -3,7 +3,8 @@
 Parity (tests/test_oracle_parity.py) proves Spark == DuckDB; these prove
 both are RIGHT: Z-order actually clusters, the CDC diff populates every
 change class, Welch's t matches an independent pure-Python computation,
-and the repetition metrics match a per-doc Python recount.
+the repetition metrics match a per-doc Python recount, and a lift on a
+4-dp midpoint rounds alike in both engines.
 """
 
 from __future__ import annotations
@@ -125,3 +126,84 @@ def test_observe_metrics_collected(spark, sf_dir):
     assert seen > 0
     assert row.getAs("null_disc") == 0
     assert 0.0 <= row.getAs("min_disc") <= row.getAs("max_disc")
+
+
+def test_ratio4_rounds_count_ratios_half_up_in_both_engines(spark):
+    """57/800 = 0.07125 is a 4-dp midpoint: rounding the double gave
+    0.0713 in Spark and 0.0712 in DuckDB. ``ratio4`` and its twin round
+    the integer counts half-up and agree with exact rational rounding."""
+    from fractions import Fraction
+
+    import duckdb
+
+    from json_parquet_convertor_spark.exact import ratio4, sql_ratio4
+
+    # (ab, n_orders, sa, sb)
+    rows = [(3, 19, 20, 40), (21, 47, 25, 32), (1, 1, 3, 1), (2, 1, 3, 1),
+            (5, 10**11, 10**9, 10**9), (10**6, 10**11, 10**6, 10**6)]
+    num, den = ("ab", "n"), ("sa", "sb")
+    df = spark.createDataFrame(rows, "ab long, n long, sa long, sb long")
+    got = [r[0] for r in df.select(ratio4(num, den)).collect()]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (ab BIGINT, n BIGINT, sa BIGINT, sb BIGINT)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?)", rows)
+    duck = [r[0] for r in con.execute(
+        f"SELECT {sql_ratio4(num, den)} FROM t ORDER BY rowid"
+    ).fetchall()]
+    con.close()
+    want = [
+        int(Fraction(ab * n, sa * sb) * 10**4 + Fraction(1, 2)) / 10**4
+        for ab, n, sa, sb in rows
+    ]
+    assert got == duck == want
+    assert want[:2] == [0.0713, 1.2338]
+
+
+def test_pairs_lift_on_a_midpoint_matches_its_oracle(spark, tmp_path):
+    """47 orders: parts 1 and 2 share 21, part 1 sits in 25 and part 2 in
+    32, so lift = 21·47/(25·32) = 987/800 = 1.23375, a 4-dp midpoint
+    (confidence 21/25 = 0.84). Both engines must report 1.2338."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.oracle_utils import compare_query
+
+    pairs = (
+        [(o, p) for o in range(1, 22) for p in (1, 2)]
+        + [(o, 1) for o in range(22, 26)]
+        + [(o, 2) for o in range(26, 37)]
+        + [(o, 3) for o in range(37, 48)]
+    )
+    n = len(pairs)
+    table = pa.table(
+        {
+            "l_orderkey": pa.array([o for o, _ in pairs], pa.int64()),
+            "l_partkey": pa.array([p for _, p in pairs], pa.int64()),
+            "l_suppkey": pa.array([1] * n, pa.int64()),
+            "l_linenumber": pa.array([1] * n, pa.int32()),
+            "l_quantity": [1.0] * n,
+            "l_extendedprice": [1.0] * n,
+            "l_discount": [0.0] * n,
+            "l_tax": [0.0] * n,
+            "l_returnflag": ["N"] * n,
+            "l_linestatus": ["O"] * n,
+            "l_shipdate": pa.array([0] * n, pa.timestamp("us")),
+        }
+    )
+    path = str(tmp_path / "lineitem.parquet")
+    pq.write_table(table, path)
+    rows = registry.QUERIES["q_pairs_lift"](spark, str(tmp_path)).collect()
+    assert [tuple(r) for r in rows] == [(1, 2, 21, 0.84, 1.2338)]
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{path}')"
+        )
+        ok, detail = compare_query(
+            spark, con, registry.QUERIES["q_pairs_lift"],
+            registry.ORACLES["q_pairs_lift"], str(tmp_path),
+        )
+    finally:
+        con.close()
+    assert ok, detail

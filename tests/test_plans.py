@@ -3,12 +3,21 @@
 Correctness says the right rows come back; these tests pin the plan SHAPE
 that makes each operator viable at scale: filters reaching the parquet
 scan, column pruning, broadcast joins where intended, TakeOrderedAndProject
-for top-k, map-side partial aggregation, and — most importantly — no
-cartesian/nested-loop joins anywhere except the two queries that exist to
-demonstrate them on bounded inputs.
+for top-k, map-side partial aggregation, and no cartesian or nested-loop
+join without a stated bound.
+
+``plans/inventory.json`` records ``audit``'s facts for every registered
+query that is not stream-only: one JSON object per line, sorted by query
+name, with sorted keys, so a plan change is a one-line diff. An entry whose
+plan holds a BroadcastNestedLoopJoin or CartesianProduct carries a ``why``
+that bounds it. When a change alters a plan on purpose, the failing test
+prints the live line; paste it over the query's line.
 """
 
 from __future__ import annotations
+
+import json
+import os
 
 import pytest
 
@@ -21,12 +30,24 @@ from json_parquet_convertor_spark.plans.inspect import (
 
 registry.load_all()
 
-# queries that intentionally contain a cartesian/BNLJ on provably bounded
-# inputs (5x25 cross product; <=10-row broadcast theta side)
-_ALLOWED_NESTED_LOOP = {"q_join_cross", "q_join_theta"}
-
 # real readStream executions — .queryExecution() would need a started stream
 _STREAM_ONLY = {"q_stream_convert", "q_stream_watermark"}
+
+_INVENTORY_PATH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "plans",
+    "inventory.json",
+)
+with open(_INVENTORY_PATH, encoding="utf-8") as _fh:
+    _LINES = _fh.read().splitlines()
+_INVENTORY = {e["query"]: e for e in map(json.loads, _LINES)}
+
+_NESTED_LOOP = ("BroadcastNestedLoopJoin", "CartesianProduct")
+
+
+def _line(entry: dict) -> str:
+    """``entry`` as an inventory line."""
+    return json.dumps(entry, sort_keys=True, ensure_ascii=False)
 
 
 def _plan(spark, sf_dir, name: str) -> str:
@@ -83,72 +104,55 @@ def test_no_unpartitioned_window_over_table(spark, sf_dir):
 
 
 @pytest.mark.parametrize(
-    "name",
-    sorted(
-        n
-        for n in registry.QUERIES
-        if n not in _ALLOWED_NESTED_LOOP and n not in _STREAM_ONLY
-    ),
+    "name", sorted(n for n in registry.QUERIES if n not in _STREAM_ONLY)
 )
 def test_query_has_no_cartesian(spark, sf_dir, name):
+    # caches left by earlier test files would turn scans into
+    # InMemoryTableScans and change the facts
+    spark.catalog.clearCache()
     df = registry.QUERIES[name](spark, sf_dir)
-    plan = physical_plan(df)
-    assert "CartesianProduct" not in plan, name
-    # BroadcastNestedLoopJoin is acceptable ONLY when one side is a 1-row
-    # probe/constant frame (scalar parameter pattern); detect real offenders
-    # by requiring LeftSemi/Inner BNLJ to mention a LocalLimit/probe shape.
-    if "BroadcastNestedLoopJoin" in plan:
-        # the probe-vector / scalar-attach pattern is a single-row broadcast;
-        # anything joining two table-sized relations would also show a
-        # CartesianProduct or huge build side — flag for manual review
-        assert name in {
-            "q_sim_cosine_topk",
-            "q_text_tfidf",
-            "q_sim_ann_ivf",
-            "q_sink_compacted",  # crossJoins of 1-row aggregate frames
-            "q_agg_freq_items",  # 1-row total-count broadcast onto tf table
-            "q_sql_cte",  # grand-total CTE reuse = 1-row IdentityBroadcast
-            "q_text_lm_score",  # 1-row corpus-total broadcast onto tf table
-            "q_knn_graph",  # probe broadcast: 1/25 of the corpus, not bounded
-            "q_win_funnel",  # crossJoins of three 1-row funnel-count aggs
-            "q_rank_bm25",  # 1-row (N, avgdl) corpus-stats broadcast
-            "q_time_spine",  # 1-row day-bounds broadcast onto the type list
-            "q_graph_triangles",  # crossJoins of three 1-row graph-stat aggs
-            "q_sample_temperature",  # 1-row (n_total, sum_w) broadcast
-            "q_skew_diagnose",  # 1-row (rows, keys) broadcast onto top-10
-            "q_embed_whiten",  # 1-row whitening-matrix frame broadcast
-            "q_stats_chi2",  # 1-row grand-total broadcast onto cell table
-            "q_stats_ks",  # 1-row (n1, n2) totals broadcast onto the ECDF
-            "q_bpe_apply",  # 1-row merge-table frame broadcast onto vocab
-            "q_stats_pareto",  # 1-row (n, total) broadcast onto the ranking
-            "q_pairs_lift",  # 1-row order-count broadcast onto rule table
-            "q_sample_balanced",  # 1-row min-class cap broadcast
-            "q_win_cumulative_share",  # 1-row total broadcast onto rollup
-            "q_qc_expectations",  # crossJoin of two 1-row audit-count aggs
-            "q_text_collocations",  # 1-row bigram-total broadcast onto PMI
-            "q_user_features",  # 1-row corpus-horizon broadcast onto users
-            "q_orders_backlog",  # 1-row snapshot-date broadcast onto orders
-            "q_text_keywords",  # 1-row n_docs broadcast onto tf table
-            "q_sample_temporal_split",  # 1-row cut-date broadcast
-            "q_feature_target_encode",  # 1-row global-mean broadcast
-            "q_stats_anova",  # 1-row (k, N, ΣY) totals broadcast
-            "q_feature_gini",  # 1-row total-count broadcast onto cells
-            "q_agg_hll_union",  # 1-row exact-ALL-count broadcast (r13)
-            "q_agg_sketch_cms",  # 1-row total-N broadcast for the εN bound
-        }, f"unexpected BNLJ in {name}:\n{plan}"
-    # HOF lambdas defeat codegen subexpression elimination (r11,
-    # --longtext): split(text) INSIDE a lambda body re-splits the document
-    # once per ELEMENT — O(len²) per row; a 1.4 MB megadoc never finishes.
+    recorded = _INVENTORY.get(name, {})
+    live = {"query": name, **audit(df)}
+    if "why" in recorded:
+        live["why"] = recorded["why"]
+    assert live == recorded, (
+        f"{name}: plan facts differ from plans/inventory.json; live line:\n"
+        f"{_line(live)}"
+    )
+    # a nested-loop or cartesian join is quadratic unless one side is
+    # bounded (a 1-row scalar attach, a probe, a demo on tiny tables):
+    # each one states its bound, and no other entry carries a reason
+    nested = any(j in live["joins"] for j in _NESTED_LOOP)
+    assert nested == bool(live.get("why")), (
+        f"{name}: a why is required exactly where the plan holds "
+        f"{' or '.join(_NESTED_LOOP)}: {live['joins']}"
+    )
+    # HOF lambdas defeat codegen subexpression elimination (--longtext):
+    # split(text) INSIDE a lambda body re-splits the document once per
+    # ELEMENT — O(len²) per row; a 1.4 MB megadoc never finishes.
     # The token array must be bound as a real attribute before the lambda
     # indexes it (split as the transform INPUT — a SIBLING of the lambda —
     # is the correct shape and is not flagged). Checked on the optimized
     # logical plan's expression tree (toJSON), not the formatted plan
     # string, so maxToStringFields truncation can't hide a violation and a
-    # sibling split() on the same line can't false-positive (r11 ADVICE).
+    # sibling split() on the same line can't false-positive.
     hits = lambda_split_violations(df)
     assert not hits, (
         f"{name}: split() inside a HOF lambda (quadratic per row): {hits}"
     )
+
+
+def test_inventory_holds_the_registry_queries():
+    """One canonical line per non-stream registry query, in name order."""
+    want = {n for n in registry.QUERIES if n not in _STREAM_ONLY}
+    assert set(_INVENTORY) == want, (
+        f"unregistered: {sorted(set(_INVENTORY) - want)}, "
+        f"missing: {sorted(want - set(_INVENTORY))}"
+    )
+    names = [json.loads(line)["query"] for line in _LINES]
+    assert names == sorted(want), "one line per query, sorted by name"
+    for line in _LINES:
+        assert line == _line(json.loads(line)), line
 
 
 def test_lambda_split_gate_detects_and_allows():
@@ -180,7 +184,7 @@ def test_lambda_split_gate_detects_and_allows():
     )
     wide = df.select(F.expr(f"transform(sequence(1, 2), i -> {conds})"))
     assert lambda_split_violations(wide)
-    # r12 class: substring over an OUTER string at a lambda-dependent
+    # substring over an OUTER string at a lambda-dependent
     # position re-seeks from the string head per element — O(len²)
     bad_sub = df.select(
         F.expr("transform(sequence(1, length(text) - 1),"
@@ -200,18 +204,15 @@ def test_bucketed_join_has_no_join_exchange(spark, sf_dir):
     """Both sides bucketed+sorted by the join key → the sort-merge join
     itself needs no Exchange (and no Sort); the only shuffle in the plan is
     the final aggregation."""
-    plan = _plan(spark, sf_dir, "q_join_bucketed")
+    df = registry.QUERIES["q_join_bucketed"](spark, sf_dir)
+    plan = physical_plan(df)
     assert "SortMergeJoin" in plan, plan
     join_part = plan.split("SortMergeJoin", 1)[1]
     # below the join: bucketed scans only — no Exchange may appear
     assert "Exchange" not in join_part, join_part
     # whole plan: exactly the one aggregation exchange
-    n_exchanges = sum(
-        1
-        for l in plan.splitlines()
-        if "Exchange" in l and "Reused" not in l
-    )
-    assert n_exchanges == 1, plan
+    facts = audit(df)
+    assert (facts["shuffles"], facts["broadcasts"]) == (1, 0), plan
 
 
 def _subtree(lines: list[str], i: int) -> str:
@@ -234,7 +235,7 @@ def _subtree(lines: list[str], i: int) -> str:
 def test_bm25_df_broadcast_is_query_term_bounded(spark, sf_dir):
     """The document-frequency build side must be restricted to the (≤3)
     query terms BEFORE it broadcasts — a full-vocabulary df broadcast OOMs
-    every executor at 100 TB (judge round-3 finding). Mechanically: every
+    every executor at 100 TB. Mechanically: every
     BroadcastExchange whose subtree aggregates token counts (the df build)
     must also contain the limit-3 query-term restriction inside that
     subtree."""
@@ -257,8 +258,8 @@ def test_bm25_df_broadcast_is_query_term_bounded(spark, sf_dir):
 
 def test_pairs_lift_no_forced_broadcast_of_support_table(spark, sf_dir):
     """The per-part support table grows with the data (|parts| is 1e8+ at
-    100 TB), so it must never carry a forced broadcast hint (judge round-5
-    finding) — Catalyst/AQE picks the join side from size estimates, which
+    100 TB), so it must never carry a forced broadcast hint —
+    Catalyst/AQE picks the join side from size estimates, which
     flips to shuffle at real scale. The only hint allowed is the 1-row
     order-count frame."""
     df = registry.QUERIES["q_pairs_lift"](spark, sf_dir)
@@ -389,7 +390,7 @@ def test_salted_join_replication_stays_bounded(spark, sf_dir):
     bx = plan.index("BroadcastExchange")
     assert "Generate explode" in plan[bx:], plan
     assert "Generate explode" not in plan[:bx], plan
-    # the fact-side salt pmod pins the ×8 bound. r10 --bigid: the mix is
+    # the fact-side salt pmod pins the ×8 bound. The mix is
     # reduce-first (pmod(key, n) before the multiply, overflow-safe for
     # snowflake-scale keys); 2654435761 % 8 == 1, so Catalyst folds the
     # multiply away entirely and the salt is pmod(pmod(key, 8), 8)
@@ -419,8 +420,8 @@ def test_cache_reuse_hits_inmemory_scan(spark, sf_dir):
 
 
 def test_null_safe_join_over_base_tables_is_hash_join(spark, sf_dir):
-    """q_join_null_safe pushes the aggregate through the join (the r5 38x
-    probe fix), so the registered query joins two <=51-row frames. This
+    """q_join_null_safe pushes the aggregate through the join (38x faster
+    in a probe), so the registered query joins two <=51-row frames. This
     test keeps the ORIGINAL shape covered: drive `<=>` over base-table
     volumes, assert it plans as a hash join (NULL hashes like any value —
     no nested-loop fallback), and assert the raw-join-then-aggregate
@@ -487,18 +488,11 @@ def test_composite_q5_single_big_join(spark, sf_dir):
     (lineitem⋈orders); region/nation/supplier/customer all apply map-side.
     A second shuffle join means a dim lost its broadcast; any nested-loop
     means the local-supplier predicate fell out of the join condition."""
-    import re as _re
-
-    plan = _plan(spark, sf_dir, "q_composite_q5")
-    joins = _re.findall(
-        r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|"
-        r"BroadcastNestedLoopJoin|CartesianProduct)",
-        plan,
-    )
-    assert joins.count("BroadcastHashJoin") >= 4, joins
-    assert "BroadcastNestedLoopJoin" not in joins, plan
-    assert "CartesianProduct" not in joins, plan
-    assert sum(1 for j in joins if j != "BroadcastHashJoin") <= 1, joins
+    joins = audit(registry.QUERIES["q_composite_q5"](spark, sf_dir))["joins"]
+    assert joins.get("BroadcastHashJoin", 0) >= 4, joins
+    assert "BroadcastNestedLoopJoin" not in joins, joins
+    assert "CartesianProduct" not in joins, joins
+    assert sum(joins.values()) - joins["BroadcastHashJoin"] <= 1, joins
 
 
 def test_sql_params_bind_as_pushable_literals(spark, sf_dir):
@@ -522,10 +516,10 @@ def test_sql_identifier_resolves_to_plain_scan(spark, sf_dir):
 
 
 def test_range_join_aggregates_events_before_the_join(spark, sf_dir):
-    """q_join_range must join (user, day) PARTIALS, never raw events: the
-    r11 sf1.0 twelve-axes sweep showed the old equi+range-post-filter
-    plan degenerating to a per-key cartesian under hot-key skew (one user
-    on both sides = 8.0e11 post-filter pairs). The structural guarantee
+    """q_join_range must join (user, day) PARTIALS, never raw events: an
+    sf1.0 sweep over twelve fixture axes showed the old
+    equi+range-post-filter plan degenerating to a per-key cartesian under
+    hot-key skew (one user on both sides = 8.0e11 post-filter pairs). The structural guarantee
     is an Aggregate on the events side BELOW the join (partials bounded
     by |distinct user x day|) and an equi-join that includes the day key
     (no range post-filter pair formation)."""
@@ -553,16 +547,16 @@ def test_range_join_aggregates_events_before_the_join(spark, sf_dir):
 
 
 def test_lsh_candidate_generation_is_join_free(spark, sf_dir):
-    """r13 optimization pin, r14-hardened: the LSH dedup candidate
-    generators emit pairs IN-ROW from per-bucket sorted doc_id lists
-    (one aggregate on the bucket key), not via a bucket SELF-join — the
+    """The LSH dedup candidate generators emit pairs IN-ROW from
+    per-bucket sorted doc_id lists (one aggregate on the bucket key),
+    not via a bucket SELF-join — the
     self-join shape cost 4-5 exchanges per query. The only joins allowed
     in q_dedup_near/q_dedup_simhash are (a) the two equi join-backs that
-    attach each deduped pair's signatures/fingerprints and (b) the r14
+    attach each deduped pair's signatures/fingerprints and (b) the
     broadcast LEFT ANTI hot-bucket screen that drops over-cap buckets
     BEFORE the member-list aggregate (guide §5); the basket pair miner
     has no join at all. Joins are pinned by COUNT and kind, not by
-    strategy (r13 ADVICE: the join-backs' strategy legitimately depends
+    strategy (the join-backs' strategy legitimately depends
     on autoBroadcastJoinThreshold/stats at fixture scale — a stats
     change flipping BroadcastHashJoin to SortMergeJoin must not fail
     this pin while results stay correct)."""
@@ -594,7 +588,7 @@ def test_lsh_candidate_generation_is_join_free(spark, sf_dir):
 
 
 def test_embed_refilter_carries_per_vector_norms(spark, sf_dir):
-    """r13 optimization pin: the exact-cosine refilter joins back a
+    """The exact-cosine refilter joins back a
     per-vector norm² scalar (n2a/n2b) instead of recomputing two
     self-dots per candidate pair — the per-pair work is ONE dot."""
     plan = _plan(spark, sf_dir, "q_dedup_embed")
