@@ -58,9 +58,14 @@ _CHANGED_THIS_ROUND: list[str] = [
     # collect_set rewrite of the pair distinct, never driver-checked on the
     # rewritten implementation:
     "q_join_array_membership",
+    # The MinHash family is integer (a·x + b) mod (2^31 - 1) over one md5
+    # digest per shingle, and the pairs are scored inside the bucket lists
+    # (rows change by design; the oracle changed in lockstep):
+    "q_dedup_near",
+    # The source and reader classes pickle by value (same rows):
+    "q_source_custom",
     # Candidate generation moved onto operators/buckets (same plans; the
     # NULL-member guards folded into collect_list's own NULL skip):
-    "q_dedup_near",
     "q_dedup_simhash",
     "q_dedup_ngram_jaccard",
     "q_dedup_embed",

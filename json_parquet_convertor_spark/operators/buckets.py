@@ -26,12 +26,23 @@ DuckDB twins (the oracle side) after them.
 - A NULL bucket key is one bucket, as GROUP BY makes it: the Spark screen
   matches it null-safely and the DuckDB twin joins on ``IS NOT DISTINCT
   FROM``.
+- A query that scores each pair from a per-member payload can carry it
+  in the list (:func:`scored_banded_pairs`): the member becomes
+  ``struct(member, payload)``, pairs are scored in-row and filtered
+  before the pair distinct, and nothing joins back. MinHash carries its
+  16-long signature that way. SimHash and embedding dedup stay id-only
+  (:func:`banded_pairs` plus payload join-backs): at sf0.1 sorting lists
+  of structs carrying SimHash's 8-int fingerprints measured slower than
+  the join-backs (5.93 s vs 5.22 s), and an embedding payload is 64
+  doubles per member per table.
 - Baskets (:func:`basket_pairs`) have no cap: TPC-H orders hold at most 7
   lines. A pipeline with unbounded baskets caps k before the explode,
   the same guard as the stop-shingle cap.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -121,6 +132,47 @@ def banded_pairs(
         .select(sorted_pairs("members").alias("p"))
         .filter(F.col("p.a") < F.col("p.b"))
         .select(F.col("p.a").alias(a), F.col("p.b").alias(b))
+        .distinct()
+    )
+
+
+def scored_banded_pairs(
+    keyed: DataFrame,
+    key_cols: list[str],
+    member: str,
+    payload: str,
+    names: tuple[str, str, str],
+    score: Callable[[Column, Column], Column],
+    floor: float,
+) -> DataFrame:
+    """The distinct ``(names[0], names[1], names[2])`` rows of member
+    pairs ``names[0] < names[1]`` that share a bucket (``key_cols``) of at
+    most LSH_BUCKET_CAP rows and whose ``score`` of the two ``payload``
+    values is at least ``floor``: :func:`banded_pairs`' pair set, scored.
+
+    Each member rides in its bucket list with its payload, so the score
+    is computed in-row, before the distinct, with no join back. The list
+    entry is NULL for a NULL member: ``collect_list`` skips it while the
+    cap still counts its row. Lists are not sorted; each pair is oriented
+    by member, so ``score`` must be symmetric."""
+    a, b, s = names
+    m = F.col(member)
+    entry = F.when(
+        m.isNotNull(), F.struct(m.alias("m"), F.col(payload).alias("v"))
+    )
+    x, y = F.col("p.a.m"), F.col("p.b.m")
+    return (
+        bucket_lists(
+            keyed, key_cols, LSH_BUCKET_CAP, {"members": entry}, sort=False
+        )
+        .select(sorted_pairs("members").alias("p"))
+        .filter(x != y)
+        .select(
+            F.least(x, y).alias(a),
+            F.greatest(x, y).alias(b),
+            score(F.col("p.a.v"), F.col("p.b.v")).alias(s),
+        )
+        .filter(F.col(s) >= floor)
         .distinct()
     )
 

@@ -16,12 +16,12 @@ Scale posture per operator is documented on each query. Common knobs:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from json_parquet_convertor_spark.operators.buckets import (
-    banded_pairs,
     duck_banded_pairs,
+    scored_banded_pairs,
 )
 from json_parquet_convertor_spark.operators.shingles import (
     duck_shingles,
@@ -92,76 +92,104 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # midpoint sits near s≈0.55, right for "near-duplicate" detection.
 _MH_K, _MH_B, _MH_R = 16, 4, 4
 
+# The MinHash family: h_i(x) = (a_i·x + b_i) mod P over the shingle's
+# integer digest x < P, with P the Mersenne prime 2^31 - 1. Every operand
+# is below 2^31, so the largest intermediate (a·x + b) is below 2^62: no
+# ANSI overflow, and both engines compute the same exact BIGINT.
+_MH_P = 2**31 - 1
+_MH_AB = (
+    (1172946982, 2070966652), (826490947, 1246264907),
+    (1829192806, 2085420392), (23233875, 2104523568),
+    (818557863, 868405469), (674582018, 1370465706),
+    (1381059730, 500818871), (1034775142, 856914814),
+    (871181460, 276952), (1950807500, 471795343),
+    (38945426, 115740431), (1463036972, 1341486578),
+    (1259724528, 1351274578), (132944442, 258076534),
+    (991551107, 877377427), (194349188, 234275673),
+)
 
 
 def _minhash_signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, h0..h{K-1}) MinHash signatures over 3-word sequence shingles.
+    """(doc_id, sig) MinHash signatures over 3-word sequence shingles:
+    ``sig`` is the array of the K per-function minima, BIGINTs in
+    ``[0, P)``.
 
     Sequence shingles (not bare words) are what make this discriminative:
     independent docs drawing from a shared vocabulary still share most
     *words*, but near-duplicates are the only docs sharing word *runs*.
     One explode (:func:`shingles.shingles`) + one groupBy: the map side
     computes K hashes per shingle, the reduce side takes per-doc minima —
-    a single linear shuffle on doc_id."""
-    # One string digest per shingle; the K minhash functions then re-hash
-    # the fixed-width hex digest with per-function seed PREFIXES — a
-    # proper independent family at a fraction of the cost of K
-    # long-string hashes (the shingle is digested once). The family is
-    # md5 (r13 promotion): DuckDB computes the identical digests, and a
-    # 32-hex-char string's lexicographic MIN equals the numeric MIN of
-    # the 128-bit value — so the signatures, band keys, and estimates
-    # are cross-engine EXACT and the driver check is a full value hash.
-    # (xxhash64 would be ~2× cheaper per shingle but has no DuckDB twin;
-    # a deployment without the SQL-oracle requirement can swap it back —
-    # every other stage is hash-family-agnostic.)
+    a single linear shuffle on doc_id, a hash aggregate over K longs.
+
+    Each shingle is digested once: its md5's first 8 hex digits, as an
+    integer mod P, and the K functions are integer ``(a·x + b) mod P``
+    over that digest. DuckDB computes the same md5 and the same exact
+    integer arithmetic, so signatures, band keys and estimates are
+    cross-engine exact and the oracle check compares full values.
+    (xxhash64 would be cheaper per shingle but has no DuckDB twin; every
+    later stage is hash-family-agnostic.)"""
+    x = (
+        F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("bigint")
+        % F.lit(_MH_P)
+    )
     hashed = shingles(docs).select(
-        "doc_id", F.md5("sh").alias("base")
-    ).select(
         "doc_id",
         *[
-            F.md5(F.concat_ws(":", F.lit(str(i)), F.col("base"))).alias(
-                f"h{i}"
-            )
-            for i in range(_MH_K)
+            ((x * F.lit(a) + F.lit(b)) % F.lit(_MH_P)).alias(f"h{i}")
+            for i, (a, b) in enumerate(_MH_AB)
         ],
     )
     return hashed.groupBy("doc_id").agg(
-        *[F.min(f"h{i}").alias(f"h{i}") for i in range(_MH_K)]
+        F.array(*[F.min(f"h{i}") for i in range(_MH_K)]).alias("sig")
     )
 
 
-# the identical shingle → md5-minhash → band pipeline, as DuckDB SQL
-# (mirrors _minhash_signatures + q_dedup_near's banding exactly)
-_DN_SIG_COLS = ",\n           ".join(
-    f"min(md5('{i}:' || b)) AS h{i}" for i in range(_MH_K)
+_DN_SIG_COLS = ",\n               ".join(
+    f"min(({a} * x + {b}) % {_MH_P})" for a, b in _MH_AB
 )
-_DN_SIG_LIST = "[" + ", ".join(f"h{i}" for i in range(_MH_K)) + "]"
+
+#: the oracle side of :func:`_minhash_signatures` over ``documents``: CTEs
+#: ending in ``sig`` (doc_id, sig); splice sites continue the WITH list.
+_DUCK_MINHASH_SIGS = f"""
+    WITH sh AS (
+        SELECT doc_id, unnest({duck_shingles()}) AS sh
+        FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)
+        WHERE len(l) >= 3
+    ),
+    base AS (
+        SELECT doc_id,
+               ('0x' || substr(md5(sh), 1, 8))::BIGINT % {_MH_P} AS x
+        FROM sh
+    ),
+    sig AS (
+        SELECT doc_id,
+               [{_DN_SIG_COLS}] AS sig
+        FROM base GROUP BY doc_id
+    )"""
 _DN_BAND_KEYS = ",\n           ".join(
-    " || ".join(f"h{b * _MH_R + r}" for r in range(_MH_R)) + f" AS k{b}"
-    for b in range(_MH_B)
+    f"sig[{b * _MH_R + 1}:{b * _MH_R + _MH_R}] AS k{b}" for b in range(_MH_B)
 )
 _DN_CAND_SQL = duck_banded_pairs(
     "bands", "doc_id", [f"k{b}" for b in range(_MH_B)], ("doc_a", "doc_b")
 )
 
 
+def _estimate(sa: Column, sb: Column) -> Column:
+    """The fraction of matching signature components, rounded to 4 dp
+    (k/16 is a dyadic rational, so the rounding is exact)."""
+    same = F.aggregate(
+        F.zip_with(sa, sb, lambda x, y: F.when(x == y, 1).otherwise(0)),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    )
+    return F.round(same.cast("double") / F.lit(float(_MH_K)), 4)
+
+
 @query(
     "q_dedup_near",
-    oracle=f"""
-    WITH sh AS (
-        SELECT doc_id, unnest({duck_shingles()}) AS sh
-        FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)
-        WHERE len(l) >= 3
-    ),
-    base AS (SELECT doc_id, md5(sh) AS b FROM sh),
-    sig AS (
-        SELECT doc_id,
-           {_DN_SIG_COLS}
-        FROM base GROUP BY doc_id
-    ),
+    oracle=f"""{_DUCK_MINHASH_SIGS},
     bands AS (
-        SELECT doc_id,
-           {_DN_SIG_LIST} AS sig,
+        SELECT doc_id, sig,
            {_DN_BAND_KEYS}
         FROM sig
     ),
@@ -184,78 +212,44 @@ _DN_CAND_SQL = duck_banded_pairs(
 )
 def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs via MinHash + LSH banding
-    (shingle → minhash → band → bucket-join). Deterministic AND
-    cross-engine exact (r12 verdict task 2, promoted from rows-only):
-    the minhash family is md5 with seed prefixes, which DuckDB computes
-    identically, and band keys are component concatenations — so the
-    oracle mirrors the complete algorithm (signatures, banding, the
-    candidate rule, and the k/16 dyadic-rational estimates, which round
-    exactly) and the driver records a full value-hash row.
+    (shingle → minhash → band → bucket lists → scored pairs).
+    Deterministic AND cross-engine exact: the minhash family is integer
+    ``(a·x + b) mod (2^31 - 1)`` over an md5-derived shingle digest (see
+    :func:`_minhash_signatures`), which DuckDB computes identically, and
+    band keys are signature slices — so the oracle mirrors the complete
+    algorithm (signatures, banding, the candidate rule, and the k/16
+    dyadic-rational estimates, which round exactly) and the oracle check
+    compares full values.
 
-    Candidates form ONLY inside (band_idx, band_hash) buckets — never an
+    Candidates form ONLY inside (band_idx, band key) buckets — never an
     all-pairs crossJoin — so the cost is linear in bucket occupancy
     (see operators/buckets.py; buckets over LSH_BUCKET_CAP members are
-    boilerplate and emit no pairs, on both sides). At 100 TB this is the
-    standard web-scale dedup layout: signatures are one linear shuffle and
-    the bucket aggregate shuffles 16 bytes per (doc, band). Estimated
-    Jaccard = fraction of matching signature components; pairs below 0.5
-    are dropped."""
+    boilerplate and emit no pairs, on both sides). Each bucket member
+    carries its signature, so every pair is scored inside the bucket list
+    and filtered before the one pair distinct: the signatures shuffle once
+    (the hot-bucket screen and the list aggregate share that exchange) and
+    nothing joins back. Estimated Jaccard = fraction of matching
+    signature components; pairs below 0.5 are dropped. The pairs come
+    unsorted: the oracle check compares row sets and the oracle has no
+    ORDER BY, so a global sort would only add an exchange."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # three consumers: the band explode and both per-pair signature
-    # join-backs
-    sigv = _minhash_signatures(docs).select(
+    bands = _minhash_signatures(docs).select(
         "doc_id",
-        F.array(*[F.col(f"h{i}") for i in range(_MH_K)]).alias("sig"),
-    ).cache()
-
-    bands = sigv.select(
-        "doc_id",
+        "sig",
         F.posexplode(
             F.array(
-                *[
-                    F.concat(
-                        *[
-                            F.get("sig", b * _MH_R + r)
-                            for r in range(_MH_R)
-                        ]
-                    )
-                    for b in range(_MH_B)
-                ]
+                *[F.slice("sig", b * _MH_R + 1, _MH_R) for b in range(_MH_B)]
             )
-        ).alias("band_idx", "band_hash"),
+        ).alias("band_idx", "band_key"),
     )
-    sa = sigv.select(
-        F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a")
-    )
-    sb = sigv.select(
-        F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b")
-    )
-    # the lists hold only doc_ids; signatures join back per deduped pair
-    cand = (
-        banded_pairs(
-            bands, ["band_idx", "band_hash"], "doc_id", ("doc_a", "doc_b")
-        )
-        .join(sa, "doc_a")
-        .join(sb, "doc_b")
-    )
-    est = (
-        F.aggregate(
-            F.zip_with(
-                "sig_a",
-                "sig_b",
-                lambda x, y: F.when(x == y, 1).otherwise(0),
-            ),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        ).cast("double")
-        / F.lit(float(_MH_K))
-    )
-    return (
-        cand.select("doc_a", "doc_b", F.round(est, 4).alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= 0.5)
-        # r14 (guide §2.4): determinism-only global sort removed — see
-        # q_dedup_simhash's note (order-insensitive driver hash, no
-        # ORDER BY in the oracle, set-comparing tests).
+    return scored_banded_pairs(
+        bands,
+        ["band_idx", "band_key"],
+        "doc_id",
+        "sig",
+        ("doc_a", "doc_b", "est_jaccard"),
+        _estimate,
+        0.5,
     )
 
 

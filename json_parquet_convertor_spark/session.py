@@ -25,7 +25,7 @@ def get_spark(
     At 100 TB on a real cluster you drop ``master`` and let the cluster
     manager size executors; everything else below still applies.
 
-    Two settings matter for a long-lived session:
+    Three settings matter for a long-lived session:
 
     - the codegen class cache holds 4096 generated classes instead of
       Spark's 100, so a session cycling through many queries reuses their
@@ -33,10 +33,22 @@ def get_spark(
     - when this call launches the JVM, it passes an 8 g driver heap
       (``SPARK_GRAFT_DRIVER_MEM`` overrides it) through
       ``PYSPARK_SUBMIT_ARGS``, set only for the duration of
-      ``getOrCreate()``; the caller's environment is restored afterwards.
+      ``getOrCreate()``; the caller's environment is restored afterwards;
+    - DataFrame origin capture is off
+      (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+      every ``functions``/``Column`` call walks the Python stack and
+      sets and clears the call site in the JVM, extra Py4J round trips
+      on every call (a warm build of ``q_dedup_near`` sends about 2,290
+      Py4J commands with it on and 920 with it off), and the first
+      captured call also imports IPython (about 0.25 s on 4 vCPUs). The
+      price: a runtime error no longer names the Python file and line of
+      the DataFrame call that built the failing expression (the error
+      itself is unchanged).
 
-    Both are launch-time settings: if a SparkContext already exists, the
-    session is returned with whatever that context was started with.
+    All three are launch-time settings: if a SparkContext already exists,
+    the session is returned with whatever that context was started with.
+    PySpark also reads the origin-capture flag once per process, at the
+    first ``functions`` call, from the session active then.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -96,6 +108,9 @@ def get_spark(
         # second variant of a class. Both variants fit in 4096. The mean
         # generated class is 2.2-2.7 KB of bytecode.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # Python call-site capture per functions/Column call (see the
+        # docstring); read once per process by PySpark.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
     )
     # NOTE: spark.driver.memory cannot be set here — the JVM is already

@@ -10,6 +10,11 @@ relation.
 The synthetic "sensor" source here is deterministic (reading =
 sensor_id·100003 + tick·17) so the DuckDB oracle can restate the
 generator as a formula over generate_series.
+
+The source and reader classes are defined inside a function, so
+cloudpickle ships them to the Python workers by value: a worker runs the
+reader without importing this package, whatever its working directory
+or ``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -17,32 +22,37 @@ from __future__ import annotations
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 
-class SensorDataSource(DataSource):
-    """Deterministic synthetic sensor feed; one input partition per
-    sensor, so read parallelism scales with the `sensors` option."""
+def _sensor_source() -> type[DataSource]:
+    class SensorReader(DataSourceReader):
+        def __init__(self, options) -> None:
+            self.n_sensors = int(options.get("sensors", "8"))
+            self.n_ticks = int(options.get("ticks", "250"))
 
-    @classmethod
-    def name(cls) -> str:
-        return "jpc_sensors"
+        def partitions(self):
+            # one partition per sensor: the engine schedules these as
+            # independent tasks — the parallelism contract of the API
+            return [InputPartition(s) for s in range(self.n_sensors)]
 
-    def schema(self) -> str:
-        return "sensor_id int, tick int, reading bigint"
+        def read(self, partition):
+            s = partition.value
+            for t in range(self.n_ticks):
+                yield (s, t, s * 100003 + t * 17)
 
-    def reader(self, schema) -> "SensorReader":
-        return SensorReader(self.options)
+    class SensorDataSource(DataSource):
+        """Deterministic synthetic sensor feed; one input partition per
+        sensor, so read parallelism scales with the `sensors` option."""
+
+        @classmethod
+        def name(cls) -> str:
+            return "jpc_sensors"
+
+        def schema(self) -> str:
+            return "sensor_id int, tick int, reading bigint"
+
+        def reader(self, schema) -> SensorReader:
+            return SensorReader(self.options)
+
+    return SensorDataSource
 
 
-class SensorReader(DataSourceReader):
-    def __init__(self, options) -> None:
-        self.n_sensors = int(options.get("sensors", "8"))
-        self.n_ticks = int(options.get("ticks", "250"))
-
-    def partitions(self):
-        # one partition per sensor: the engine schedules these as
-        # independent tasks — the parallelism contract of the API
-        return [InputPartition(s) for s in range(self.n_sensors)]
-
-    def read(self, partition):
-        s = partition.value
-        for t in range(self.n_ticks):
-            yield (s, t, s * 100003 + t * 17)
+SensorDataSource = _sensor_source()

@@ -20,6 +20,7 @@ from json_parquet_convertor_spark.operators.buckets import (
     basket_pairs,
     duck_banded_pairs,
     duck_basket_pairs,
+    scored_banded_pairs,
 )
 
 #: (id, k0, k1, k2): one member row with its key in each of three bands
@@ -97,6 +98,34 @@ def test_banded_pairs_match_their_duckdb_twin(spark, con):
 
     assert len(rows) == len(set(rows))
     assert set(rows) == got == BANDED_PAIRS
+
+
+def test_scored_banded_pairs_score_the_banded_pair_set(spark):
+    """The payload-carrying variant finds the same pairs; the score sees
+    both members' payloads (here the band-2 keys, equal only for 14 and
+    15) and the floor filters before the distinct."""
+    members = spark.createDataFrame(
+        BANDED_ROWS, "id long, k0 string, k1 string, k2 string"
+    )
+    keyed = members.select(
+        "id",
+        "k2",
+        F.posexplode(F.array("k0", "k1", "k2")).alias("band", "key"),
+    )
+
+    def pairs(floor):
+        return {
+            tuple(r)
+            for r in scored_banded_pairs(
+                keyed, ["band", "key"], "id", "k2", ("a", "b", "s"),
+                lambda x, y: (x == y).cast("double"), floor,
+            ).collect()
+        }
+
+    scored = pairs(0.0)
+    assert {(a, b) for a, b, _ in scored} == BANDED_PAIRS
+    assert len(scored) == len(BANDED_PAIRS)
+    assert pairs(0.5) == {(14, 15, 1.0)}
 
 
 def test_basket_pairs_match_their_duckdb_twin(spark, con):

@@ -109,3 +109,31 @@ def test_pip_editable_install(tmp_path):
         timeout=300,
     )
     assert proc.returncode == 0, proc.stderr
+
+
+def test_custom_source_unpickles_without_the_package(tmp_path):
+    """A Python worker rebuilds the custom data source from its pickle
+    without importing this package: run from a foreign cwd with no
+    ``PYTHONPATH``, the source and its reader still produce the feed."""
+    from pyspark import cloudpickle
+
+    from json_parquet_convertor_spark.sources.pysource import SensorDataSource
+
+    blob = tmp_path / "source.pkl"
+    blob.write_bytes(cloudpickle.dumps(SensorDataSource))
+    code = (
+        "import pickle, sys\n"
+        "cls = pickle.loads(open(sys.argv[1], 'rb').read())\n"
+        "src = cls({'sensors': '2', 'ticks': '2'})\n"
+        "r = src.reader(src.schema())\n"
+        "print(cls.name(), [list(r.read(p)) for p in r.partitions()])\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code, str(blob)],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True,
+        timeout=120,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    feed = [[(0, 0, 0), (0, 1, 17)], [(1, 0, 100003), (1, 1, 100020)]]
+    assert out.stdout.strip() == f"jpc_sensors {feed}"

@@ -1,6 +1,7 @@
 """Session-level settings of ``session.get_spark``: generated classes are
-reused across warm calls, and launching the JVM leaves the process
-environment as the caller had it.
+reused across warm calls, launching the JVM leaves the process
+environment as the caller had it, and plan builds make no origin-capture
+round trips.
 """
 
 from __future__ import annotations
@@ -62,3 +63,37 @@ def test_get_spark_scopes_submit_args_to_jvm_launch():
     lines = dict(line.split(" ", 1) for line in out.stdout.splitlines()
                  if line.startswith(("ARGS_SET ", "DRIVER_MEM ")))
     assert lines == {"ARGS_SET": "False", "DRIVER_MEM": "8g"}
+
+
+#: Py4J commands sent while building q_dedup_near, the costliest plan
+#: build of the benchmark mix. The build sends about 920; with origin
+#: capture on it sends about 2,290, and with the per-pair signature
+#: join-backs back (capture off) about 1,260.
+BUILD_SEND_CEILING = 1100
+
+
+def test_worst_builder_stays_under_a_py4j_round_trip_ceiling(
+    spark, sf_dir, monkeypatch
+):
+    """The session has PySpark's DataFrame origin capture off, and
+    building q_dedup_near stays under BUILD_SEND_CEILING round trips.
+    The second build is counted, so the table and partition memos are
+    warm, and Py4J's object-release commands (sent when Python collects
+    a JVM proxy) are not counted."""
+    conf = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(conf) == "false"
+    build = registry.QUERIES["q_dedup_near"]
+    build(spark, sf_dir)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    build(spark, sf_dir)
+    monkeypatch.undo()
+    assert 0 < len(sent) <= BUILD_SEND_CEILING, len(sent)
